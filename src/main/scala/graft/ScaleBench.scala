@@ -625,7 +625,7 @@ object ScaleBench {
             .filter(pmod(col("doc_id"), lit(2L)) === 0)
             .select(col("doc_id")))
       },
-      // the dense side of the pair: ivfProbeAmong over the √n-policy
+      // the dense side of the pair: the filtered ivfProbe over the √n-policy
       // index, fixed 10-query probe. The candidate semi-join bounds the
       // scored volume by the probed cells' allowed membership; the
       // recall half of the claim (selective filters deserve a larger
@@ -633,18 +633,18 @@ object ScaleBench {
       "ivf_filtered_selective" -> { dir: String =>
         val (idx, nprobe) = embIvfIdx(dir)
         val emb = Tables.embeddings(spark, dir)
-        graft.operators.SimilaritySearch.ivfProbeAmong(
+        graft.operators.SimilaritySearch.ivfProbe(
           idx, emb.filter(col("vec_id") < 10), k = 10, nprobe,
-          emb.filter(pmod(col("vec_id"), lit(128L)) === 0)
-            .select(col("vec_id")))
+          allowed = Some(emb.filter(pmod(col("vec_id"), lit(128L)) === 0)
+            .select(col("vec_id"))))
       },
       "ivf_filtered_permissive" -> { dir: String =>
         val (idx, nprobe) = embIvfIdx(dir)
         val emb = Tables.embeddings(spark, dir)
-        graft.operators.SimilaritySearch.ivfProbeAmong(
+        graft.operators.SimilaritySearch.ivfProbe(
           idx, emb.filter(col("vec_id") < 10), k = 10, nprobe,
-          emb.filter(pmod(col("vec_id"), lit(2L)) === 0)
-            .select(col("vec_id")))
+          allowed = Some(emb.filter(pmod(col("vec_id"), lit(2L)) === 0)
+            .select(col("vec_id"))))
       },
       // tombstoned ANN probe (r14 delete lifecycle): the same persisted
       // IVF artifact served clean vs under live tombstones (~0.8% of
@@ -679,18 +679,18 @@ object ScaleBench {
       "int8_filtered_selective" -> { dir: String =>
         val (idx, nprobe) = embInt8Idx(dir)
         val emb = Tables.embeddings(spark, dir)
-        graft.operators.SimilaritySearch.ivfProbeInt8Among(
+        graft.operators.SimilaritySearch.ivfProbeInt8(
           idx, emb.filter(col("vec_id") < 10), k = 10, nprobe,
-          emb.filter(pmod(col("vec_id"), lit(128L)) === 0)
-            .select(col("vec_id")))
+          allowed = Some(emb.filter(pmod(col("vec_id"), lit(128L)) === 0)
+            .select(col("vec_id"))))
       },
       "int8_filtered_permissive" -> { dir: String =>
         val (idx, nprobe) = embInt8Idx(dir)
         val emb = Tables.embeddings(spark, dir)
-        graft.operators.SimilaritySearch.ivfProbeInt8Among(
+        graft.operators.SimilaritySearch.ivfProbeInt8(
           idx, emb.filter(col("vec_id") < 10), k = 10, nprobe,
-          emb.filter(pmod(col("vec_id"), lit(2L)) === 0)
-            .select(col("vec_id")))
+          allowed = Some(emb.filter(pmod(col("vec_id"), lit(2L)) === 0)
+            .select(col("vec_id"))))
       },
       // the 32×-compressed tier under the SAME ACL shapes, through the
       // r15 metadata-resolved auto composition (selectivity-capped
@@ -699,21 +699,21 @@ object ScaleBench {
       // float/int8/SRP rows
       "pq_filtered_selective" -> { dir: String =>
         val emb = Tables.embeddings(spark, dir)
-        graft.operators.SimilaritySearch.ivfProbePqRefinedAmongAuto(
-          embPqIdx(dir), emb, emb.filter(col("vec_id") < 10), k = 10,
-          emb.filter(pmod(col("vec_id"), lit(128L)) === 0)
-            .select(col("vec_id")), selectivity = Some(1.0 / 128))
+        graft.operators.HybridRetrieval.DenseLeg.PqRefined(embPqIdx(dir), emb)
+          .probeAmong(emb.filter(col("vec_id") < 10), k = 10,
+            emb.filter(pmod(col("vec_id"), lit(128L)) === 0)
+              .select(col("vec_id")), selectivity = Some(1.0 / 128))
       },
       "pq_filtered_permissive" -> { dir: String =>
         val emb = Tables.embeddings(spark, dir)
-        graft.operators.SimilaritySearch.ivfProbePqRefinedAmongAuto(
-          embPqIdx(dir), emb, emb.filter(col("vec_id") < 10), k = 10,
-          emb.filter(pmod(col("vec_id"), lit(2L)) === 0)
-            .select(col("vec_id")), selectivity = Some(0.5))
+        graft.operators.HybridRetrieval.DenseLeg.PqRefined(embPqIdx(dir), emb)
+          .probeAmong(emb.filter(col("vec_id") < 10), k = 10,
+            emb.filter(pmod(col("vec_id"), lit(2L)) === 0)
+              .select(col("vec_id")), selectivity = Some(0.5))
       },
       // the r15 hybrid ensemble under the same ACL shapes: BOTH legs
       // pre-filtered (bm25TopKAmong over the persisted lexical artifact
-      // + ivfProbeAmongAuto under the selectivity dial), RRF-fused —
+      // + DenseLeg.probeAmong under the selectivity dial), RRF-fused —
       // the serving verb that previously had to be hand-wired per
       // caller; its exponents sit beside the individual legs'
       "hybrid_filtered_selective" -> { dir: String =>
@@ -826,17 +826,17 @@ object ScaleBench {
       },
       "hamming_filtered_selective" -> { dir: String =>
         val emb = Tables.embeddings(spark, dir)
-        graft.operators.SimilaritySearch.hammingTopKAmongAuto(
-          embSrpIdx(dir), emb, emb.filter(col("vec_id") < 10), k = 10,
-          emb.filter(pmod(col("vec_id"), lit(128L)) === 0)
-            .select(col("vec_id")))
+        graft.operators.HybridRetrieval.DenseLeg.Srp(embSrpIdx(dir), emb)
+          .probeAmong(emb.filter(col("vec_id") < 10), k = 10,
+            emb.filter(pmod(col("vec_id"), lit(128L)) === 0)
+              .select(col("vec_id")))
       },
       "hamming_filtered_permissive" -> { dir: String =>
         val emb = Tables.embeddings(spark, dir)
-        graft.operators.SimilaritySearch.hammingTopKAmongAuto(
-          embSrpIdx(dir), emb, emb.filter(col("vec_id") < 10), k = 10,
-          emb.filter(pmod(col("vec_id"), lit(2L)) === 0)
-            .select(col("vec_id")))
+        graft.operators.HybridRetrieval.DenseLeg.Srp(embSrpIdx(dir), emb)
+          .probeAmong(emb.filter(col("vec_id") < 10), k = 10,
+            emb.filter(pmod(col("vec_id"), lit(2L)) === 0)
+              .select(col("vec_id")))
       },
       // the composed RAG pipeline gate end-to-end (chunk → embed →
       // index → fused retrieve → eval). Query count AND chunk corpus
@@ -856,8 +856,8 @@ object ScaleBench {
       },
       "rag_dense_ann" -> { dir: String =>
         val emb = graft.queries.TextQueries.prepareRagEmb(spark, dir)
-        graft.operators.SimilaritySearch.hammingTopKAuto(
-          ragSrpIdx(dir), emb, ragQueries(dir), k = 10, "cid", "embedding")
+        graft.operators.HybridRetrieval.DenseLeg.Srp(ragSrpIdx(dir), emb)
+          .probe(ragQueries(dir), k = 10, idCol = "cid", vecCol = "embedding")
       },
       // the IVF-served dense leg of tx_rag_pipeline_ivf under the √n
       // auto dials (nlist ≈ √n, nprobe = nlist/16 — a constant probed
@@ -1613,7 +1613,7 @@ object ScaleBench {
       }
 
     // filtered-ANN recall at scale (r13, verdict item 2's dial half):
-    // ivfProbeAmong's scaladoc claims "selective filters deserve a larger
+    // ivfProbe's `allowed` scaladoc claims "selective filters deserve a larger
     // nprobe — the probed cells must hold ≥ k allowed vectors". This
     // section measures that dial at both sizes: recall@5 vs the exact
     // filtered brute truth, under the selective (≈0.8%) and permissive
@@ -1625,7 +1625,7 @@ object ScaleBench {
     val filteredJson: Option[String] =
       if (!familySelected("ann_recall_filtered")) None
       else Some {
-        import graft.operators.SimilaritySearch
+        import graft.operators.{HybridRetrieval, SimilaritySearch}
         val K = 5
         val NQ = 50
         Seq("small" -> base, "big" -> out).map { case (tag, dir) =>
@@ -1646,7 +1646,8 @@ object ScaleBench {
               .select(col("vec_id"))))
           val parts = filters.map { case (fname, sel, allowed) =>
             val truth = SimilaritySearch
-              .bruteForceTopKAmong(emb, queries, K, allowed).persist()
+              .bruteForceTopK(emb, queries, K, allowed = Some(allowed))
+              .persist()
             val tTruth = timeIt { truth.count(); () }
             // the r14 auto dial joins the measured grid: its recall row
             // must sit at/above every fixed dial it subsumes
@@ -1656,8 +1657,8 @@ object ScaleBench {
             val dialParts = dials.map { np =>
               var probe: DataFrame = null
               val t = timeIt {
-                probe = SimilaritySearch
-                  .ivfProbeAmong(idx, queries, K, np, allowed).persist()
+                probe = SimilaritySearch.ivfProbe(idx, queries, K, np,
+                  allowed = Some(allowed)).persist()
                 probe.count(); ()
               }
               val r = recallAtK(truth, probe)
@@ -1674,9 +1675,9 @@ object ScaleBench {
             val pqIdx = embPqIdx(dir)
             var pqProbe: DataFrame = null
             val tPq = timeIt {
-              pqProbe = SimilaritySearch.ivfProbePqRefinedAmongAuto(
-                pqIdx, emb, queries, K, allowed,
-                selectivity = Some(sel)).persist()
+              pqProbe = HybridRetrieval.DenseLeg.PqRefined(pqIdx, emb)
+                .probeAmong(queries, K, allowed, selectivity = Some(sel))
+                .persist()
               pqProbe.count(); ()
             }
             val rPq = recallAtK(truth, pqProbe)
@@ -1717,7 +1718,8 @@ object ScaleBench {
               val na = allowed.count()
               val sel = math.max(1.0 / n, na.toDouble / n)
               val truth = SimilaritySearch
-                .bruteForceTopKAmong(emb, queries, K, allowed).persist()
+                .bruteForceTopK(emb, queries, K, allowed = Some(allowed))
+                .persist()
               val tTruth = timeIt { truth.count(); () }
               val npAuto = SimilaritySearch.filteredNprobeParam(nlist, sel)
               def measure(name: String)(mk: => DataFrame): String = {
@@ -1730,17 +1732,16 @@ object ScaleBench {
                 s""""$name":{"recall":${fmt(r)},"probe_sec":${fmt(t)}}"""
               }
               val rowsJson = Seq(
-                measure("ivf_auto")(SimilaritySearch.ivfProbeAmong(
-                  idx, queries, K, npAuto, allowed)),
+                measure("ivf_auto")(SimilaritySearch.ivfProbe(
+                  idx, queries, K, npAuto, allowed = Some(allowed))),
                 measure("ivf_cellaware")(SimilaritySearch
-                  .ivfProbeAmongAutoCellAware(idx, queries, K, allowed,
+                  .ivfProbeCellAware(idx, queries, K, allowed,
                     selectivity = Some(sel))),
-                measure("int8_auto")(SimilaritySearch
-                  .ivfProbeInt8AmongAuto(int8Idx, queries, K, allowed,
-                    selectivity = Some(sel))),
-                measure("pq_auto")(SimilaritySearch
-                  .ivfProbePqRefinedAmongAuto(pqIdxC, emb, queries, K,
-                    allowed, selectivity = Some(sel))))
+                measure("int8_auto")(HybridRetrieval.DenseLeg.Int8(int8Idx)
+                  .probeAmong(queries, K, allowed, selectivity = Some(sel))),
+                measure("pq_auto")(HybridRetrieval.DenseLeg
+                  .PqRefined(pqIdxC, emb)
+                  .probeAmong(queries, K, allowed, selectivity = Some(sel))))
               truth.unpersist(); allowed.unpersist()
               s""""$fname":{"n_allowed":$na,"selectivity":${fmt(sel)},""" +
                 s""""nprobe_auto":$npAuto,""" + rowsJson.mkString(",") + "}"
@@ -1994,7 +1995,7 @@ object ScaleBench {
     val driftJson: Option[String] =
       if (!familySelected("ann_drift_retrain")) None
       else Some {
-        import graft.operators.SimilaritySearch
+        import graft.operators.{HybridRetrieval, SimilaritySearch}
         import graft.streaming.StreamingVecIndex
         val K = 5
         val NQ = 30
@@ -2062,9 +2063,9 @@ object ScaleBench {
             val rF = recallAtK(truth, fProbe)
             var pProbe: DataFrame = null
             val tP = timeIt {
-              pProbe = SimilaritySearch.ivfProbePqRefinedAuto(
-                StreamingVecIndex.loadPq(spark, pDir, persist = false),
-                live, queries, K).persist()
+              pProbe = HybridRetrieval.DenseLeg.PqRefined(
+                StreamingVecIndex.loadPq(spark, pDir, persist = false), live)
+                .probe(queries, K, Some(4)).persist()
               pProbe.count(); ()
             }
             val rP = recallAtK(truth, pProbe)
@@ -2157,9 +2158,9 @@ object ScaleBench {
           }
           var pProbeC: DataFrame = null
           val tPc = timeIt {
-            pProbeC = SimilaritySearch.ivfProbePqRefinedAuto(
+            pProbeC = HybridRetrieval.DenseLeg.PqRefined(
               SimilaritySearch.loadIvfPqIndex(spark, pOut, persist = false),
-              live, lastQueries, K).persist()
+              live).probe(lastQueries, K, Some(4)).persist()
             pProbeC.count(); ()
           }
           val rPc = recallAtK(truth4, pProbeC)
@@ -2170,9 +2171,9 @@ object ScaleBench {
           }
           var pProbeF: DataFrame = null
           val tPf = timeIt {
-            pProbeF = SimilaritySearch.ivfProbePqRefinedAuto(
+            pProbeF = HybridRetrieval.DenseLeg.PqRefined(
               SimilaritySearch.loadIvfPqIndex(spark, pOut, persist = false),
-              live, lastQueries, K).persist()
+              live).probe(lastQueries, K, Some(4)).persist()
             pProbeF.count(); ()
           }
           val rPf = recallAtK(truth4, pProbeF)

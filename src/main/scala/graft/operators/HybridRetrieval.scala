@@ -43,64 +43,78 @@ object HybridRetrieval {
     * ever consumes — so adding a tier cannot change a fused bit on the
     * existing tiers (the float gates' hashes pin it).
     *
-    * Dial discipline: `probe` resolves the tier's UNFILTERED policy
-    * ([[SimilaritySearch.policyNprobe]], plus the √n refine for the PQ
-    * re-rank tier) when the caller does not pin one; `probeAmong` routes
-    * through the tier's `*AmongAuto` verb — the selectivity-capped
-    * nprobe dial with pre-filter candidate semantics — so a leg under an
-    * ACL can never silently under-recall relative to the tier's own
-    * filtered serving verb.
+    * Dial discipline — the library's ONE place that resolves probe dials:
+    * `probe` resolves the tier's UNFILTERED policy
+    * ([[SimilaritySearch.policyNprobe]], plus the √n
+    * [[SimilaritySearch.refineScaleParam]] shortlist for the re-rank
+    * tiers) when the caller does not pin one; `probeAmong` widens nprobe
+    * with the filter's selectivity
+    * ([[SimilaritySearch.filteredNprobeParam]]; `None` derives it with two
+    * bounded counts at probe construction) over the family verb's
+    * pre-filter `allowed` semantics — so a leg under an ACL can never
+    * silently under-recall relative to the tier's unfiltered serve.
     */
   sealed trait DenseLeg {
     /** Unfiltered top-k probe; `nprobe` None resolves the tier policy. */
-    private[graft] def probe(queries: DataFrame, k: Int, nprobe: Option[Int],
-        idCol: String, vecCol: String): DataFrame
+    def probe(queries: DataFrame, k: Int, nprobe: Option[Int] = None,
+        idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame
     /** Filtered top-k under the tier's selectivity-capped auto dial. */
-    private[graft] def probeAmong(queries: DataFrame, k: Int,
-        allowed: DataFrame, selectivity: Option[Double],
-        idCol: String, vecCol: String): DataFrame
+    def probeAmong(queries: DataFrame, k: Int, allowed: DataFrame,
+        selectivity: Option[Double] = None,
+        idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame
   }
 
   object DenseLeg {
     import scala.language.implicitConversions
 
-    /** The float32 IVF tier — compiles to the EXACT plans the
-      * pre-abstraction verbs built (ivfProbe at the policy dial /
-      * ivfProbeAmongAuto), so the r15 hybrid gates re-serve through it
-      * hash-unchanged. An [[SimilaritySearch.IvfIndex]] converts
-      * implicitly, keeping every existing call site source-compatible.
+    /** The four IVF tiers share their dials: a tier supplies its coarse
+      * quantizer's inverted file and its family probe at a resolved
+      * nprobe; the policy (unfiltered) and the selectivity-capped
+      * (filtered) nprobe are resolved here once for all of them.
+      */
+    sealed abstract class IvfLeg(centers: Array[Array[Double]],
+        assigned: DataFrame) extends DenseLeg {
+      protected def probeAt(queries: DataFrame, k: Int, nprobe: Int,
+          idCol: String, vecCol: String,
+          allowed: Option[DataFrame]): DataFrame
+      final def probe(queries: DataFrame, k: Int, nprobe: Option[Int],
+          idCol: String, vecCol: String): DataFrame =
+        probeAt(queries, k,
+          nprobe.getOrElse(SimilaritySearch.policyNprobe(centers.length)),
+          idCol, vecCol, None)
+      final def probeAmong(queries: DataFrame, k: Int, allowed: DataFrame,
+          selectivity: Option[Double],
+          idCol: String, vecCol: String): DataFrame =
+        probeAt(queries, k,
+          SimilaritySearch.filteredNprobeParam(centers.length,
+            SimilaritySearch.resolveSelectivity(selectivity, allowed,
+              assigned, idCol)),
+          idCol, vecCol, Some(allowed))
+    }
+
+    /** The float32 IVF tier ([[SimilaritySearch.ivfProbe]]). An
+      * [[SimilaritySearch.IvfIndex]] converts implicitly, keeping every
+      * existing call site source-compatible.
       */
     final case class Float32(index: SimilaritySearch.IvfIndex)
-        extends DenseLeg {
-      private[graft] def probe(queries: DataFrame, k: Int,
-          nprobe: Option[Int], idCol: String, vecCol: String): DataFrame =
-        SimilaritySearch.ivfProbe(index, queries, k,
-          nprobe.getOrElse(
-            SimilaritySearch.policyNprobe(index.centers.length)),
-          idCol, vecCol)
-      private[graft] def probeAmong(queries: DataFrame, k: Int,
-          allowed: DataFrame, selectivity: Option[Double],
-          idCol: String, vecCol: String): DataFrame =
-        SimilaritySearch.ivfProbeAmongAuto(index, queries, k, allowed,
-          selectivity, idCol, vecCol)
+        extends IvfLeg(index.centers, index.assigned) {
+      protected def probeAt(queries: DataFrame, k: Int, nprobe: Int,
+          idCol: String, vecCol: String,
+          allowed: Option[DataFrame]): DataFrame =
+        SimilaritySearch.ivfProbe(index, queries, k, nprobe, idCol, vecCol,
+          allowed)
     }
 
     /** The 4×-compressed IVF-SQ8 memory-floor tier (native Int8Cosine
       * codegen kernel on the candidate relation).
       */
     final case class Int8(index: SimilaritySearch.IvfInt8Index)
-        extends DenseLeg {
-      private[graft] def probe(queries: DataFrame, k: Int,
-          nprobe: Option[Int], idCol: String, vecCol: String): DataFrame =
-        SimilaritySearch.ivfProbeInt8(index, queries, k,
-          nprobe.getOrElse(
-            SimilaritySearch.policyNprobe(index.centers.length)),
-          idCol, vecCol)
-      private[graft] def probeAmong(queries: DataFrame, k: Int,
-          allowed: DataFrame, selectivity: Option[Double],
-          idCol: String, vecCol: String): DataFrame =
-        SimilaritySearch.ivfProbeInt8AmongAuto(index, queries, k, allowed,
-          selectivity, idCol, vecCol)
+        extends IvfLeg(index.centers, index.assigned) {
+      protected def probeAt(queries: DataFrame, k: Int, nprobe: Int,
+          idCol: String, vecCol: String,
+          allowed: Option[DataFrame]): DataFrame =
+        SimilaritySearch.ivfProbeInt8(index, queries, k, nprobe, idCol,
+          vecCol, allowed)
     }
 
     /** The 32×-compressed IVF-PQ tier WITH the exact float re-rank
@@ -108,14 +122,18 @@ object HybridRetrieval {
       * compressed configuration: the ADC scan never touches a float,
       * then only the k·refine shortlist point-looks-up `corpus` for
       * exact cosine). `refine` None follows the √n
-      * [[SimilaritySearch.refineScaleParam]] policy from the index's
-      * stamped n; pinning it high enough that the shortlist covers every
-      * (allowed) candidate puts the leg in the EXACT regime — it equals
-      * the filtered brute ranking, the construction the FULL-oracle gate
-      * drives.
+      * [[SimilaritySearch.refineScaleParam]] policy (base 4, the PQ
+      * family dial) from the index's stamped n; pinning it high enough
+      * that the shortlist covers every (allowed) candidate puts the leg in
+      * the EXACT regime — it equals the filtered brute ranking, the
+      * construction the FULL-oracle gate drives. Under a filter the two
+      * dials COMPOSE: the widened probe restores allowed-candidate volume
+      * into the ADC scan, then the shortlist rides it into the exact
+      * re-rank.
       */
     final case class PqRefined(index: SimilaritySearch.IvfPqIndex,
-        corpus: DataFrame, refine: Option[Int] = None) extends DenseLeg {
+        corpus: DataFrame, refine: Option[Int] = None)
+        extends IvfLeg(index.centers, index.assigned) {
       // lazy val, not def: a legacy index without a stamped n falls back
       // to corpus.count() — a full-corpus driver action that must run AT
       // MOST ONCE per leg instance, never once per probe inside a fused
@@ -123,27 +141,11 @@ object HybridRetrieval {
       private lazy val resolvedRefine: Int = refine.getOrElse(
         SimilaritySearch.refineScaleParam(
           if (index.n >= 0) index.n else corpus.count(), base = 4))
-      private[graft] def probe(queries: DataFrame, k: Int,
-          nprobe: Option[Int], idCol: String, vecCol: String): DataFrame =
+      protected def probeAt(queries: DataFrame, k: Int, nprobe: Int,
+          idCol: String, vecCol: String,
+          allowed: Option[DataFrame]): DataFrame =
         SimilaritySearch.ivfProbePqRefined(index, corpus, queries, k,
-          nprobe.getOrElse(
-            SimilaritySearch.policyNprobe(index.centers.length)),
-          resolvedRefine, idCol, vecCol)
-      private[graft] def probeAmong(queries: DataFrame, k: Int,
-          allowed: DataFrame, selectivity: Option[Double],
-          idCol: String, vecCol: String): DataFrame = refine match {
-        case None =>
-          SimilaritySearch.ivfProbePqRefinedAmongAuto(index, corpus,
-            queries, k, allowed, selectivity, idCol, vecCol)
-        case Some(rf) =>
-          // a pinned shortlist width still gets the selectivity-capped
-          // nprobe dial — the conservation half of the auto composition
-          SimilaritySearch.ivfProbePqRefinedAmong(index, corpus, queries,
-            k, SimilaritySearch.filteredNprobeParam(index.centers.length,
-              SimilaritySearch.resolveSelectivity(selectivity, allowed,
-                index.assigned, idCol)),
-            rf, allowed, idCol, vecCol)
-      }
+          nprobe, resolvedRefine, idCol, vecCol, allowed)
     }
 
     /** ADC-only IVF-PQ — the pure 32×-compressed serve for callers whose
@@ -152,18 +154,12 @@ object HybridRetrieval {
       * trade.
       */
     final case class Pq(index: SimilaritySearch.IvfPqIndex)
-        extends DenseLeg {
-      private[graft] def probe(queries: DataFrame, k: Int,
-          nprobe: Option[Int], idCol: String, vecCol: String): DataFrame =
-        SimilaritySearch.ivfProbePq(index, queries, k,
-          nprobe.getOrElse(
-            SimilaritySearch.policyNprobe(index.centers.length)),
-          idCol, vecCol)
-      private[graft] def probeAmong(queries: DataFrame, k: Int,
-          allowed: DataFrame, selectivity: Option[Double],
-          idCol: String, vecCol: String): DataFrame =
-        SimilaritySearch.ivfProbePqAmongAuto(index, queries, k, allowed,
-          selectivity, idCol, vecCol)
+        extends IvfLeg(index.centers, index.assigned) {
+      protected def probeAt(queries: DataFrame, k: Int, nprobe: Int,
+          idCol: String, vecCol: String,
+          allowed: Option[DataFrame]): DataFrame =
+        SimilaritySearch.ivfProbePq(index, queries, k, nprobe, idCol, vecCol,
+          allowed)
     }
 
     /** The SRP-Hamming tier ([[SimilaritySearch.hammingTopK]] — the
@@ -173,26 +169,29 @@ object HybridRetrieval {
       * four-family symmetry: every persisted ANN tier that streams
       * (r15) can now BE a hybrid leg (r16). `refine` None follows the
       * √n [[SimilaritySearch.refineScaleParam]] policy (base 8, the
-      * family dial) from the index's stamped n; pinning it high enough
-      * that the shortlist covers every allowed candidate is the tier's
-      * exact regime. `nprobe`/`selectivity` are ignored — SRP has no
-      * cell-coverage dial to widen: the allowed semi-join rides the
-      * Hamming scan itself, so the filter prices directly and the
-      * shortlist never wastes a slot on a disallowed candidate.
+      * family dial) from the index's stamped n — no corpus action at
+      * probe construction; pinning it high enough that the shortlist
+      * covers every allowed candidate is the tier's exact regime.
+      * `nprobe`/`selectivity` are ignored — SRP has no cell-coverage dial
+      * to widen: the allowed semi-join rides the Hamming scan itself, so
+      * the filter prices directly and the shortlist never wastes a slot
+      * on a disallowed candidate.
       */
     final case class Srp(index: SimilaritySearch.SrpIndex,
         corpus: DataFrame, refine: Option[Int] = None) extends DenseLeg {
       private lazy val resolvedRefine: Int = refine.getOrElse(
         SimilaritySearch.refineScaleParam(index.n, base = 8))
-      private[graft] def probe(queries: DataFrame, k: Int,
-          nprobe: Option[Int], idCol: String, vecCol: String): DataFrame =
-        SimilaritySearch.hammingTopK(index.sketched, corpus, queries, k,
-          resolvedRefine, index.bits, index.seed, idCol, vecCol)
-      private[graft] def probeAmong(queries: DataFrame, k: Int,
-          allowed: DataFrame, selectivity: Option[Double],
+      def probe(queries: DataFrame, k: Int, nprobe: Option[Int],
           idCol: String, vecCol: String): DataFrame =
-        SimilaritySearch.hammingTopKAmong(index.sketched, corpus, queries,
-          k, allowed, resolvedRefine, index.bits, index.seed, idCol, vecCol)
+        probeOver(queries, k, idCol, vecCol, None)
+      def probeAmong(queries: DataFrame, k: Int, allowed: DataFrame,
+          selectivity: Option[Double],
+          idCol: String, vecCol: String): DataFrame =
+        probeOver(queries, k, idCol, vecCol, Some(allowed))
+      private def probeOver(queries: DataFrame, k: Int, idCol: String,
+          vecCol: String, allowed: Option[DataFrame]): DataFrame =
+        SimilaritySearch.hammingTopK(index.sketched, corpus, queries, k,
+          resolvedRefine, index.bits, index.seed, idCol, vecCol, allowed)
     }
 
     /** The exact corpus-scan tier ([[SimilaritySearch.bruteForceTopK]])
@@ -204,14 +203,14 @@ object HybridRetrieval {
       * against.
       */
     final case class Brute(corpus: DataFrame) extends DenseLeg {
-      private[graft] def probe(queries: DataFrame, k: Int,
-          nprobe: Option[Int], idCol: String, vecCol: String): DataFrame =
-        SimilaritySearch.bruteForceTopK(corpus, queries, k, idCol, vecCol)
-      private[graft] def probeAmong(queries: DataFrame, k: Int,
-          allowed: DataFrame, selectivity: Option[Double],
+      def probe(queries: DataFrame, k: Int, nprobe: Option[Int],
           idCol: String, vecCol: String): DataFrame =
-        SimilaritySearch.bruteForceTopKAmong(corpus, queries, k, allowed,
-          idCol, vecCol)
+        SimilaritySearch.bruteForceTopK(corpus, queries, k, idCol, vecCol)
+      def probeAmong(queries: DataFrame, k: Int, allowed: DataFrame,
+          selectivity: Option[Double],
+          idCol: String, vecCol: String): DataFrame =
+        SimilaritySearch.bruteForceTopK(corpus, queries, k, idCol, vecCol,
+          Some(allowed))
     }
 
     // the float and int8 index types ARE their legs (no extra inputs),
@@ -387,8 +386,8 @@ object HybridRetrieval {
     * (the one serving shape that still had to be hand-wired per caller):
     * the sparse leg is [[InvertedIndex.bm25TopKAmong]] (corpus-wide
     * collection statistics, allowed semi-join on the pruned posting
-    * scan) and the dense leg is the tier's `*AmongAuto` verb
-    * ([[DenseLeg.probeAmong]] — the selectivity-capped nprobe dial,
+    * scan) and the dense leg is the tier's [[DenseLeg.probeAmong]]
+    * (the selectivity-capped nprobe dial,
     * allowed semi-join on the candidate relation before scoring) — so
     * every fused rank is a rank AMONG ALLOWED documents, never a
     * post-filtered global rank that under-returns. With allowed =
@@ -467,7 +466,7 @@ object HybridRetrieval {
   /** [[rrfTopKByQuery]] restricted to an allowed document set — the
     * multi-tenant batch ensemble: the lexical leg is the filtered
     * batch-WAND planner ([[InvertedIndex.bm25TopKPrunedByQueryAmong]])
-    * and the dense leg the tier's `*AmongAuto` verb under the
+    * and the dense leg the tier's [[DenseLeg.probeAmong]] under the
     * selectivity dial (resolved ONCE — the filter is per-tenant, not
     * per-query). Per query ≡ [[rrfTopKAmong]] for that query's pair.
     */

@@ -30,20 +30,41 @@ object SimilaritySearch {
 
   /** Exact cosine top-k of `queries` against `corpus`; both need (idCol,
     * vecCol). Returns (query_id, rn, neighbor_id, cosine).
+    *
+    * `allowed` (rows carrying `idCol`) restricts the ranking to those
+    * documents — PRE-filter semantics (rank among allowed), never a
+    * post-filter of an unrestricted top-k, which silently returns fewer
+    * than k and misses allowed neighbors ranked past the global cut. The
+    * allowed relation semi-joins the corpus side before the scan, so the
+    * scored volume is ∝ |allowed| × queries.
     */
   def bruteForceTopK(
       corpus: DataFrame, queries: DataFrame, k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+      idCol: String = "vec_id", vecCol: String = "embedding",
+      allowed: Option[DataFrame] = None): DataFrame = {
+    val among = allowed.fold(corpus)(a =>
+      corpus.join(a.select(col(idCol)), Seq(idCol), "left_semi"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val t = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("tv"))
-    val scored = t.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        VecOps.cosineNative(col("qv"), col("tv")).as("cosine"))
+    val t = among.select(col(idCol).as("neighbor_id"), col(vecCol).as("tv"))
+    topKPerQuery(floatScored(
+      t.join(broadcast(q), col("query_id") =!= col("neighbor_id"))), k)
+  }
+
+  /** The per-query rank cut every top-k verb ends in (the global merge of
+    * the REPOSE shape: partition-local candidates, then one top-k per
+    * query): keep the `k` best `cosine`s per `query_id`, ties broken by
+    * `neighbor_id`, as (query_id, rn, neighbor_id, carry…, cosine) ordered
+    * by (query_id, rn). One definition, so no two tiers can rank ties
+    * differently.
+    */
+  private[graft] def topKPerQuery(scored: DataFrame, k: Int,
+      carry: String*): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id"))
     scored.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
-      .select(col("query_id"), col("rn"), col("neighbor_id"), col("cosine"))
+      .select((Seq("query_id", "rn", "neighbor_id") ++ carry :+ "cosine")
+        .map(col): _*)
       .orderBy(col("query_id"), col("rn"))
   }
 
@@ -1517,73 +1538,28 @@ object SimilaritySearch {
       childIds, rowsRewritten, total, skewBefore, skewAfter)
   }
 
-  /** Metadata-FILTERED exact top-k: the brute probe over ONLY the allowed
-    * documents — PRE-filter semantics (rank among allowed), never a
-    * post-filter of an unrestricted top-k, which silently returns fewer
-    * than k and misses allowed neighbors ranked past the global cut. The
-    * allowed relation semi-joins the corpus side before the scan, so the
-    * scored volume is ∝ |allowed| × queries.
-    */
-  def bruteForceTopKAmong(
-      corpus: DataFrame, queries: DataFrame, k: Int, allowed: DataFrame,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    bruteForceTopK(
-      corpus.join(allowed.select(col(idCol)), Seq(idCol), "left_semi"),
-      queries, k, idCol, vecCol)
-
-  /** [[ivfProbe]] restricted to an allowed set — the ANN side of the
-    * filtered-retrieval pair (the sparse side is
-    * [[InvertedIndex.bm25TopKAmong]]). The filter lands on the CANDIDATE
-    * relation (after cell probing, before the rank cut): pre-filter
-    * semantics over the probed cells, so the k results are the best
-    * allowed candidates the probe saw. Selective filters deserve a
-    * larger nprobe — the probed cells must hold ≥ k allowed vectors for
-    * full recall, the standard filtered-ANN dial.
-    */
-  def ivfProbeAmong(
-      index: IvfIndex, queries: DataFrame, k: Int, nprobe: Int,
-      allowed: DataFrame,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    ivfProbeOver(index, queries, k, nprobe, Some(allowed), idCol, vecCol)
-
   /** Probe a prebuilt IVF index: each query visits its `nprobe` nearest
     * cells and exact-re-ranks only those cells' vectors via a cell-id
     * equi-join — |corpus|·nprobe/nlist expected candidates per query, the
     * standard sub-linear ANN layout. Returns (query_id, rn, neighbor_id,
     * cosine).
+    *
+    * `allowed` restricts the probe to an allowed set — the ANN side of
+    * the filtered-retrieval pair (the sparse side is
+    * [[InvertedIndex.bm25TopKAmong]]). The filter lands on the CANDIDATE
+    * relation (after cell probing, before scoring and the rank cut):
+    * pre-filter semantics over the probed cells, so the k results are the
+    * best allowed candidates the probe saw. Selective filters deserve a
+    * larger nprobe — the probed cells must hold ≥ k allowed vectors for
+    * full recall; [[HybridRetrieval.DenseLeg]]`.probeAmong` resolves that
+    * dial ([[filteredNprobeParam]]).
     */
   def ivfProbe(
       index: IvfIndex, queries: DataFrame, k: Int, nprobe: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    ivfProbeOver(index, queries, k, nprobe, None, idCol, vecCol)
-
-  // one ranking definition for the filtered and unfiltered probes (the
-  // bm25ScoresOver pattern): None compiles to the exact plan ivfProbe
-  // always had, so the two entry points cannot desynchronize
-  private def ivfProbeOver(
-      index: IvfIndex, queries: DataFrame, k: Int, nprobe: Int,
-      allowed: Option[DataFrame], idCol: String, vecCol: String): DataFrame = {
-    val cand = ivfCandidates(index, queries, nprobe, idCol, vecCol)
-    // no dedup needed between candidates and the rank cut: a corpus
-    // vector is assigned to exactly ONE cell and the probe emits
-    // distinct cells per query, so (query, neighbor) pairs cannot
-    // duplicate — a defensive distinct here was the largest avoidable
-    // shuffle in the serving path (a full exchange of candidate×score
-    // volume stacked on the window's own query_id exchange; r13 verdict).
-    // A future multi-assignment index must dedup on bare ids BEFORE the
-    // scoring kernel instead.
-    val scored = allowed.fold(cand)(a =>
-        cand.join(a.select(col(idCol).as("neighbor_id")),
-          Seq("neighbor_id"), "left_semi"))
-      .select(col("query_id"), col("neighbor_id"),
-        VecOps.cosineNative(col("qv"), col("tv")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("rn"), col("neighbor_id"), col("cosine"))
-      .orderBy(col("query_id"), col("rn"))
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding",
+      allowed: Option[DataFrame] = None): DataFrame =
+    topKPerQuery(floatScored(ivfCandidateRows(index.centers, index.assigned,
+      queries, nprobe, allowed, idCol, vecCol, Seq(col(vecCol).as("qv")))), k)
 
   /** The candidate relation behind [[ivfProbe]], exposed so a composed
     * pipeline can PUBLISH its probe volume (the sub-linearity witness: at
@@ -1594,13 +1570,45 @@ object SimilaritySearch {
     */
   def ivfCandidates(
       index: IvfIndex, queries: DataFrame, nprobe: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val probe = probeCells(index.centers, nprobe)
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      explode(probe(col(vecCol))).as("cell"))
-    index.assigned.join(q, Seq("cell"))
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    ivfCandidateRows(index.centers, index.assigned, queries, nprobe, None,
+      idCol, vecCol, Seq(col(vecCol).as("qv")))
+
+  /** The one candidate step of every IVF probe (float, int8, PQ,
+    * cell-aware): probe cells → explode → cell equi-join → self-exclusion
+    * → optional allowed semi-join. A family supplies only its query-side
+    * projection (`querySide`, optionally re-shaped by `unpack`, both
+    * riding beside `query_id` and `cell`); `among` restricts the probed
+    * cells (the cell-aware dial).
+    *
+    * No dedup between candidates and the rank cut: a corpus vector is
+    * assigned to exactly ONE cell and the probe emits distinct cells per
+    * query, so (query, neighbor) pairs cannot duplicate — a defensive
+    * distinct here was the largest avoidable shuffle in the serving path
+    * (a full exchange of candidate×score volume stacked on the window's
+    * own query_id exchange; r13 verdict). A future multi-assignment index
+    * must dedup on bare ids BEFORE the scoring kernel instead.
+    */
+  private def ivfCandidateRows(centers: Array[Array[Double]],
+      assigned: DataFrame, queries: DataFrame, nprobe: Int,
+      allowed: Option[DataFrame], idCol: String, vecCol: String,
+      querySide: Seq[Column], unpack: Seq[Column] = Nil,
+      among: Option[Array[Int]] = None): DataFrame = {
+    val probe = probeCells(centers, nprobe, among)
+    val q0 = queries.select((col(idCol).as("query_id") +: querySide) :+
+      explode(probe(col(vecCol))).as("cell"): _*)
+    val q = if (unpack.isEmpty) q0
+      else q0.select((col("query_id") +: unpack) :+ col("cell"): _*)
+    val cand = assigned.join(q, Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
+    allowed.fold(cand)(a => cand.join(a.select(col(idCol).as("neighbor_id")),
+      Seq("neighbor_id"), "left_semi"))
   }
+
+  // the float scoring kernel over a (query_id, qv, neighbor_id, tv) relation
+  private def floatScored(cand: DataFrame): DataFrame =
+    cand.select(col("query_id"), col("neighbor_id"),
+      VecOps.cosineNative(col("qv"), col("tv")).as("cosine"))
 
   /** All near-duplicate pairs (id_a < id_b, cosine ≥ threshold) of `corpus`
     * with itself via LSH bucket collisions — the candidate generator for
@@ -1772,26 +1780,22 @@ object SimilaritySearch {
   def int8BruteForceTopK(
       quantized: DataFrame, queries: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    // native codegen kernel (graft.expressions.Int8Cosine): the scoring
-    // projection runs |corpus|·|Q| times per scan, so the UDF
-    // serialization boundary (bytes → Seq[Float] per row) is the hot cost
-    import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
-    def score(qv: Column, scale: Column, qnorm: Column, fq: Column): Column =
-      column(graft.expressions.Int8Cosine(expression(qv), expression(scale),
-        expression(qnorm), expression(fq)))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("fq"))
-    val scored = quantized.select(col(idCol).as("neighbor_id"),
+    topKPerQuery(int8Scored(quantized.select(col(idCol).as("neighbor_id"),
         col("qv"), col("scale"), col("qnorm"))
-      .join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        score(col("qv"), col("scale"), col("qnorm"), col("fq")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("rn"), col("neighbor_id"), col("cosine"))
-      .orderBy(col("query_id"), col("rn"))
+      .join(broadcast(q), col("query_id") =!= col("neighbor_id"))), k)
   }
+
+  // the int8 scoring kernel over a (query_id, fq, neighbor_id, qv, scale,
+  // qnorm) relation — native codegen (graft.expressions.Int8Cosine): the
+  // scoring projection runs once per candidate, so the UDF serialization
+  // boundary (bytes → Seq[Float] per row) was the hot cost
+  private def int8Scored(cand: DataFrame): DataFrame =
+    cand.select(col("query_id"), col("neighbor_id"),
+      ColumnBridge.column(graft.expressions.Int8Cosine(
+        ColumnBridge.expression(col("qv")), ColumnBridge.expression(col("scale")),
+        ColumnBridge.expression(col("qnorm")),
+        ColumnBridge.expression(col("fq")))).as("cosine"))
 
   /** IVF + int8 scalar quantizer (the classic IVF-SQ8 layout): the
     * inverted file's cell-assigned corpus is stored QUANTIZED, composing
@@ -1868,60 +1872,20 @@ object SimilaritySearch {
   /** Probe an IVF-SQ8 index: nprobe nearest cells per query, candidates
     * from the cell equi-join, scoring through the native int8 codegen
     * kernel. Same output shape as [[ivfProbe]].
+    *
+    * `allowed` gives filtered retrieval on the MEMORY-FLOOR serving tier
+    * (the configuration a multi-tenant deployment actually runs: the
+    * resident artifact is the 4×-compressed inverted file, and tenant/ACL
+    * scoping must not force a fallback to the float index or a
+    * post-filter under-return), with [[ivfProbe]]'s pre-filter
+    * placement: disallowed candidates never pay the scoring kernel.
     */
   def ivfProbeInt8(
       index: IvfInt8Index, queries: DataFrame, k: Int, nprobe: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    ivfProbeInt8Over(index, queries, k, nprobe, None, idCol, vecCol)
-
-  /** [[ivfProbeInt8]] restricted to an allowed set — filtered retrieval
-    * on the MEMORY-FLOOR serving tier (the configuration a multi-tenant
-    * deployment actually runs: the resident artifact is the 4×-compressed
-    * inverted file, and tenant/ACL scoping must not force a fallback to
-    * the float index or a post-filter under-return). Same pre-filter
-    * placement as [[ivfProbeAmong]]: the allowed-set semi-join lands on
-    * the candidate relation after cell probing and BEFORE scoring and the
-    * rank cut, so the k results are the best allowed candidates the probe
-    * saw and disallowed candidates never pay the scoring kernel.
-    * Selective filters deserve a larger nprobe (the standard filtered-ANN
-    * dial — the probed cells must hold ≥ k allowed vectors).
-    */
-  def ivfProbeInt8Among(
-      index: IvfInt8Index, queries: DataFrame, k: Int, nprobe: Int,
-      allowed: DataFrame,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    ivfProbeInt8Over(index, queries, k, nprobe, Some(allowed), idCol, vecCol)
-
-  // one ranking definition for the filtered and unfiltered int8 probes
-  // (the ivfProbeOver pattern): None compiles to the exact plan
-  // ivfProbeInt8 always had, so the two entry points cannot desynchronize
-  private def ivfProbeInt8Over(
-      index: IvfInt8Index, queries: DataFrame, k: Int, nprobe: Int,
-      allowed: Option[DataFrame], idCol: String, vecCol: String): DataFrame = {
-    val probe = probeCells(index.centers, nprobe)
-    import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
-    def score(qv: Column, scale: Column, qnorm: Column, fq: Column): Column =
-      column(graft.expressions.Int8Cosine(expression(qv), expression(scale),
-        expression(qnorm), expression(fq)))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("fq"),
-      explode(probe(col(vecCol))).as("cell"))
-    val cand0 = index.assigned.join(q, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-    val cand = allowed.fold(cand0)(a =>
-      cand0.join(a.select(col(idCol).as("neighbor_id")),
-        Seq("neighbor_id"), "left_semi"))
-    // single-assignment cells + distinct probed cells ⇒ no (query,
-    // neighbor) duplicates; see ivfProbeOver — same dropped distinct
-    val scored = cand
-      .select(col("query_id"), col("neighbor_id"),
-        score(col("qv"), col("scale"), col("qnorm"), col("fq")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("rn"), col("neighbor_id"), col("cosine"))
-      .orderBy(col("query_id"), col("rn"))
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding",
+      allowed: Option[DataFrame] = None): DataFrame =
+    topKPerQuery(int8Scored(ivfCandidateRows(index.centers, index.assigned,
+      queries, nprobe, allowed, idCol, vecCol, Seq(col(vecCol).as("fq")))), k)
 
   /** Product-quantization codebook (Jégou et al. 2011): the vector space is
     * split into `m` subspaces of `dsub` dims, each with its own `ksub`-entry
@@ -2035,11 +1999,12 @@ object SimilaritySearch {
     */
   /** `n` = corpus size at build time — index METADATA, stamped once by
     * [[buildIvfPqIndex]] and persisted/reloaded with the artifact, so the
-    * scale policies ([[ivfProbePqRefinedAuto]]) resolve their dials from
-    * the index instead of re-counting the corpus on every probe (a probe
-    * against a 100 TB corpus must never pay a corpus-scan action just to
-    * pick a shortlist width). -1 = unknown (hand-assembled index); the
-    * auto probe then falls back to one corpus count.
+    * scale policies ([[HybridRetrieval.DenseLeg]]`.PqRefined`) resolve
+    * their dials from the index instead of re-counting the corpus on
+    * every probe (a probe against a 100 TB corpus must never pay a
+    * corpus-scan action just to pick a shortlist width). -1 = unknown
+    * (hand-assembled index); the leg then falls back to one corpus count,
+    * once per leg.
     */
   final case class IvfPqIndex(centers: Array[Array[Double]], book: PqCodebook,
       assigned: DataFrame, n: Long = -1L) {
@@ -2117,34 +2082,20 @@ object SimilaritySearch {
     * candidate is m table lookups — no per-candidate float math at all.
     * cosine ≈ Σ lut[sub][code] / (‖q‖·‖reconstruction‖). Same output shape
     * as [[ivfProbe]].
+    *
+    * `allowed` is the ADC leg of the compressed filtered tier: the
+    * semi-join lands on the candidate relation BEFORE the ADC lookup and
+    * rank cut (pre-filter semantics: every shortlist slot holds an allowed
+    * candidate — a post-filter would waste slots on disallowed docs and
+    * under-return), which is exactly what lets [[ivfProbePqRefined]]
+    * re-rank a fully-allowed shortlist with no second filter.
     */
   def ivfProbePq(
       index: IvfPqIndex, queries: DataFrame, k: Int, nprobe: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    ivfProbePqOver(index, queries, k, nprobe, None, idCol, vecCol)
-
-  /** [[ivfProbePq]] restricted to an allowed set — the ADC leg of the
-    * compressed filtered tier. The semi-join lands on the candidate
-    * relation BEFORE the ADC lookup and rank cut (pre-filter semantics:
-    * every shortlist slot holds an allowed candidate — a post-filter
-    * would waste slots on disallowed docs and under-return), which is
-    * exactly what lets [[ivfProbePqRefinedAmong]] re-rank a fully-allowed
-    * shortlist with no second filter.
-    */
-  def ivfProbePqAmong(
-      index: IvfPqIndex, queries: DataFrame, k: Int, nprobe: Int,
-      allowed: DataFrame,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    ivfProbePqOver(index, queries, k, nprobe, Some(allowed), idCol, vecCol)
-
-  // one ADC ranking definition for the filtered and unfiltered PQ probes;
-  // None compiles to the exact plan ivfProbePq always had
-  private def ivfProbePqOver(
-      index: IvfPqIndex, queries: DataFrame, k: Int, nprobe: Int,
-      allowed: Option[DataFrame], idCol: String, vecCol: String): DataFrame = {
+      idCol: String = "vec_id", vecCol: String = "embedding",
+      allowed: Option[DataFrame] = None): DataFrame = {
     val book = index.book
     val m = book.m; val dsub = book.dsub; val bc = book.centers
-    val probe = probeCells(index.centers, nprobe)
     // uniform stride = the largest subspace's centroid count: subspaces may
     // train fewer than ksub centroids (distinct-subvector shortfall), and a
     // head-length stride would mis-index or overflow when counts differ
@@ -2175,27 +2126,13 @@ object SimilaritySearch {
       ColumnBridge.column(graft.expressions.PqAdc(
         ColumnBridge.expression(codes), ColumnBridge.expression(rnorm),
         ColumnBridge.expression(lut), ColumnBridge.expression(qnorm), m))
-    val q = queries
-      .select(col(idCol).as("query_id"), lutAndNorm(col(vecCol)).as("__l"),
-        explode(probe(col(vecCol))).as("cell"))
-      .select(col("query_id"), col("__l._1").as("lut"),
-        col("__l._2").as("qnorm"), col("cell"))
-    val cand0 = index.assigned.join(q, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-    val cand = allowed.fold(cand0)(a =>
-      cand0.join(a.select(col(idCol).as("neighbor_id")),
-        Seq("neighbor_id"), "left_semi"))
-    // single-assignment cells + distinct probed cells ⇒ no (query,
-    // neighbor) duplicates; see ivfProbeOver — same dropped distinct
-    val scored = cand
-      .select(col("query_id"), col("neighbor_id"),
-        adc(col("codes"), col("rnorm"), col("lut"), col("qnorm")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("rn"), col("neighbor_id"), col("cosine"))
-      .orderBy(col("query_id"), col("rn"))
+    val cand = ivfCandidateRows(index.centers, index.assigned, queries,
+      nprobe, allowed, idCol, vecCol,
+      querySide = Seq(lutAndNorm(col(vecCol)).as("__l")),
+      unpack = Seq(col("__l._1").as("lut"), col("__l._2").as("qnorm")))
+    topKPerQuery(cand.select(col("query_id"), col("neighbor_id"),
+      adc(col("codes"), col("rnorm"), col("lut"), col("qnorm")).as("cosine")),
+      k)
   }
 
   /** Persist an IVF-PQ index under `dir`: `assigned/` = the 8-byte-code
@@ -2255,61 +2192,44 @@ object SimilaritySearch {
     * like a point lookup. Recovers most of the distortion ADC pays for
     * its 32× memory floor (spec-measured: 0.36 ADC-only → ~0.8 refined
     * on the low-cosine test corpus).
-    */
-  /** [[ivfProbePq]] with an exact-cosine re-rank of the k·`refine` ADC
-    * shortlist. `refine` is a scale dial (see [[hammingTopK]]'s note —
-    * same mechanism): ADC quantization noise is fixed by the codebook,
-    * so on thin-margin corpora a fixed shortlist dilutes as n grows and
-    * recall decays; widening refine costs only the re-rank join, never
-    * the ADC scan. Measured decay and recovery points: BASELINE.md
-    * recall table.
+    *
+    * `refine` is a scale dial (see [[hammingTopK]]'s note — same
+    * mechanism): ADC quantization noise is fixed by the codebook, so on
+    * thin-margin corpora a fixed shortlist dilutes as n grows and recall
+    * decays; widening refine costs only the re-rank join, never the ADC
+    * scan. Measured decay and recovery points: BASELINE.md recall table.
+    *
+    * `allowed` builds the ADC shortlist PRE-filtered ([[ivfProbePq]], so
+    * every one of the k·refine slots holds an allowed candidate); the
+    * refine join's point-lookup cost profile is unchanged and the filter
+    * never touches the float vectors at all.
     */
   def ivfProbePqRefined(
       index: IvfPqIndex, corpus: DataFrame, queries: DataFrame, k: Int,
       nprobe: Int = 4, refine: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    pqRefineRerank(
-      ivfProbePqOver(index, queries, k * refine, nprobe, None, idCol, vecCol),
+      idCol: String = "vec_id", vecCol: String = "embedding",
+      allowed: Option[DataFrame] = None): DataFrame =
+    exactRerank(
+      ivfProbePq(index, queries, k * refine, nprobe, idCol, vecCol, allowed)
+        .select(col("query_id"), col("neighbor_id")),
       corpus, queries, k, idCol, vecCol)
-  }
 
-  /** [[ivfProbePqRefined]] restricted to an allowed set — the production
-    * compressed-tier filtered probe: the ADC shortlist is built PRE-
-    * filtered ([[ivfProbePqAmong]], so every one of the k·refine slots
-    * holds an allowed candidate), then only that shortlist joins the
-    * float corpus for exact re-ranking. The refine join's point-lookup
-    * cost profile is unchanged; the filter never touches the float
-    * vectors at all.
+  /** The exact re-rank tail of the shortlist families (PQ-refined, SRP,
+    * hard negatives): the k·refine `shortlist` rows per query —
+    * (query_id, neighbor_id, carry…) — join back to the float corpus
+    * (point-lookup shape), get the exact cosine, and take the rank cut.
     */
-  def ivfProbePqRefinedAmong(
-      index: IvfPqIndex, corpus: DataFrame, queries: DataFrame, k: Int,
-      nprobe: Int, refine: Int, allowed: DataFrame,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    pqRefineRerank(
-      ivfProbePqOver(index, queries, k * refine, nprobe, Some(allowed),
-        idCol, vecCol),
-      corpus, queries, k, idCol, vecCol)
-
-  // the shared exact re-rank tail of the refined probes: k·refine
-  // shortlist rows per query join back to the float corpus (point-lookup
-  // shape), exact cosine, rank cut — one definition so the filtered and
-  // unfiltered forms cannot diverge
-  private def pqRefineRerank(adcShortlist: DataFrame, corpus: DataFrame,
-      queries: DataFrame, k: Int, idCol: String, vecCol: String): DataFrame = {
-    val shortlist = adcShortlist.select(col("query_id"), col("neighbor_id"))
+  private def exactRerank(shortlist: DataFrame, corpus: DataFrame,
+      queries: DataFrame, k: Int, idCol: String, vecCol: String,
+      carry: String*): DataFrame = {
     val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
     val tv = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__tv"))
     val exact = shortlist
       .join(broadcast(qv), "query_id")
       .join(tv, "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"),
-        VecOps.cosineNative(col("__qv"), col("__tv")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    exact.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("rn"), col("neighbor_id"), col("cosine"))
-      .orderBy(col("query_id"), col("rn"))
+      .select((Seq("query_id", "neighbor_id") ++ carry).map(col) :+
+        VecOps.cosineNative(col("__qv"), col("__tv")).as("cosine"): _*)
+    topKPerQuery(exact, k, carry: _*)
   }
 
   /** Sign-random-projection sketch (Charikar 2002 SimHash for cosine)
@@ -2356,7 +2276,7 @@ object SimilaritySearch {
     * corpus size `n` (drives [[refineScaleParam]]) and the (bits, seed)
     * the sketch was built with (so a probe can never pair query signatures
     * from a different hyperplane family with the corpus sketch). Stamping
-    * n at BUILD time is what lets [[hammingTopKAuto]] resolve its
+    * n at BUILD time is what lets [[HybridRetrieval.DenseLeg]]`.Srp` resolve its
     * shortlist width without any corpus action in the probe path — on a
     * 100 TB corpus a per-probe `count()` is a full scan action per query
     * batch, paid for a single integer the index already knew.
@@ -2437,71 +2357,59 @@ object SimilaritySearch {
     * the exact re-rank join (k·refine rows/query), never the scan, which
     * is the dominant cost (measured recovery points in the BASELINE.md
     * recall table). Returns (query_id, rn, neighbor_id, cosine).
+    *
+    * `allowed` gives filtered retrieval on the leanest resident tier: the
+    * allowed-set semi-join RIDES THE HAMMING SCAN, before the k·refine
+    * shortlist cut (the [[hammingHardNegatives]] filter placement), so no
+    * shortlist slot is wasted on a disallowed candidate and the result
+    * equals "filter then top-k", never the under-returning "top-k then
+    * filter". The exact re-rank then touches only allowed float vectors.
+    * [[HybridRetrieval.DenseLeg]]`.Srp` resolves `refine` from the
+    * index's stamped n ([[refineScaleParam]]).
     */
   def hammingTopK(
       sketched: DataFrame, corpus: DataFrame, queries: DataFrame, k: Int,
       refine: Int = 8, bits: Int = 128, seed: Long = 42L,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    hammingTopKOver(sketched, corpus, queries, k, refine, bits, seed, None,
-      idCol, vecCol)
-
-  /** [[hammingTopK]] restricted to an allowed set — filtered retrieval on
-    * the leanest resident tier (16 bytes/vector). The allowed-set
-    * semi-join RIDES THE HAMMING SCAN, before the k·refine shortlist cut
-    * (the [[hammingHardNegatives]] filter placement: its label predicate
-    * proved the discipline) — so no shortlist slot is wasted on a
-    * disallowed candidate and the result equals "filter then top-k",
-    * never the under-returning "top-k then filter". The exact re-rank
-    * then touches only allowed float vectors.
-    */
-  def hammingTopKAmong(
-      sketched: DataFrame, corpus: DataFrame, queries: DataFrame, k: Int,
-      allowed: DataFrame,
-      refine: Int = 8, bits: Int = 128, seed: Long = 42L,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    hammingTopKOver(sketched, corpus, queries, k, refine, bits, seed,
-      Some(allowed), idCol, vecCol)
-
-  // one scan+shortlist+re-rank definition for the filtered and unfiltered
-  // Hamming probes; None compiles to the exact plan hammingTopK always had
-  private def hammingTopKOver(
-      sketched: DataFrame, corpus: DataFrame, queries: DataFrame, k: Int,
-      refine: Int, bits: Int, seed: Long, allowed: Option[DataFrame],
-      idCol: String, vecCol: String): DataFrame = {
-    val words = bits / 64
-    val sigCols = (0 until words).map(i => s"sig$i")
-    require(sigCols.forall(sketched.columns.contains),
-      s"sketched frame missing ${sigCols.mkString(",")} — built with a different width?")
+      idCol: String = "vec_id", vecCol: String = "embedding",
+      allowed: Option[DataFrame] = None): DataFrame = {
+    val sigCols = srpSigCols(sketched, bits)
     val qs = srpSketch(queries, bits, seed, idCol, vecCol)
-      .select(col(idCol).as("query_id") +:
-        (0 until words).map(i => col(s"sig$i").as(s"qsig$i")): _*)
-    val hammingExpr = (0 until words)
-      .map(i => bit_count(col(s"sig$i").bitwiseXOR(col(s"qsig$i"))))
-      .reduce(_ + _)
+      .select(col(idCol).as("query_id") +: querySigs(sigCols): _*)
     val scanSide = allowed.fold(sketched)(a =>
       sketched.join(a.select(col(idCol)), Seq(idCol), "left_semi"))
     val ranked = scanSide
       .select(col(idCol).as("neighbor_id") +: sigCols.map(col): _*)
       .join(broadcast(qs), col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), hammingExpr.as("hamming"))
+      .select(col("query_id"), col("neighbor_id"),
+        hammingDistance(sigCols).as("hamming"))
+    exactRerank(hammingShortlist(ranked, k * refine), corpus, queries, k,
+      idCol, vecCol)
+  }
+
+  // the signature columns of a `bits`-wide sketch, checked present
+  private def srpSigCols(sketched: DataFrame, bits: Int): Seq[String] = {
+    val sigCols = (0 until bits / 64).map(i => s"sig$i")
+    require(sigCols.forall(sketched.columns.contains),
+      s"sketched frame missing ${sigCols.mkString(",")} — built with a different width?")
+    sigCols
+  }
+
+  private def querySigs(sigCols: Seq[String]): Seq[Column] =
+    sigCols.map(c => col(c).as(s"q$c"))
+
+  // Σ bit_count(sig_w ^ qsig_w): one xor + popcount per 64-bit word
+  private def hammingDistance(sigCols: Seq[String]): Column =
+    sigCols.map(c => bit_count(col(c).bitwiseXOR(col(s"q$c")))).reduce(_ + _)
+
+  // the Hamming scan's shortlist cut: the n nearest sketches per query by
+  // (hamming, neighbor_id), projected to (query_id, neighbor_id, carry…)
+  private def hammingShortlist(ranked: DataFrame, n: Int,
+      carry: String*): DataFrame = {
     val wH = Window.partitionBy(col("query_id"))
       .orderBy(col("hamming").asc, col("neighbor_id"))
-    val shortlist = ranked.withColumn("hrn", row_number().over(wH))
-      .filter(col("hrn") <= k * refine)
-      .select(col("query_id"), col("neighbor_id"))
-    val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
-    val tv = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__tv"))
-    val exact = shortlist
-      .join(broadcast(qv), "query_id")
-      .join(tv, "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"),
-        VecOps.cosineNative(col("__qv"), col("__tv")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    exact.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("rn"), col("neighbor_id"), col("cosine"))
-      .orderBy(col("query_id"), col("rn"))
+    ranked.withColumn("hrn", row_number().over(wH))
+      .filter(col("hrn") <= n)
+      .select((Seq("query_id", "neighbor_id") ++ carry).map(col): _*)
   }
 
   /** Hard-negative mining via the SRP shortlist — the scale path of the
@@ -2512,18 +2420,16 @@ object SimilaritySearch {
     * cut, so no shortlist slot is wasted on same-label neighbors and the
     * result equals "filter then top-k", never the (wrong) "top-k then
     * filter". Same cost profile as [[hammingTopK]] plus one broadcast of
-    * the label relation; `refine` follows [[refineScaleParam]]'s policy.
-    * Returns (query_id, rn, neighbor_id, neg_label, cosine).
+    * the label relation; pass `refineScaleParam(index.n, base = 8)` for
+    * the family's √n shortlist policy. Returns (query_id, rn,
+    * neighbor_id, neg_label, cosine).
     */
   def hammingHardNegatives(
       sketched: DataFrame, corpus: DataFrame, queries: DataFrame, k: Int,
       refine: Int = 8, bits: Int = 128, seed: Long = 42L,
       idCol: String = "vec_id", vecCol: String = "embedding",
       labelCol: String = "label"): DataFrame = {
-    val words = bits / 64
-    val sigCols = (0 until words).map(i => s"sig$i")
-    require(sigCols.forall(sketched.columns.contains),
-      s"sketched frame missing ${sigCols.mkString(",")} — built with a different width?")
+    val sigCols = srpSigCols(sketched, bits)
     val labels = corpus.select(col(idCol), col(labelCol))
     // LEFT join + loud failure, not an inner join: a query id absent
     // from the corpus label relation must surface as an error, never as
@@ -2536,52 +2442,16 @@ object SimilaritySearch {
             lit("hammingHardNegatives: query id "), col(idCol).cast("string"),
             lit(s" has no label in the corpus relation"))))
           .otherwise(col(labelCol)).as("__ql") +:
-        (0 until words).map(i => col(s"sig$i").as(s"qsig$i")): _*)
-    val hammingExpr = (0 until words)
-      .map(i => bit_count(col(s"sig$i").bitwiseXOR(col(s"qsig$i"))))
-      .reduce(_ + _)
+        querySigs(sigCols): _*)
     val ranked = sketched
       .join(labels, Seq(idCol))
       .select(col(idCol).as("neighbor_id") +:
         col(labelCol).as("neg_label") +: sigCols.map(col): _*)
       .join(broadcast(qs), col("__ql") =!= col("neg_label"))
       .select(col("query_id"), col("neighbor_id"), col("neg_label"),
-        hammingExpr.as("hamming"))
-    val wH = Window.partitionBy(col("query_id"))
-      .orderBy(col("hamming").asc, col("neighbor_id"))
-    val shortlist = ranked.withColumn("hrn", row_number().over(wH))
-      .filter(col("hrn") <= k * refine)
-      .select(col("query_id"), col("neighbor_id"), col("neg_label"))
-    val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
-    val tv = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__tv"))
-    val exact = shortlist
-      .join(broadcast(qv), "query_id")
-      .join(tv, "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"), col("neg_label"),
-        VecOps.cosineNative(col("__qv"), col("__tv")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    exact.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("rn"), col("neighbor_id"),
-        col("neg_label"), col("cosine"))
-      .orderBy(col("query_id"), col("rn"))
-  }
-
-  /** [[hammingHardNegatives]] against an [[SrpIndex]] with the shortlist
-    * width from [[refineScaleParam]] (base 8, the family dial) resolved
-    * from the INDEX metadata — the auto form [[hammingTopKAuto]] gives
-    * the top-k probe, completing the r9 auto-policy surface: a miner
-    * that follows the types gets the √n shortlist policy and zero
-    * corpus actions at probe construction.
-    */
-  def hammingHardNegativesAuto(
-      index: SrpIndex, corpus: DataFrame, queries: DataFrame, k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      labelCol: String = "label"): DataFrame = {
-    val refine = refineScaleParam(index.n, base = 8)
-    hammingHardNegatives(index.sketched, corpus, queries, k, refine,
-      index.bits, index.seed, idCol, vecCol, labelCol)
+        hammingDistance(sigCols).as("hamming"))
+    exactRerank(hammingShortlist(ranked, k * refine, "neg_label"), corpus,
+      queries, k, idCol, vecCol, "neg_label")
   }
 
   /** One-shot IVF top-k (build + probe, nothing cached). Prefer
@@ -2646,174 +2516,77 @@ object SimilaritySearch {
       math.max(policy, math.ceil(policy / selectivity).toInt))
   }
 
-  /** [[ivfProbeAmong]] with nprobe resolved from the filter's
-    * selectivity via [[filteredNprobeParam]] — a user who follows the
-    * types gets the measured dial ("selective filters deserve a larger
-    * nprobe"), not a silently-under-recalling constant. Pass
-    * `selectivity` when the caller knows it (an ACL holding 0.8% of the
-    * corpus — the production case, zero extra jobs); `None` derives it
-    * with two bounded counts at probe-CONSTRUCTION time (never per
-    * query), the one-off cost [[loadIvfPqIndex]]'s n fallback set the
-    * precedent for.
-    */
-  def ivfProbeAmongAuto(
-      index: IvfIndex, queries: DataFrame, k: Int, allowed: DataFrame,
-      selectivity: Option[Double] = None,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val np = filteredNprobeParam(index.centers.length,
-      resolveSelectivity(selectivity, allowed, index.assigned, idCol))
-    ivfProbeAmong(index, queries, k, np, allowed, idCol, vecCol)
-  }
-
-  /** [[ivfProbeAmong]] with CELL-AWARE probing — the dial for
-    * CORRELATED allowed sets (r18, verdict item 4). The
-    * [[filteredNprobeParam]] conservation law is VOLUME-based: nprobe/s
-    * restores allowed-candidate volume assuming the allowed set spreads
-    * uniformly across cells. The realistic multi-tenant case is the
-    * opposite — a tenant's documents cluster into FEW cells (tenants
-    * have topics) — and then a query far from the tenant's region ranks
-    * those cells poorly among ALL cells, probes its nprobe nearest
-    * (mostly allowed-empty) cells, and under-recalls however wide the
-    * volume dial opens short of the nlist cap.
+  /** The CELL-AWARE filtered probe — the dial for CORRELATED allowed sets
+    * (r18, verdict item 4). The [[filteredNprobeParam]] conservation law
+    * is VOLUME-based: nprobe/s restores allowed-candidate volume assuming
+    * the allowed set spreads uniformly across cells. The realistic
+    * multi-tenant case is the opposite — a tenant's documents cluster into
+    * FEW cells (tenants have topics) — and then a query far from the
+    * tenant's region ranks those cells poorly among ALL cells, probes its
+    * nprobe nearest (mostly allowed-empty) cells, and under-recalls
+    * however wide the volume dial opens short of the nlist cap.
     *
     * This verb resolves the set of cells that actually HOLD allowed
-    * candidates — one bounded semi-join aggregation at probe
-    * construction (O(nlist) result, the [[resolveSelectivity]] cost
-    * class), never per query — and each query probes its `nprobe`
-    * nearest cells AMONG THOSE. Coverage is counted in allowed cells,
-    * so the probe goes where the tenant's documents live regardless of
-    * how they cluster. At `nprobe ≥` the allowed-cell count the probe
-    * visits every allowed row: EXACTLY the filtered brute ranking
-    * (spec-pinned) — the same exactness anchor the volume dial only
-    * reaches at the full nlist cap. The allowed semi-join still rides
-    * the candidate relation (an allowed CELL holds disallowed rows
-    * too), preserving pre-filter semantics.
+    * candidates — one bounded semi-join aggregation at probe construction
+    * (O(nlist) result, the [[resolveSelectivity]] cost class), never per
+    * query — and each query probes its `nprobe` nearest cells AMONG THOSE.
+    * Coverage is counted in allowed cells, so the probe goes where the
+    * tenant's documents live regardless of how they cluster. At `nprobe ≥`
+    * the allowed-cell count the probe visits every allowed row: EXACTLY the
+    * filtered brute ranking (spec-pinned) — the same exactness anchor the
+    * volume dial only reaches at the full nlist cap. The allowed semi-join
+    * still rides the candidate relation (an allowed CELL holds disallowed
+    * rows too), preserving pre-filter semantics.
+    *
+    * `nprobe` None conserves the unfiltered policy's SCORED VOLUME on the
+    * allowed mass: the allowed set's s·n rows spread over nCells allowed
+    * cells (mean s·n/nCells each), so probing np = nCells/(16·s) of them
+    * scores ≈ n/16 — the same volume the unfiltered constant-fraction
+    * policy pays — capped at nCells (then the probe IS the filtered brute
+    * ranking) and floored at [[policyNprobe]]'s 4. Two identities pin the
+    * shape: at selectivity 1 (allowed = everything) nCells = nlist and the
+    * dial IS the unfiltered policy; as s → 0 the cap forces exactness. An
+    * earlier coverage-only dial (probe nCells/16 cells, ignoring s)
+    * measured BELOW the volume dial on spread-clustered ACLs — it probed a
+    * fixed fraction of the allowed cell space where the volume
+    * conservation argument demands a 1/s widening, the same lesson
+    * [[filteredNprobeParam]] encodes on raw cells. `selectivity`: pass it
+    * when known (the production case); `None` derives it with the
+    * [[resolveSelectivity]] bounded counts at probe-construction time.
     */
-  def ivfProbeAmongCellAware(
-      index: IvfIndex, queries: DataFrame, k: Int, nprobe: Int,
-      allowed: DataFrame,
+  def ivfProbeCellAware(
+      index: IvfIndex, queries: DataFrame, k: Int, allowed: DataFrame,
+      nprobe: Option[Int] = None, selectivity: Option[Double] = None,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val allowedCells = resolveAllowedCells(index, allowed, idCol)
     if (allowedCells.isEmpty)
       // empty intersection: the filtered result is empty by definition —
       // serve through the plain filtered probe (its semi-join yields
       // zero candidates) rather than inventing a cell set
-      return ivfProbeAmong(index, queries, k, 1, allowed, idCol, vecCol)
+      return ivfProbe(index, queries, k, 1, idCol, vecCol, Some(allowed))
+    val np = nprobe.getOrElse {
+      val s = resolveSelectivity(selectivity, allowed, index.assigned, idCol)
+      math.min(allowedCells.length,
+        math.max(4, math.ceil(allowedCells.length / (16.0 * s)).toInt))
+    }
     // resolveAllowedCells returns the ids SORTED ascending — exactly the
     // NearestCells candidate-order contract, so its stable selection
     // reproduces the old sortBy((d2, c2)) tie-break
-    val probe = probeCells(index.centers, nprobe, Some(allowedCells))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      explode(probe(col(vecCol))).as("cell"))
-    val cand = index.assigned.join(q, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .join(allowed.select(col(idCol).as("neighbor_id")),
-        Seq("neighbor_id"), "left_semi")
-    val scored = cand.select(col("query_id"), col("neighbor_id"),
-      VecOps.cosineNative(col("qv"), col("tv")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("rn"), col("neighbor_id"), col("cosine"))
-      .orderBy(col("query_id"), col("rn"))
+    topKPerQuery(floatScored(ivfCandidateRows(index.centers, index.assigned,
+      queries, np, Some(allowed), idCol, vecCol, Seq(col(vecCol).as("qv")),
+      among = Some(allowedCells))), k)
   }
 
-  /** [[ivfProbeAmongCellAware]] with nprobe conserving the unfiltered
-    * policy's SCORED VOLUME on the allowed mass: the allowed set's s·n
-    * rows spread over nCells allowed cells (mean s·n/nCells each), so
-    * probing np = nCells/(16·s) of them scores ≈ n/16 — the same
-    * volume the unfiltered constant-fraction policy pays — capped at
-    * nCells (then the probe IS the filtered brute ranking) and floored
-    * at [[policyNprobe]]'s 4. Two identities pin the shape: at
-    * selectivity 1 (allowed = everything) nCells = nlist and the dial
-    * IS the unfiltered policy; as s → 0 the cap forces exactness. An
-    * earlier coverage-only dial (probe nCells/16 cells, ignoring s)
-    * measured BELOW the volume dial on spread-clustered ACLs — it
-    * probed a fixed fraction of the allowed cell space where the
-    * volume conservation argument demands a 1/s widening, the same
-    * lesson [[filteredNprobeParam]] encodes on raw cells.
-    *
-    * `selectivity`: pass it when known (the production case); `None`
-    * derives it with the [[resolveSelectivity]] bounded counts at
-    * probe-construction time.
-    */
-  def ivfProbeAmongAutoCellAware(
-      index: IvfIndex, queries: DataFrame, k: Int, allowed: DataFrame,
-      selectivity: Option[Double] = None,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val nCells = resolveAllowedCells(index, allowed, idCol).length
-    val s = resolveSelectivity(selectivity, allowed, index.assigned, idCol)
-    val np = math.min(math.max(1, nCells),
-      math.max(4, math.ceil(nCells / (16.0 * s)).toInt))
-    ivfProbeAmongCellAware(index, queries, k, np, allowed, idCol, vecCol)
-  }
-
-  // the bounded allowed-cell resolution shared by the cell-aware verbs:
-  // distinct cells of the allowed∩index rows, sorted for deterministic
-  // tie-breaks in the probe UDF
-  private def resolveAllowedCells(index: IvfIndex, allowed: DataFrame,
+  // the bounded allowed-cell resolution of the cell-aware probe: distinct
+  // cells of the allowed∩index rows, sorted for deterministic tie-breaks
+  // in the probe expression
+  private[graft] def resolveAllowedCells(index: IvfIndex, allowed: DataFrame,
       idCol: String): Array[Int] =
     index.assigned
       .join(allowed.select(col(idCol).as("neighbor_id")).distinct(),
         Seq("neighbor_id"), "left_semi")
       .select(col("cell")).distinct()
       .collect().map(_.getInt(0)).sorted
-
-  /** The int8 twin of [[ivfProbeAmongAuto]] — the memory-floor serving
-    * tier gets the same selectivity-aware dial.
-    */
-  def ivfProbeInt8AmongAuto(
-      index: IvfInt8Index, queries: DataFrame, k: Int, allowed: DataFrame,
-      selectivity: Option[Double] = None,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val np = filteredNprobeParam(index.centers.length,
-      resolveSelectivity(selectivity, allowed, index.assigned, idCol))
-    ivfProbeInt8Among(index, queries, k, np, allowed, idCol, vecCol)
-  }
-
-  /** The PQ twin of [[ivfProbeAmongAuto]] (r15 — the 32×-compressed tier
-    * joins the auto-dial family; [[filteredNprobeParam]]'s conservation
-    * argument is layout-independent: nprobe/s restores allowed-candidate
-    * volume whether candidates are floats, int8 codes, or PQ codes, and
-    * the scored volume never exceeds the unfiltered policy's).
-    */
-  def ivfProbePqAmongAuto(
-      index: IvfPqIndex, queries: DataFrame, k: Int, allowed: DataFrame,
-      selectivity: Option[Double] = None,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val np = filteredNprobeParam(index.centers.length,
-      resolveSelectivity(selectivity, allowed, index.assigned, idCol))
-    ivfProbePqAmong(index, queries, k, np, allowed, idCol, vecCol)
-  }
-
-  /** [[ivfProbePqRefinedAmong]] with BOTH dials resolved from metadata —
-    * the production compressed-tier filtered probe a caller gets by
-    * following the types: nprobe widens with the filter's selectivity
-    * ([[filteredNprobeParam]], derived from the index when not given)
-    * and the refine shortlist width follows [[refineScaleParam]] (base
-    * 4, the PQ family dial) from the index's stamped n. The dials
-    * COMPOSE: the widened probe restores allowed-candidate volume into
-    * the ADC scan, then the √n shortlist rides it into the exact
-    * re-rank. Recall is monotone in refine (a wider shortlist is a
-    * superset and the exact re-rank cannot evict a true neighbor);
-    * widening nprobe restores candidate VOLUME — unlike the float tier,
-    * the shortlist cut is on the ADC estimate, so the nprobe axis is
-    * the conservation guarantee (never score less allowed volume than
-    * the unfiltered policy), not a per-query monotonicity proof. At the
-    * nlist cap with a shortlist covering the allowed set, the probe is
-    * EXACTLY the filtered brute ranking (spec-pinned).
-    */
-  def ivfProbePqRefinedAmongAuto(
-      index: IvfPqIndex, corpus: DataFrame, queries: DataFrame, k: Int,
-      allowed: DataFrame, selectivity: Option[Double] = None,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val np = filteredNprobeParam(index.centers.length,
-      resolveSelectivity(selectivity, allowed, index.assigned, idCol))
-    val n = if (index.n >= 0) index.n else corpus.count()
-    ivfProbePqRefinedAmong(index, corpus, queries, k, np,
-      refineScaleParam(n, base = 4), allowed, idCol, vecCol)
-  }
 
   private[graft] def resolveSelectivity(selectivity: Option[Double],
       allowed: DataFrame, assigned: DataFrame,
@@ -2859,81 +2632,6 @@ object SimilaritySearch {
     math.min(cap, math.max(base, scaled))
   }
 
-  /** [[hammingTopK]] with the shortlist width derived from the corpus size
-    * via [[refineScaleParam]] (base = the 2k-measured dial 8) instead of
-    * pinned by the caller — a user who follows the types gets the policy,
-    * not a silently-decaying constant. Resolves n from the INDEX metadata
-    * (stamped at build), so the probe plan contains no corpus count
-    * action (PlanSpec-pinned: constructing the probe triggers zero Spark
-    * jobs). Recall is monotone in refine (a wider shortlist is a superset
-    * and exact re-ranking cannot evict a true top-k neighbor), so auto ≥
-    * fixed-base recall deterministically — ScaleBenchSpec pins both the
-    * policy values at the measured sizes and the monotonicity end-to-end.
-    */
-  def hammingTopKAuto(
-      index: SrpIndex, corpus: DataFrame, queries: DataFrame, k: Int,
-      idCol: String, vecCol: String): DataFrame = {
-    val refine = refineScaleParam(index.n, base = 8)
-    hammingTopK(index.sketched, corpus, queries, k, refine, index.bits,
-      index.seed, idCol, vecCol)
-  }
-
-  def hammingTopKAuto(index: SrpIndex, corpus: DataFrame, queries: DataFrame,
-      k: Int): DataFrame =
-    hammingTopKAuto(index, corpus, queries, k, "vec_id", "embedding")
-
-  /** [[hammingTopKAmong]] with the shortlist width from the index
-    * metadata — the filtered sibling of [[hammingTopKAuto]], so the SRP
-    * family's base dial lives in ONE place and a filtered probe can
-    * never silently measure a different policy than the unfiltered one.
-    */
-  def hammingTopKAmongAuto(
-      index: SrpIndex, corpus: DataFrame, queries: DataFrame, k: Int,
-      allowed: DataFrame,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    hammingTopKAmong(index.sketched, corpus, queries, k, allowed,
-      refineScaleParam(index.n, base = 8), index.bits, index.seed,
-      idCol, vecCol)
-
-  /** Bare-sketch variant of [[hammingTopKAuto]] for callers without the
-    * [[SrpIndex]] metadata — pays one corpus `count()` per call to resolve
-    * the dial. Prefer the index form on anything probed more than once.
-    */
-  def hammingTopKAuto(
-      sketched: DataFrame, corpus: DataFrame, queries: DataFrame, k: Int,
-      bits: Int = 128, seed: Long = 42L,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    hammingTopKAuto(SrpIndex(sketched, corpus.count(), bits, seed),
-      corpus, queries, k, idCol, vecCol)
-
-  /** [[ivfProbePqRefined]] with the shortlist width derived from the
-    * corpus size via [[refineScaleParam]] (base = the 2k-measured dial 4);
-    * see [[hammingTopKAuto]] for the contract. n comes from the index
-    * metadata ([[buildIvfPqIndex]] stamps it, [[saveIvfPqIndex]] persists
-    * it); only a hand-assembled index with n = -1 falls back to one
-    * corpus count.
-    */
-  def ivfProbePqRefinedAuto(
-      index: IvfPqIndex, corpus: DataFrame, queries: DataFrame, k: Int,
-      nprobe: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val n = if (index.n >= 0) index.n else corpus.count()
-    val refine = refineScaleParam(n, base = 4)
-    ivfProbePqRefined(index, corpus, queries, k, nprobe, refine, idCol, vecCol)
-  }
-
-  /** [[ivfTopK]] with (nlist, nprobe) derived from the corpus size via
-    * [[ivfScaleParams]] instead of pinned by the caller. Costs one
-    * `count()`; callers that already know n should apply the policy
-    * themselves.
-    */
-  def ivfTopKAuto(
-      corpus: DataFrame, queries: DataFrame, k: Int, seed: Long = 42L,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val (nlist, nprobe) = ivfScaleParams(corpus.count())
-    ivfTopK(corpus, queries, k, nlist, nprobe, seed, idCol, vecCol)
-  }
-
   /** LSH-bucketed approximate cosine top-k. Each side gets `numTables`
     * signatures; candidate pairs share (table, signature); exact cosine
     * re-ranks candidates. Returns (query_id, rn, neighbor_id, cosine).
@@ -2964,13 +2662,6 @@ object SimilaritySearch {
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"), col("qv"), col("tv"))
       .distinct()
-    val scored = candidates.select(col("query_id"), col("neighbor_id"),
-      VecOps.cosineNative(col("qv"), col("tv")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("rn"), col("neighbor_id"), col("cosine"))
-      .orderBy(col("query_id"), col("rn"))
+    topKPerQuery(floatScored(candidates), k)
   }
 }

@@ -3,7 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.functions.VecOps
 import graft.ml.MlOps
-import graft.operators.{Dedup, SimilaritySearch, VecAgg}
+import graft.operators.{Dedup, HybridRetrieval, SimilaritySearch, VecAgg}
 import org.apache.spark.sql.functions._
 
 /** Engine-native operators with no exact ANSI-SQL twin (hash-seeded LSH,
@@ -460,7 +460,7 @@ object EngineQueries extends QueryPack {
 
   // Filtered ANN under a FULL oracle (round 12 — the dense side of the
   // filtered-retrieval pair; the sparse side is t_bm25_filtered_topk):
-  // the REAL bruteForceTopKAmong with PRE-filter semantics (rank among
+  // the REAL filtered bruteForceTopK with PRE-filter semantics (rank among
   // allowed, never post-filter a global top-k) over the quantized-exact
   // inputs of vx_ann_brute_quantized; allowed = vec_id % 3 == 0, queries
   // unrestricted — the ACL shape where the asker is outside the set.
@@ -471,9 +471,9 @@ object EngineQueries extends QueryPack {
         .select(col("vec_id"),
           transform(col("embedding"),
             v => floor(v.cast("double") * lit(1e6)).cast("double")).as("embedding"))
-      SimilaritySearch.bruteForceTopKAmong(
+      SimilaritySearch.bruteForceTopK(
         embQ, embQ.filter(col("vec_id") < 10), k = 5,
-        allowed = embQ.filter(col("vec_id") % 3 === 0))
+        allowed = Some(embQ.filter(col("vec_id") % 3 === 0)))
     },
     Some("""WITH lf AS (
       SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS pos,
@@ -499,7 +499,7 @@ object EngineQueries extends QueryPack {
     WHERE rn <= 5 ORDER BY query_id, rn"""))
 
   // ---- the selectivity-aware AUTO dial under a FULL oracle (round 14):
-  //      the REAL ivfProbeAmongAuto over the frozen-quantizer exact index
+  //      the REAL DenseLeg.probeAmong dial over the frozen-quantizer exact index
   //      (prepareIvfIndex, floor(v·1e4) embeddings), selectivity DERIVED
   //      from the two bounded construction-time counts. The %3 filter's
   //      share (~1/3) drives ceil(policy 4 / s) = 12, capped at nlist = 8
@@ -513,8 +513,8 @@ object EngineQueries extends QueryPack {
     "vx_ann_auto_filtered_quantized",
     (s, d) => {
       val embQ = quantizedEmb(s, d)
-      SimilaritySearch.ivfProbeAmongAuto(
-          prepareIvfIndex(s, d), embQ.filter(col("vec_id") < 10), k = 5,
+      HybridRetrieval.DenseLeg.Float32(prepareIvfIndex(s, d))
+        .probeAmong(embQ.filter(col("vec_id") < 10), k = 5,
           allowed = embQ.filter(col("vec_id") % 3 === 0)
             .select(col("vec_id")))
         .select(col("query_id"), col("rn"), col("neighbor_id"),
@@ -546,7 +546,7 @@ object EngineQueries extends QueryPack {
     FROM scored WHERE rn <= 5 ORDER BY query_id, rn"""))
 
   // ---- filtered retrieval on the COMPRESSED serving tier under a FULL
-  //      oracle (round 13 — verdict item 1): the REAL ivfProbeInt8Among
+  //      oracle (round 13 — verdict item 1): the REAL filtered ivfProbeInt8
   //      (allowed-set semi-join on the candidate relation BEFORE scoring
   //      and the rank cut, scored through the native Int8Cosine codegen
   //      kernel) driven in the int8 quantizer's EXACT REGIME. The
@@ -589,9 +589,9 @@ object EngineQueries extends QueryPack {
     "vx_ann_int8_filtered_quantized",
     (s, d) => {
       val e = int8ExactEmb(s, d)
-      SimilaritySearch.ivfProbeInt8Among(prepareIvfInt8ExactIndex(s, d),
+      SimilaritySearch.ivfProbeInt8(prepareIvfInt8ExactIndex(s, d),
           e.filter(col("vec_id") < 10), k = 5, nprobe = 4,
-          allowed = e.filter(col("vec_id") % 3 === 0))
+          allowed = Some(e.filter(col("vec_id") % 3 === 0)))
         .select(col("query_id"), col("rn"), col("neighbor_id"),
           floor(col("cosine") * lit(1000000.0)).cast("long").as("cosine_q"))
         .orderBy(col("query_id"), col("rn"))
@@ -1017,7 +1017,7 @@ object EngineQueries extends QueryPack {
   //      per caller). The REAL HybridRetrieval.rrfTopKAmong: sparse leg
   //      = bm25TopKAmong over the persisted artifact (corpus-wide
   //      stats, allowed semi-join on the pruned scan), dense leg =
-  //      ivfProbeAmongAuto over the frozen-quantizer exact-regime index
+  //      DenseLeg.probeAmong over the frozen-quantizer exact-regime index
   //      (derived selectivity ≈ 1/3 → the dial caps at nlist = 8, ALL
   //      cells probed ⇒ the dense leg IS the filtered brute ranking —
   //      the vx_ann_auto_filtered_quantized trick), legs cut at legK =
@@ -2238,10 +2238,10 @@ object EngineQueries extends QueryPack {
     (s, d) => {
       val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") < 10)
-      val direct = SimilaritySearch
-        .hammingTopKAuto(prepareSrpIndexDirect(s, d), emb, q, k = 5)
-      val streamed = SimilaritySearch
-        .hammingTopKAuto(prepareStreamSrpIndex(s, d), emb, q, k = 5)
+      val direct = HybridRetrieval.DenseLeg
+        .Srp(prepareSrpIndexDirect(s, d), emb).probe(q, k = 5)
+      val streamed = HybridRetrieval.DenseLeg
+        .Srp(prepareStreamSrpIndex(s, d), emb).probe(q, k = 5)
       direct.as("a").join(streamed.as("b"),
           col("a.query_id") === col("b.query_id") &&
             col("a.rn") === col("b.rn"), "full_outer")
@@ -2262,10 +2262,10 @@ object EngineQueries extends QueryPack {
     (s, d) => {
       val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") < 10)
-      val direct = SimilaritySearch
-        .ivfProbePqRefinedAuto(prepareIvfPqIndex(s, d), emb, q, k = 5)
-      val streamed = SimilaritySearch
-        .ivfProbePqRefinedAuto(prepareStreamPqIndex(s, d), emb, q, k = 5)
+      val direct = HybridRetrieval.DenseLeg
+        .PqRefined(prepareIvfPqIndex(s, d), emb).probe(q, k = 5)
+      val streamed = HybridRetrieval.DenseLeg
+        .PqRefined(prepareStreamPqIndex(s, d), emb).probe(q, k = 5)
       direct.as("a").join(streamed.as("b"),
           col("a.query_id") === col("b.query_id") &&
             col("a.rn") === col("b.rn"), "full_outer")
@@ -2836,10 +2836,10 @@ object EngineQueries extends QueryPack {
     (s, d) => {
       val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") < 10)
-      val direct = SimilaritySearch
-        .ivfProbePqRefinedAuto(prepareIvfPqIndex(s, d), emb, q, k = 5)
-      val art = SimilaritySearch
-        .ivfProbePqRefinedAuto(prepareIvfPqIndexArtifact(s, d), emb, q, k = 5)
+      val direct = HybridRetrieval.DenseLeg
+        .PqRefined(prepareIvfPqIndex(s, d), emb).probe(q, k = 5)
+      val art = HybridRetrieval.DenseLeg
+        .PqRefined(prepareIvfPqIndexArtifact(s, d), emb).probe(q, k = 5)
       direct.as("a").join(art.as("b"),
           col("a.query_id") === col("b.query_id") &&
             col("a.rn") === col("b.rn"), "full_outer")
@@ -2900,8 +2900,9 @@ object EngineQueries extends QueryPack {
     "vx_ann_hamming_top5",
     (s, d) => {
       val emb = Tables.embeddings(s, d)
-      SimilaritySearch.hammingTopKAuto(prepareSrpIndexArtifact(s, d), emb,
-        emb.filter(col("vec_id") < 10), k = 5)
+      HybridRetrieval.DenseLeg
+        .Srp(prepareSrpIndexArtifact(s, d), emb)
+        .probe(emb.filter(col("vec_id") < 10), k = 5)
     },
     None)
 
@@ -2918,10 +2919,10 @@ object EngineQueries extends QueryPack {
     (s, d) => {
       val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") < 10)
-      val direct = SimilaritySearch
-        .hammingTopKAuto(prepareSrpIndexDirect(s, d), emb, q, k = 5)
-      val art = SimilaritySearch
-        .hammingTopKAuto(prepareSrpIndexArtifact(s, d), emb, q, k = 5)
+      val direct = HybridRetrieval.DenseLeg
+        .Srp(prepareSrpIndexDirect(s, d), emb).probe(q, k = 5)
+      val art = HybridRetrieval.DenseLeg
+        .Srp(prepareSrpIndexArtifact(s, d), emb).probe(q, k = 5)
       direct.as("a").join(art.as("b"),
           col("a.query_id") === col("b.query_id") &&
             col("a.rn") === col("b.rn"), "full_outer")

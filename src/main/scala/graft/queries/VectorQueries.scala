@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.operators.SimilaritySearch
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -195,12 +196,7 @@ object VectorQueries extends QueryPack {
         .join(norms.as("nt"), col("neighbor_id") === col("nt.vec_id"))
         .select(col("query_id"), col("neighbor_id"),
           (col("dot") / (sqrt(col("nq.norm2")) * sqrt(col("nt.norm2")))).as("cosine"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cosine").desc, col("neighbor_id"))
-      cos.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 5)
-        .select(col("query_id"), col("rn"), col("neighbor_id"), col("cosine"))
-        .orderBy(col("query_id"), col("rn"))
+      SimilaritySearch.topKPerQuery(cos, 5)
     },
     Some(s"""WITH lf AS ($LF_SQL), norms AS (
       SELECT vec_id, CAST(SUM(vq * vq) AS DOUBLE) AS norm2
@@ -289,7 +285,7 @@ object VectorQueries extends QueryPack {
   //      negatives, so the label anti-predicate rides the dot join and
   //      prunes before any aggregation). Same exact integer cosine as
   //      v_sim_cosine_top5; at scale the brute dot join swaps for the ANN
-  //      shortlist (hammingTopKAuto / ivfProbePqRefinedAuto) with the
+  //      shortlist (hammingHardNegatives / DenseLeg.PqRefined) with the
   //      label filter applied to the shortlist — this gate pins the exact
   //      semantics that shortlist path must reproduce ----
   private val hardNegatives = OracleQuery(
@@ -312,13 +308,7 @@ object VectorQueries extends QueryPack {
         .select(col("query_id"), col("neighbor_id"), col("neg_label"),
           (col("dot") / (sqrt(col("nq.norm2")) * sqrt(col("nt.norm2"))))
             .as("cosine"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cosine").desc, col("neighbor_id"))
-      cos.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 5)
-        .select(col("query_id"), col("rn"), col("neighbor_id"),
-          col("neg_label"), col("cosine"))
-        .orderBy(col("query_id"), col("rn"))
+      SimilaritySearch.topKPerQuery(cos, 5, "neg_label")
     },
     Some(s"""WITH lf AS ($LF_SQL), norms AS (
       SELECT vec_id, CAST(SUM(vq * vq) AS DOUBLE) AS norm2

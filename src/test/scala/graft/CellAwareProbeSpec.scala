@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.SimilaritySearch
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** The cell-aware filtered probe (r18, verdict item 4): the volume
@@ -40,6 +41,35 @@ class CellAwareProbeSpec extends SparkSpec {
   private def rows(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
 
+  // Spark jobs started while `f` runs. Listener events arrive in order,
+  // so a sentinel job before and after `f` brackets exactly its jobs.
+  private def jobsDuring(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val sentinel = "graft-spec-job-sentinel"
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val sentinels = new java.util.concurrent.Semaphore(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .exists(_.getProperty("spark.job.description") == sentinel))
+          sentinels.release()
+        else started.incrementAndGet()
+    }
+    def flush(): Unit = {
+      sc.setJobDescription(sentinel)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(sentinels.tryAcquire(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener never saw the sentinel job")
+    }
+    sc.addSparkListener(listener)
+    try {
+      flush(); started.set(0)
+      f
+      flush()
+      started.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("clustered tenant: the volume dial under-returns where the cell-aware probe is exact") {
     val allowed = tenant.select(col("vec_id"))
     val queries = base.filter(col("vec_id") < 5)
@@ -50,29 +80,38 @@ class CellAwareProbeSpec extends SparkSpec {
     // the query's npAuto nearest cells are all base-region cells — the
     // tenant's cells rank last by center distance — so the widened
     // volume probe still finds ZERO allowed candidates
-    val volume = SimilaritySearch.ivfProbeAmong(idx, queries, k = 5,
-      npAuto, allowed)
+    val volume = SimilaritySearch.ivfProbe(idx, queries, k = 5,
+      npAuto, allowed = Some(allowed))
     assert(volume.count() == 0,
       "expected the volume dial to miss the far clustered tenant " +
         "entirely (if this starts returning rows the construction " +
         "drifted, not the claim)")
     // the cell-aware auto probe goes where the tenant lives
-    val aware = SimilaritySearch.ivfProbeAmongAutoCellAware(idx, queries,
+    val aware = SimilaritySearch.ivfProbeCellAware(idx, queries,
       k = 5, allowed)
-    val want = SimilaritySearch.bruteForceTopKAmong(union, queries, 5,
-      allowed)
+    val want = SimilaritySearch.bruteForceTopK(union, queries, 5,
+      allowed = Some(allowed))
     assert(rows(aware).nonEmpty && rows(aware) == rows(want),
       "cell-aware probe diverged from the exact filtered ranking")
+    // with the selectivity given, the allowed-cell resolution is the only
+    // action at probe construction, and it runs ONCE
+    val oneResolution = jobsDuring(
+      SimilaritySearch.resolveAllowedCells(idx, allowed, "vec_id"))
+    val construction = jobsDuring(SimilaritySearch.ivfProbeCellAware(idx,
+      queries, k = 5, allowed, selectivity = Some(sel)))
+    assert(oneResolution > 0 && construction == oneResolution,
+      s"probe construction ran $construction jobs, one allowed-cell " +
+        s"resolution is $oneResolution")
   }
 
   test("exactness anchor: nprobe >= allowed-cell count reproduces filtered brute for any allowed shape") {
     val allowed = union.filter(col("vec_id") % 3 === 0)
       .select(col("vec_id"))
     val queries = base.filter(col("vec_id") < 5)
-    val aware = SimilaritySearch.ivfProbeAmongCellAware(idx, queries,
-      k = 5, nprobe = 32, allowed)
-    val want = SimilaritySearch.bruteForceTopKAmong(union, queries, 5,
-      allowed)
+    val aware = SimilaritySearch.ivfProbeCellAware(idx, queries,
+      k = 5, allowed, nprobe = Some(32))
+    val want = SimilaritySearch.bruteForceTopK(union, queries, 5,
+      allowed = Some(allowed))
     assert(rows(aware) == rows(want))
     // pre-filter semantics: nothing outside the allowed set ranked
     val got = aware.select(col("neighbor_id")).collect()
@@ -83,7 +122,7 @@ class CellAwareProbeSpec extends SparkSpec {
   test("empty allowed-intersection returns empty, not wrong") {
     val allowed = Seq(999999999L).toDF("vec_id")
     val queries = base.filter(col("vec_id") < 3)
-    assert(SimilaritySearch.ivfProbeAmongAutoCellAware(idx, queries,
+    assert(SimilaritySearch.ivfProbeCellAware(idx, queries,
       k = 5, allowed).count() == 0)
   }
 }

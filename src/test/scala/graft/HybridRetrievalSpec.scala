@@ -77,8 +77,8 @@ class HybridRetrievalSpec extends SparkSpec {
         sparseLeg = HybridRetrieval.SparseLeg.Ql(2000.0),
         legWeights = Some((0.7, 0.3)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val denseRanked = SimilaritySearch.ivfProbeAmongAuto(
-        denseIdx, qv, 30, allowed)
+    val denseRanked = HybridRetrieval.DenseLeg.Float32(denseIdx)
+        .probeAmong(qv, 30, allowed)
       .select($"neighbor_id".as("doc_id"), $"rn".as("rank"))
     val lexRanked = HybridRetrieval.rankLeg(
       InvertedIndex.qlTopKAmong(lexIdx, terms, 30, allowed,
@@ -262,8 +262,8 @@ class HybridRetrievalSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     // the hand-wired fusion it must equal: the tier's own filtered
     // probe + bm25TopKAmong, ranked and folded by the public pieces
-    val denseRanked = SimilaritySearch.ivfProbeInt8AmongAuto(
-        idx8, qv, 30, allowed)
+    val denseRanked = HybridRetrieval.DenseLeg.Int8(idx8)
+        .probeAmong(qv, 30, allowed)
       .select($"neighbor_id".as("doc_id"), $"rn".as("rank"))
     val lexRanked = HybridRetrieval.rankLeg(
       InvertedIndex.bm25TopKAmong(lexIdx, terms, 30, allowed,

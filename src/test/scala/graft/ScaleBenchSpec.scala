@@ -258,7 +258,9 @@ class ScaleBenchSpec extends SparkSpec {
     val truth = SimilaritySearch.bruteForceTopK(emb, queries, 5).persist()
     val sketched = SimilaritySearch.srpSketch(emb, bits = 128).persist()
     val rAuto = ScaleBench.recallAtK(truth,
-      SimilaritySearch.hammingTopKAuto(sketched, emb, queries, 5))
+      graft.operators.HybridRetrieval.DenseLeg.Srp(
+        SimilaritySearch.SrpIndex(sketched, n, 128, 42L), emb)
+        .probe(queries, 5))
     val rFixed = ScaleBench.recallAtK(truth,
       SimilaritySearch.hammingTopK(sketched, emb, queries, 5, refine = 8))
     // at the anchor, auto must reproduce the fixed dial exactly
@@ -277,8 +279,9 @@ class ScaleBenchSpec extends SparkSpec {
     val nprobe = ScaleBench.ivfScaleParams(n)._2
     val rPqFixed = ScaleBench.recallAtK(truth, SimilaritySearch
       .ivfProbePqRefined(pqIdx, emb, queries, 5, nprobe = nprobe, refine = 4))
-    val rPqAuto = ScaleBench.recallAtK(truth, SimilaritySearch
-      .ivfProbePqRefinedAuto(pqIdx, emb, queries, 5, nprobe = nprobe))
+    val rPqAuto = ScaleBench.recallAtK(truth,
+      graft.operators.HybridRetrieval.DenseLeg.PqRefined(pqIdx, emb)
+        .probe(queries, 5, Some(nprobe)))
     info(s"IVF-PQ at n=$n: fixed refine=4 recall $rPqFixed, auto recall $rPqAuto")
     assert(rPqAuto == rPqFixed, s"auto $rPqAuto != fixed $rPqFixed at the anchor")
     val rPqWide = ScaleBench.recallAtK(truth, SimilaritySearch

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.SimilaritySearch
+import graft.operators.HybridRetrieval.DenseLeg
 import org.apache.spark.sql.functions._
 
 class SimilaritySearchSpec extends SparkSpec {
@@ -25,8 +26,8 @@ class SimilaritySearchSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
       .sortBy(t => (t._1, t._2))
-    val brute = SimilaritySearch.bruteForceTopKAmong(
-      emb, queries, k = 5, allowed)
+    val brute = SimilaritySearch.bruteForceTopK(
+      emb, queries, k = 5, allowed = Some(allowed))
     val bruteRows = rows(brute)
     // every returned neighbor is allowed, k rows per query
     assert(bruteRows.forall(_._3 % 3 == 0))
@@ -40,12 +41,12 @@ class SimilaritySearchSpec extends SparkSpec {
     // probing EVERY cell makes the filtered IVF probe exact: ≡ brute
     val idx = SimilaritySearch.buildIvfIndex(emb, nlist = 8, seed = 42L,
       persist = false)
-    val ivf = SimilaritySearch.ivfProbeAmong(
-      idx, queries, k = 5, nprobe = 8, allowed)
+    val ivf = SimilaritySearch.ivfProbe(
+      idx, queries, k = 5, nprobe = 8, allowed = Some(allowed))
     assert(rows(ivf) == bruteRows)
     // allowed = everyone reduces to the unfiltered probe
-    val all = SimilaritySearch.ivfProbeAmong(
-      idx, queries, k = 5, nprobe = 8, emb.select(col("vec_id")))
+    val all = SimilaritySearch.ivfProbe(
+      idx, queries, k = 5, nprobe = 8, allowed = Some(emb.select(col("vec_id"))))
     assert(rows(all) ==
       rows(SimilaritySearch.ivfProbe(idx, queries, k = 5, nprobe = 8)))
   }
@@ -66,49 +67,52 @@ class SimilaritySearchSpec extends SparkSpec {
     // IVF-SQ8: all-cells filtered probe ≡ int8 brute over the allowed
     // corpus (identical scoring kernel, so cosines are bit-equal too)
     val idx8 = SimilaritySearch.buildIvfInt8Index(emb, nlist = 8)
-    val got8 = rows(SimilaritySearch.ivfProbeInt8Among(
-      idx8, queries, k = 5, nprobe = 8, allowed))
+    val got8 = rows(SimilaritySearch.ivfProbeInt8(
+      idx8, queries, k = 5, nprobe = 8, allowed = Some(allowed)))
     val want8 = rows(SimilaritySearch.int8BruteForceTopK(
       SimilaritySearch.quantizeInt8(emb)
         .join(allowed, Seq("vec_id"), "left_semi"), queries, k = 5))
     assert(got8.nonEmpty && got8 == want8)
     assert(got8.forall(_._3 % 3 == 0))
     // allowed = everyone reduces to the unfiltered probe
-    assert(rows(SimilaritySearch.ivfProbeInt8Among(
-        idx8, queries, k = 5, nprobe = 8, emb.select(col("vec_id")))) ==
+    assert(rows(SimilaritySearch.ivfProbeInt8(
+        idx8, queries, k = 5, nprobe = 8,
+        allowed = Some(emb.select(col("vec_id"))))) ==
       rows(SimilaritySearch.ivfProbeInt8(idx8, queries, k = 5, nprobe = 8)))
     idx8.unpersist()
 
     // IVF-PQ + refine: all cells + a shortlist wide enough for every
     // allowed candidate makes the exact re-rank the exact answer
-    // ≡ bruteForceTopKAmong (same cosineNative re-rank)
+    // ≡ the filtered bruteForceTopK (same cosineNative re-rank)
     val idxPq = SimilaritySearch.buildIvfPqIndex(emb, nlist = 4, m = 8,
       ksub = 16)
-    val wantBrute = rows(SimilaritySearch.bruteForceTopKAmong(
-      emb, queries, k = 5, allowed))
-    val gotPq = rows(SimilaritySearch.ivfProbePqRefinedAmong(
-      idxPq, emb, queries, k = 5, nprobe = 4, refine = n, allowed))
+    val wantBrute = rows(SimilaritySearch.bruteForceTopK(
+      emb, queries, k = 5, allowed = Some(allowed)))
+    val gotPq = rows(SimilaritySearch.ivfProbePqRefined(
+      idxPq, emb, queries, k = 5, nprobe = 4, refine = n,
+      allowed = Some(allowed)))
     assert(gotPq == wantBrute)
     // a NARROW filtered shortlist still returns k allowed rows per query
     // (pre-filter: disallowed candidates never occupy shortlist slots)
-    val narrowPq = rows(SimilaritySearch.ivfProbePqRefinedAmong(
-      idxPq, emb, queries, k = 5, nprobe = 4, refine = 2, allowed))
+    val narrowPq = rows(SimilaritySearch.ivfProbePqRefined(
+      idxPq, emb, queries, k = 5, nprobe = 4, refine = 2,
+      allowed = Some(allowed)))
     assert(narrowPq.length == 5 * 5 && narrowPq.forall(_._3 % 3 == 0))
     idxPq.unpersist()
 
     // SRP-Hamming: the allowed semi-join rides the scan; a full-width
     // shortlist makes the refined result exact ≡ filtered brute
     val sk = SimilaritySearch.srpSketch(emb, bits = 128)
-    val gotHam = rows(SimilaritySearch.hammingTopKAmong(
-      sk, emb, queries, k = 5, allowed, refine = n))
+    val gotHam = rows(SimilaritySearch.hammingTopK(
+      sk, emb, queries, k = 5, refine = n, allowed = Some(allowed)))
     assert(gotHam == wantBrute)
-    val narrowHam = rows(SimilaritySearch.hammingTopKAmong(
-      sk, emb, queries, k = 5, allowed, refine = 2))
+    val narrowHam = rows(SimilaritySearch.hammingTopK(
+      sk, emb, queries, k = 5, refine = 2, allowed = Some(allowed)))
     assert(narrowHam.length == 5 * 5 && narrowHam.forall(_._3 % 3 == 0))
   }
 
   test("filtered ANN recall recovers monotonically with nprobe (the dial)") {
-    // the ivfProbeAmong scaladoc's claim made measurable: under a
+    // the filtered ivfProbe scaladoc's claim made measurable: under a
     // selective filter the probed cells must hold enough allowed
     // vectors, so recall grows with nprobe and reaches exact at
     // nprobe = nlist
@@ -116,10 +120,11 @@ class SimilaritySearchSpec extends SparkSpec {
     val allowed = emb.filter(col("vec_id") % 3 === 0).select(col("vec_id"))
     val idx = SimilaritySearch.buildIvfIndex(emb, nlist = 16, seed = 7L,
       persist = false) // one-shot: keep the shared session cache clean
-    val truth = SimilaritySearch.bruteForceTopKAmong(
-      emb, queries, k = 5, allowed).persist()
+    val truth = SimilaritySearch.bruteForceTopK(
+      emb, queries, k = 5, allowed = Some(allowed)).persist()
     def recall(np: Int): Double = ScaleBench.recallAtK(truth,
-      SimilaritySearch.ivfProbeAmong(idx, queries, k = 5, np, allowed))
+      SimilaritySearch.ivfProbe(idx, queries, k = 5, np,
+        allowed = Some(allowed)))
     val (r1, r4, r16) = (recall(1), recall(4), recall(16))
     assert(r16 == 1.0, s"all-cells filtered probe must be exact, got $r16")
     assert(r4 >= r1 - 1e-9 && r16 >= r4 - 1e-9,
@@ -153,20 +158,20 @@ class SimilaritySearchSpec extends SparkSpec {
     val (nlist, npPolicy) = SimilaritySearch.ivfScaleParams(n)
     val idx = SimilaritySearch.buildIvfIndex(emb, nlist = nlist,
       persist = false)
-    val truth = SimilaritySearch.bruteForceTopKAmong(
-      emb, queries, k = 5, allowed).persist()
+    val truth = SimilaritySearch.bruteForceTopK(
+      emb, queries, k = 5, allowed = Some(allowed)).persist()
     val rFixed = ScaleBench.recallAtK(truth, SimilaritySearch
-      .ivfProbeAmong(idx, queries, k = 5, npPolicy, allowed))
+      .ivfProbe(idx, queries, k = 5, npPolicy, allowed = Some(allowed)))
     // derived selectivity (None): two bounded counts, then the cap dial
-    val auto = SimilaritySearch
-      .ivfProbeAmongAuto(idx, queries, k = 5, allowed)
+    val auto = DenseLeg.Float32(idx)
+      .probeAmong(queries, k = 5, allowed)
     val rAuto = ScaleBench.recallAtK(truth, auto)
     assert(rAuto >= rFixed - 1e-9, s"auto $rAuto < fixed $rFixed")
     assert(rAuto == 1.0,
       s"selective auto dial caps at nlist => exact, got $rAuto")
     // caller-supplied selectivity takes the same path with zero counts
-    val autoS = SimilaritySearch.ivfProbeAmongAuto(
-      idx, queries, k = 5, allowed, selectivity = Some(1.0 / 128))
+    val autoS = DenseLeg.Float32(idx).probeAmong(
+      queries, k = 5, allowed, selectivity = Some(1.0 / 128))
     assert(auto.collect().toSeq == autoS.collect().toSeq)
     // an ACL broader than the index (catalog-wide ids this shard never
     // held, plus duplicates) must read as ITS INTERSECTION's selectivity
@@ -175,8 +180,8 @@ class SimilaritySearchSpec extends SparkSpec {
     val bloated = allowed
       .unionAll(emb.select((col("vec_id") + 10000000L).as("vec_id")))
       .unionAll(allowed) // duplicates must not inflate the ratio either
-    val autoBloated = SimilaritySearch.ivfProbeAmongAuto(
-      idx, queries, k = 5, bloated)
+    val autoBloated = DenseLeg.Float32(idx).probeAmong(
+      queries, k = 5, bloated)
     // out-of-index ids can't match anything, so the result set equals the
     // selective probe's — and the derived dial must equal the capped one
     assert(autoBloated.collect().toSeq == autoS.collect().toSeq,
@@ -184,12 +189,12 @@ class SimilaritySearchSpec extends SparkSpec {
 
     // int8 twin: auto == the explicit probe at the policy-resolved dial
     val idx8 = SimilaritySearch.buildIvfInt8Index(emb, nlist = nlist)
-    val got8 = SimilaritySearch.ivfProbeInt8AmongAuto(
-        idx8, queries, k = 5, allowed, selectivity = Some(1.0 / 128))
+    val got8 = DenseLeg.Int8(idx8).probeAmong(
+        queries, k = 5, allowed, selectivity = Some(1.0 / 128))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
-    val want8 = SimilaritySearch.ivfProbeInt8Among(
+    val want8 = SimilaritySearch.ivfProbeInt8(
         idx8, queries, k = 5,
-        filteredNprobeParam(nlist, 1.0 / 128), allowed)
+        filteredNprobeParam(nlist, 1.0 / 128), allowed = Some(allowed))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
     assert(got8.nonEmpty && got8 == want8)
     idx8.unpersist()
@@ -210,35 +215,36 @@ class SimilaritySearchSpec extends SparkSpec {
     // derived selectivity ≈ 1/3 → ceil(policy 4 / s) caps at nlist = 8:
     // the ADC auto probe must equal the explicit all-cells probe
     assert(filteredNprobeParam(8, 167.0 / 500.0) == 8)
-    val gotAdc = ids(SimilaritySearch
-      .ivfProbePqAmongAuto(idx, queries, 5, allowed))
+    val gotAdc = ids(DenseLeg.Pq(idx).probeAmong(queries, 5, allowed))
     assert(gotAdc.nonEmpty && gotAdc == ids(SimilaritySearch
-      .ivfProbePqAmong(idx, queries, 5, nprobe = 8, allowed)))
+      .ivfProbePq(idx, queries, 5, nprobe = 8, allowed = Some(allowed))))
     // refined auto == the explicit composition (nprobe from the dial,
     // refine from the index's stamped n)
     val refine = SimilaritySearch.refineScaleParam(idx.n, base = 4)
-    val gotRef = full(SimilaritySearch
-      .ivfProbePqRefinedAmongAuto(idx, emb, queries, 5, allowed))
-    assert(gotRef == full(SimilaritySearch.ivfProbePqRefinedAmong(
-      idx, emb, queries, 5, nprobe = 8, refine, allowed)))
+    val gotRef = full(DenseLeg.PqRefined(idx, emb)
+      .probeAmong(queries, 5, allowed))
+    assert(gotRef == full(SimilaritySearch.ivfProbePqRefined(
+      idx, emb, queries, 5, nprobe = 8, refine, allowed = Some(allowed))))
     // FULL WIDTH: all cells probed + a shortlist covering every allowed
     // candidate ⇒ the exact re-rank IS the filtered brute ranking,
     // cosines included (pre-filter semantics proven end-to-end on the
     // compressed tier)
     val brute = full(SimilaritySearch
-      .bruteForceTopKAmong(emb, queries, 5, allowed))
-    assert(full(SimilaritySearch.ivfProbePqRefinedAmong(
-      idx, emb, queries, 5, nprobe = 8, refine = 200, allowed)) == brute)
+      .bruteForceTopK(emb, queries, 5, allowed = Some(allowed)))
+    assert(full(SimilaritySearch.ivfProbePqRefined(
+      idx, emb, queries, 5, nprobe = 8, refine = 200,
+      allowed = Some(allowed))) == brute)
     // the auto composition's recall sits at/above the fixed policy's
     // (measured on this corpus; the volume-conservation dial at work)
     def recall(df: org.apache.spark.sql.DataFrame) = {
       val b = brute.map(t => (t._1, t._3)).toSet
       ids(df).count(t => b.contains((t._1, t._3))).toDouble / brute.size
     }
-    val rFixed = recall(SimilaritySearch.ivfProbePqRefinedAmong(
-      idx, emb, queries, 5, SimilaritySearch.policyNprobe(8), 4, allowed))
-    val rAuto = recall(SimilaritySearch
-      .ivfProbePqRefinedAmongAuto(idx, emb, queries, 5, allowed))
+    val rFixed = recall(SimilaritySearch.ivfProbePqRefined(
+      idx, emb, queries, 5, SimilaritySearch.policyNprobe(8), 4,
+      allowed = Some(allowed)))
+    val rAuto = recall(DenseLeg.PqRefined(idx, emb)
+      .probeAmong(queries, 5, allowed))
     assert(rAuto >= rFixed - 1e-9, s"auto $rAuto < fixed $rFixed")
     idx.unpersist()
   }
@@ -383,21 +389,6 @@ class SimilaritySearchSpec extends SparkSpec {
         numTables = 16, bitsPerTable = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(auto == manual)
-  }
-
-  test("ivfTopKAuto applies the scale policy and matches explicit params") {
-    val emb = Tables.embeddings(spark, sf001)
-      .select(col("vec_id"), col("embedding"))
-    val n = emb.count()
-    val (nlist, nprobe) = SimilaritySearch.ivfScaleParams(n)
-    // same frozen seed -> same KMeans -> identical rankings
-    val qs = emb.orderBy(col("vec_id")).limit(5)
-    val auto = SimilaritySearch.ivfTopKAuto(emb, qs, k = 3)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
-    val explicit = SimilaritySearch
-      .ivfTopK(emb, qs, k = 3, nlist = nlist, nprobe = nprobe)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
-    assert(auto == explicit)
   }
 
   test("ANN retrieval QUALITY: recall@5 vs brute force on sf0.01, documented bounds") {
@@ -688,7 +679,7 @@ class SimilaritySearchSpec extends SparkSpec {
     val queries = emb.filter(col("vec_id") < 10)
     val idx = SimilaritySearch.buildSrpIndex(emb, bits = 128, seed = 7L)
     assert(idx.n == emb.count() && idx.bits == 128 && idx.seed == 7L)
-    val before = SimilaritySearch.hammingTopKAuto(idx, emb, queries, 5)
+    val before = DenseLeg.Srp(idx, emb).probe(queries, 5)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
     val dir = java.nio.file.Files.createTempDirectory("graft-srp-idx").toString
     SimilaritySearch.saveSrpIndex(idx, dir)
@@ -696,7 +687,7 @@ class SimilaritySearchSpec extends SparkSpec {
     val loaded = SimilaritySearch.loadSrpIndex(spark, dir)
     assert((loaded.n, loaded.bits, loaded.seed) == ((idx.n, 128, 7L)),
       "SRP metadata lost across save/load")
-    val after = SimilaritySearch.hammingTopKAuto(loaded, emb, queries, 5)
+    val after = DenseLeg.Srp(loaded, emb).probe(queries, 5)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
     loaded.unpersist()
     assert(before.nonEmpty && before == after,
@@ -721,11 +712,14 @@ class SimilaritySearchSpec extends SparkSpec {
     val poisoned = emb.filter(boom(col("vec_id")))
     val queries = emb.filter(col("vec_id") < 10)
     val srp = SimilaritySearch.buildSrpIndex(emb)
-    SimilaritySearch.hammingTopKAuto(srp, poisoned, queries, 5) // lazy: ok
-    SimilaritySearch.hammingHardNegativesAuto(srp, poisoned, queries, 5) // lazy: ok
-    // the auto miner equals the explicit-dial miner at the policy width
+    DenseLeg.Srp(srp, poisoned).probe(queries, 5) // lazy: ok
+    // the miner's √n shortlist width comes from the index metadata too
     val refine = SimilaritySearch.refineScaleParam(srp.n, base = 8)
-    val a = SimilaritySearch.hammingHardNegativesAuto(srp, emb, queries, 5)
+    SimilaritySearch.hammingHardNegatives(srp.sketched, poisoned, queries, 5,
+      refine, srp.bits, srp.seed) // lazy: ok
+    // the index-resolved miner equals the explicit-dial miner
+    val a = SimilaritySearch.hammingHardNegatives(srp.sketched, emb, queries,
+        5, refine, srp.bits, srp.seed)
       .collect().map(_.toString).sorted.toSeq
     val b = SimilaritySearch.hammingHardNegatives(
         srp.sketched, emb, queries, 5, refine)
@@ -733,14 +727,35 @@ class SimilaritySearchSpec extends SparkSpec {
     assert(a.nonEmpty && a == b)
     val pq = SimilaritySearch.buildIvfPqIndex(emb, nlist = 4, m = 8, ksub = 16)
     assert(pq.n == emb.count())
-    SimilaritySearch.ivfProbePqRefinedAuto(pq, poisoned, queries, 5) // lazy: ok
+    DenseLeg.PqRefined(pq, poisoned).probe(queries, 5) // lazy: ok
     // a hand-assembled PQ index without metadata falls back to counting
     val bare = pq.copy(n = -1L)
     val ex = intercept[Exception] {
-      SimilaritySearch.ivfProbePqRefinedAuto(bare, poisoned, queries, 5)
+      DenseLeg.PqRefined(bare, poisoned).probe(queries, 5)
     }
     assert(ex.getMessage != null)
     pq.unpersist(); srp.unpersist()
+  }
+
+  test("PqRefined leg over an index without a stamped n counts the corpus once, filtered or not") {
+    // the fallback count is a full-corpus driver action: a leg resolves
+    // it at most once, however many filtered probes it serves. Every
+    // corpus evaluation ticks the accumulator once per row, so one count
+    // adds exactly n.
+    val rowsSeen = spark.sparkContext.longAccumulator("pq_leg_corpus_rows")
+    val tick = udf { (_: Long) => rowsSeen.add(1L); true }
+      .asNondeterministic()
+    val counted = emb.filter(tick(col("vec_id")))
+    val n = emb.count()
+    val queries = emb.filter(col("vec_id") < 5)
+    val allowed = emb.filter(col("vec_id") % 3 === 0).select(col("vec_id"))
+    val pq = SimilaritySearch.buildIvfPqIndex(emb, nlist = 4, m = 8, ksub = 16)
+    val leg = DenseLeg.PqRefined(pq.copy(n = -1L), counted)
+    leg.probeAmong(queries, 5, allowed, selectivity = Some(1.0 / 3))
+    leg.probeAmong(queries, 5, allowed, selectivity = Some(1.0 / 3))
+    assert(rowsSeen.value == n,
+      s"corpus rows evaluated at construction: ${rowsSeen.value}, want one count ($n)")
+    pq.unpersist()
   }
 
   test("ANN delete lifecycle: tombstoned loads equal survivor indexes; compact folds exactly") {
@@ -824,16 +839,16 @@ class SimilaritySearchSpec extends SparkSpec {
     val pqDir = java.nio.file.Files
       .createTempDirectory("graft-ann-del-pq").toString
     SimilaritySearch.saveIvfPqIndex(pq, pqDir)
-    val pqWant = probeRows(SimilaritySearch.ivfProbePqRefinedAuto(
+    val pqWant = probeRows(DenseLeg.PqRefined(
       pq.copy(assigned =
         pq.assigned.filter(!col("neighbor_id").isin(dead: _*)), n = nSurv),
-      survivors, queries, 5))
+      survivors).probe(queries, 5))
     checkFamily("pq", pqDir,
       () => {
         val l = SimilaritySearch.loadIvfPqIndex(spark, pqDir, persist = false)
         assert(l.n == nSurv, s"pq: n=${l.n}, want survivors $nSurv")
         // the re-rank corpus a deployment serves is also takedown-filtered
-        SimilaritySearch.ivfProbePqRefinedAuto(l, survivors, queries, 5)
+        DenseLeg.PqRefined(l, survivors).probe(queries, 5)
       },
       pqWant, nSurv, "assigned")
     pq.unpersist()
@@ -853,7 +868,7 @@ class SimilaritySearchSpec extends SparkSpec {
       () => {
         val l = SimilaritySearch.loadSrpIndex(spark, srpDir, persist = false)
         assert(l.n == nSurv, s"srp: n=${l.n}, want survivors $nSurv")
-        SimilaritySearch.hammingTopKAuto(l, survivors, queries, 5)
+        DenseLeg.Srp(l, survivors).probe(queries, 5)
       },
       srpWant, nSurv, "sketch")
     srp.unpersist()

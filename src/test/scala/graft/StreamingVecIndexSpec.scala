@@ -258,7 +258,8 @@ class StreamingVecIndexSpec extends SparkSpec {
     }
     def probeS(idx: SimilaritySearch.SrpIndex,
         corpus: org.apache.spark.sql.DataFrame) =
-      SimilaritySearch.hammingTopKAuto(idx, corpus, queries, k = 5)
+      graft.operators.HybridRetrieval.DenseLeg.Srp(idx, corpus)
+        .probe(queries, k = 5)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
     // reference: the batch build under the same (bits, seed) family —
     // sketching is row-local and deterministic, so streamed ≡ built

@@ -78,11 +78,15 @@ object Bench {
         selected.contains("vx_hybrid_rrf_batch_parity") ||
         selected.contains("vx_hybrid_rrf_weighted_ql_quantized") ||
         selected.contains("vx_hybrid_rrf_3leg_quantized") ||
-        selected.contains("vx_hybrid_rrf_positional_quantized")) {
+        selected.contains("vx_hybrid_rrf_positional_quantized") ||
+        selected.contains("vx_ann_auto_filtered_quantized") ||
+        selected.contains("vx_retrieval_eval_ndcg") ||
+        selected.contains("vx_cluster_balanced_sample")) {
       graft.queries.EngineQueries.prepareIvfIndex(spark, sfDir); ()
     }
     build("minhash_sigs", selected.exists(e =>
-        e._1 == "tx_dedup_minhash_pairs" || e._1 == "tx_dedup_canonical")) {
+        e._1 == "tx_dedup_minhash_pairs" || e._1 == "tx_dedup_canonical" ||
+        e._1 == "tx_stream_neardup_hits")) {
       graft.queries.EngineQueries.prepareMinhashSigs(spark, sfDir); ()
     }
     build("int8_corpus", selected.contains("vx_ann_int8_top5")) {
@@ -92,7 +96,8 @@ object Bench {
       graft.queries.EngineQueries.prepareIvfInt8Index(spark, sfDir); ()
     }
     build("ivf_pq_index", selected.contains("vx_ann_ivf_pq_top5") ||
-        selected.contains("vx_stream_ann_pq_parity")) {
+        selected.contains("vx_stream_ann_pq_parity") ||
+        selected.contains("vx_ann_ivfpq_artifact_parity")) {
       graft.queries.EngineQueries.prepareIvfPqIndex(spark, sfDir); ()
     }
     build("hybrid_pq_index",
@@ -120,14 +125,16 @@ object Bench {
       graft.queries.EngineQueries.prepareSemDedupCenters(spark, sfDir); ()
     }
     build("bench_grams", selected.exists(e =>
-        e._1 == "tx_curation_funnel" || e._1 == "t_curation_by_source")) {
+        e._1 == "tx_curation_funnel" || e._1 == "t_curation_by_source" ||
+        e._1 == "tx_stream_decontaminate")) {
       graft.queries.EngineQueries.prepareBenchGrams(spark, sfDir); ()
     }
     build("lm_bigram_model", selected.contains("t_lm_quality_score")) {
       graft.queries.TextQueries.prepareLmModel(spark, sfDir); ()
     }
     build("bpe_merges", selected.exists(e =>
-        e._1 == "t_bpe_merges" || e._1 == "t_bpe_tokenize_stats")) {
+        e._1 == "t_bpe_merges" || e._1 == "t_bpe_tokenize_stats" ||
+        e._1 == "t_chunk_bpe_windows")) {
       graft.queries.TextQueries.prepareBpeMerges(spark, sfDir); ()
     }
     build("lex_index", selected.exists(e =>
@@ -143,8 +150,8 @@ object Bench {
         e._1 == "t_bm25_wand_topk" || e._1 == "t_bm25_filtered_topk" ||
         e._1 == "t_bm25_batch_wand_topk" ||
         e._1 == "t_spell_suggest" || e._1 == "t_spell_suggest_filtered" ||
-        e._1 == "t_ql_topk" ||
-        e._1 == "t_ql_batch_topk" ||
+        e._1 == "t_ql_topk" || e._1 == "t_ql_filtered_topk" ||
+        e._1 == "t_ql_batch_topk" || e._1 == "t_bm25_batch_wand_filtered" ||
         e._1 == "t_lex_index_stats" || e._1 == "t_lex_facet_counts" ||
         e._1 == "t_lex_facet_counts_filtered")) {
       graft.queries.TextQueries.prepareLexIndex(spark, sfDir); ()
@@ -154,6 +161,7 @@ object Bench {
     }
     build("lex_index_pos", selected.exists(e =>
         e._1 == "t_phrase_search_topk" || e._1 == "t_phrase_snippets" ||
+        e._1 == "t_phrase_filtered_topk" ||
         e._1 == "t_phrase_snippets_filtered" ||
         e._1 == "t_proximity_search_topk" ||
         e._1 == "t_phrase_batch_topk" ||

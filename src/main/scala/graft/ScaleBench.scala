@@ -1086,12 +1086,8 @@ object ScaleBench {
           .select(col("vec_id"), col("embedding"))
         val (nlist, nprobe) =
           graft.operators.SimilaritySearch.ivfScaleParams(emb.count())
-        // Serial pinned (r19 default flip): the committed BASELINE
-        // recall/probe rows were measured under serial geometry; the
-        // distributed default is priced by the drift grid's ivf_dist row
         val idx = graft.operators.SimilaritySearch
-          .buildIvfIndex(emb, nlist = nlist,
-            trainer = graft.operators.SimilaritySearch.CoarseTrainer.Serial)
+          .buildIvfIndex(emb, nlist = nlist)
         idx.assigned.count()
         embIvfIdx(dir) = (idx, nprobe)
       }
@@ -1106,8 +1102,7 @@ object ScaleBench {
         val (nlist, nprobe) =
           graft.operators.SimilaritySearch.ivfScaleParams(emb.count())
         val idx = graft.operators.SimilaritySearch
-          .buildIvfInt8Index(emb, nlist = nlist, // Serial: committed-row geometry
-            trainer = graft.operators.SimilaritySearch.CoarseTrainer.Serial)
+          .buildIvfInt8Index(emb, nlist = nlist)
         idx.assigned.count()
         embInt8Idx(dir) = (idx, nprobe)
       }
@@ -1126,8 +1121,7 @@ object ScaleBench {
         val (nlist, _) =
           graft.operators.SimilaritySearch.ivfScaleParams(emb.count())
         val idx = graft.operators.SimilaritySearch
-          .buildIvfPqIndex(emb, nlist = nlist, m = 8, ksub = 64, // Serial: committed-row geometry
-            trainer = graft.operators.SimilaritySearch.CoarseTrainer.Serial)
+          .buildIvfPqIndex(emb, nlist = nlist, m = 8, ksub = 64)
         idx.assigned.count()
         embPqIdx(dir) = idx
       }
@@ -1218,8 +1212,7 @@ object ScaleBench {
         // filesystem COPY for the tombstoned clone — a second save from
         // a non-persisted index would re-run the full-corpus assignment
         val idx = graft.operators.SimilaritySearch
-          .buildIvfIndex(emb, nlist = nlist, persist = true, // Serial: committed-row geometry
-            trainer = graft.operators.SimilaritySearch.CoarseTrainer.Serial)
+          .buildIvfIndex(emb, nlist = nlist, persist = true)
         def freshDir(): String = {
           val tmp = java.nio.file.Files
             .createTempDirectory("graft-scale-ivfart").toString
@@ -1270,9 +1263,7 @@ object ScaleBench {
           graft.operators.SimilaritySearch.ivfScaleParams(emb.count())
         StreamingVecIndex.freezeCenters(spark, tmp,
           graft.operators.SimilaritySearch
-            .buildIvfIndex(emb, nlist = nlist, persist = false, // Serial: committed-row geometry
-              trainer = graft.operators.SimilaritySearch.CoarseTrainer.Serial)
-            .centers)
+            .buildIvfIndex(emb, nlist = nlist, persist = false).centers)
         vecSegDirs(dir) = tmp
         tmp
       }
@@ -1321,9 +1312,7 @@ object ScaleBench {
         scratchDirs += tmp
         graft.operators.SimilaritySearch.saveIvfIndex(
           graft.operators.SimilaritySearch.buildIvfIndex(emb, nlist, 42L,
-            "cid", "embedding", persist = false, // Serial: committed-row geometry
-            trainer = graft.operators.SimilaritySearch.CoarseTrainer.Serial),
-          tmp)
+            "cid", "embedding", persist = false), tmp)
         ragIvfIdx(dir) =
           (graft.operators.SimilaritySearch.loadIvfIndex(spark, tmp), nprobe)
       }
@@ -1456,8 +1445,7 @@ object ScaleBench {
 
           var ivfIdx: SimilaritySearch.IvfIndex = null
           val tIvfBuild = timeIt {
-            ivfIdx = SimilaritySearch.buildIvfIndex(emb, nlist = nlist,
-              trainer = SimilaritySearch.CoarseTrainer.Serial) // committed-row geometry
+            ivfIdx = SimilaritySearch.buildIvfIndex(emb, nlist = nlist)
             ivfIdx.assigned.count(); ()
           }
           var ivfProbe: DataFrame = null
@@ -1470,8 +1458,7 @@ object ScaleBench {
 
           var pqIdx: SimilaritySearch.IvfPqIndex = null
           val tPqBuild = timeIt {
-            pqIdx = SimilaritySearch.buildIvfPqIndex(emb, nlist = nlist,
-              trainer = SimilaritySearch.CoarseTrainer.Serial) // committed-row geometry
+            pqIdx = SimilaritySearch.buildIvfPqIndex(emb, nlist = nlist)
             pqIdx.assigned.count(); ()
           }
           var pqProbe: DataFrame = null
@@ -1566,8 +1553,7 @@ object ScaleBench {
           val truth = plantedTruth(queries, K)
           val (nlist, nprobe) = ivfScaleParams(n)
 
-          val ivfIdx = SimilaritySearch.buildIvfIndex(corpus, nlist = nlist,
-            trainer = SimilaritySearch.CoarseTrainer.Serial) // committed-row geometry
+          val ivfIdx = SimilaritySearch.buildIvfIndex(corpus, nlist = nlist)
           ivfIdx.assigned.count()
           var probeDf: DataFrame = null
           val tIvf = timeIt {
@@ -1587,8 +1573,7 @@ object ScaleBench {
           }
           val rSrp = recallAtK(truth, srpDf)
 
-          val pqIdx = SimilaritySearch.buildIvfPqIndex(corpus, nlist = nlist,
-            trainer = SimilaritySearch.CoarseTrainer.Serial) // committed-row geometry
+          val pqIdx = SimilaritySearch.buildIvfPqIndex(corpus, nlist = nlist)
           pqIdx.assigned.count()
           var pqDf: DataFrame = null
           val tPq = timeIt {
@@ -1990,7 +1975,7 @@ object ScaleBench {
     // retrains twice: coarse-only (frozen codebook — repairs cell
     // geometry alone) then retrainCodebook=true (the full repair), so
     // the grid shows WHICH quantizer's drift cost the recall.
-    var driftRetrainSmall: (Double, Double, Double) = (0.0, 0.0, 0.0)
+    var driftRetrainSmall: (Double, Double) = (0.0, 0.0)
     var driftRebalanceSmall: Double = 0.0
     val driftJson: Option[String] =
       if (!familySelected("ann_drift_retrain")) None
@@ -2029,8 +2014,7 @@ object ScaleBench {
           val fDir = freshDir("ivf")
           val pDir = freshDir("pq")
           val centers = SimilaritySearch
-            .buildIvfIndex(emb0, nlist, persist = false, // Serial: decay waves comparable to the r17 grid
-              trainer = SimilaritySearch.CoarseTrainer.Serial).centers
+            .buildIvfIndex(emb0, nlist, persist = false).centers
           StreamingVecIndex.freezeCenters(spark, fDir, centers)
           StreamingVecIndex.freezePq(spark, pDir, centers,
             SimilaritySearch.trainPqCodebook(emb0))
@@ -2089,30 +2073,11 @@ object ScaleBench {
           truth4.count()
           val fOut = freshDir("ivf-fold")
           StreamingVecIndex.compactTo(spark, fDir, fOut)
-          val tRetrainF = timeIt { // the SERIAL retrain row (e = 1.05 baseline)
-            SimilaritySearch.retrainIvf(spark, fOut, nlist = nlist,
-              trainer = SimilaritySearch.CoarseTrainer.Serial)
-          }
-          var fProbe2: DataFrame = null
-          val tF2 = timeIt {
-            fProbe2 = SimilaritySearch.ivfProbe(
-              SimilaritySearch.loadIvfIndex(spark, fOut, persist = false),
-              lastQueries, K, nprobe).persist()
-            fProbe2.count(); ()
-          }
-          val rF2 = recallAtK(truth4, fProbe2)
-          val skew2 = SimilaritySearch.ivfSkewReport(spark, fOut).skew
-          // the distributed-trainer repair on the SAME folded artifact
-          // (live rows are invariant under retrain, so this re-prices
-          // the identical workload): the serial path is k-means-
-          // dominated at the √n nlist policy — measured e = 1.05, the
-          // engine's only >1 family exponent (r17 verdict item 1); the
-          // distributed trainer folds order-free quantized integer
-          // sums across every core, so its exponent should land at the
+          // the trainer folds order-free quantized integer sums across
+          // every core, so the retrain's exponent should land at the
           // map-only re-assign's level
           val tRetrainFd = timeIt {
-            SimilaritySearch.retrainIvf(spark, fOut, nlist = nlist,
-              trainer = SimilaritySearch.CoarseTrainer.Distributed())
+            SimilaritySearch.retrainIvf(spark, fOut, nlist = nlist)
           }
           var fProbeD: DataFrame = null
           val tF2d = timeIt {
@@ -2152,9 +2117,8 @@ object ScaleBench {
             s"(${fmt(tRebalance)}s) recall=${fmt(rFr)}")
           val pOut = freshDir("pq-fold")
           StreamingVecIndex.compactToPq(spark, pDir, pOut)
-          val tRetrainPc = timeIt { // Serial: the r17-committed pq_coarse row
-            SimilaritySearch.retrainIvfPq(spark, pOut, live, nlist = nlist,
-              trainer = SimilaritySearch.CoarseTrainer.Serial)
+          val tRetrainPc = timeIt {
+            SimilaritySearch.retrainIvfPq(spark, pOut, live, nlist = nlist)
           }
           var pProbeC: DataFrame = null
           val tPc = timeIt {
@@ -2164,10 +2128,9 @@ object ScaleBench {
             pProbeC.count(); ()
           }
           val rPc = recallAtK(truth4, pProbeC)
-          val tRetrainPf = timeIt { // Serial: the r17-committed pq_full row
+          val tRetrainPf = timeIt {
             SimilaritySearch.retrainIvfPq(spark, pOut, live, nlist = nlist,
-              retrainCodebook = true,
-              trainer = SimilaritySearch.CoarseTrainer.Serial)
+              retrainCodebook = true)
           }
           var pProbeF: DataFrame = null
           val tPf = timeIt {
@@ -2177,27 +2140,24 @@ object ScaleBench {
             pProbeF.count(); ()
           }
           val rPf = recallAtK(truth4, pProbeF)
-          println(s"SCALEDRIFT $tag retrain ivf=${fmt(rF2)} " +
-            s"(retrain ${fmt(tRetrainF)}s, skew ${fmt(skew2)}) " +
+          println(s"SCALEDRIFT $tag retrain " +
             s"ivf_dist=${fmt(rF2d)} (retrain ${fmt(tRetrainFd)}s, " +
             s"skew ${fmt(skew2d)}) " +
             s"pq_coarse=${fmt(rPc)} (retrain ${fmt(tRetrainPc)}s) " +
             s"pq_full=${fmt(rPf)} (retrain ${fmt(tRetrainPf)}s)")
           if (tag == "small") {
-            driftRetrainSmall = (tRetrainF, tRetrainPf, tRetrainFd)
+            driftRetrainSmall = (tRetrainPf, tRetrainFd)
             driftRebalanceSmall = tRebalance
           } else {
-            builds("ann_retrain_ivf") = (driftRetrainSmall._1, tRetrainF)
-            builds("ann_retrain_pq_full") = (driftRetrainSmall._2, tRetrainPf)
-            builds("ann_retrain_ivf_dist") = (driftRetrainSmall._3, tRetrainFd)
+            builds("ann_retrain_pq_full") = (driftRetrainSmall._1, tRetrainPf)
+            builds("ann_retrain_ivf_dist") = (driftRetrainSmall._2, tRetrainFd)
             builds("ann_rebalance_cells") = (driftRebalanceSmall, tRebalance)
           }
-          (Seq(fProbe2, fProbeD, fProbeR, pProbeC, pProbeF, truth4,
+          (Seq(fProbeD, fProbeR, pProbeC, pProbeF, truth4,
             lastQueries) ++ cached).foreach(_.unpersist())
           s""""$tag":{"n_final":${2 * n0},"nlist":$nlist,"nprobe":$nprobe,""" +
             s""""waves":[${waveParts.mkString(",")}],""" +
             s""""retrain":{""" +
-            s""""ivf":{"retrain_sec":${fmt(tRetrainF)},"skew":${fmt(skew2)},"recall":${fmt(rF2)},"probe_sec":${fmt(tF2)}},""" +
             s""""ivf_dist":{"retrain_sec":${fmt(tRetrainFd)},"skew":${fmt(skew2d)},"recall":${fmt(rF2d)},"probe_sec":${fmt(tF2d)}},""" +
             s""""rebalance":{"sec":${fmt(tRebalance)},"skew_before":${fmt(rebReport.skewBefore)},"skew_after":${fmt(rebReport.skewAfter)},"rows_rewritten":${rebReport.rowsRewritten},"total_rows":${rebReport.totalRows},"recall":${fmt(rFr)},"probe_sec":${fmt(tFr)}},""" +
             s""""pq_coarse":{"retrain_sec":${fmt(tRetrainPc)},"recall":${fmt(rPc)},"probe_sec":${fmt(tPc)}},""" +

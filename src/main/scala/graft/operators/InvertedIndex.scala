@@ -518,14 +518,17 @@ object InvertedIndex {
     * hash buckets reach the scan as a partition filter (the build-side
     * bucketing expression replayed exactly) — ONE definition shared by
     * all six probe entry points, so a pruning-convention change cannot
-    * desynchronize them.
+    * desynchronize them. The bucket list is SORTED: the `IN (…)` it
+    * prints into the plan is then a function of the term SET, never of
+    * the term order or of the collect's arrival order.
     */
   private def prunedPostings(idx: LexIndex, terms: Seq[String]): DataFrame = {
     val spark = idx.postings.sparkSession
     import spark.implicits._
     val buckets = terms.distinct.toDF("term")
       .withColumn("bucket", bucketOf(col("term")))
-      .select(col("bucket")).distinct().collect().map(_.getInt(0)).toSeq
+      .select(col("bucket")).distinct().collect().map(_.getInt(0)).sorted
+      .toSeq
     idx.postings.filter(col("bucket").isin(buckets: _*))
   }
 
@@ -1598,7 +1601,7 @@ object InvertedIndex {
     val cand = suggestCandidates(idx, queries)
       .select(col("query"), col("term"), col("dist"))
     val terms = cand.select(col("term")).distinct()
-      .as[String].collect().toSeq
+      .as[String].collect().sorted.toSeq
     if (terms.isEmpty) return suggestRank(cand.withColumn("df", lit(0L)), k)
     val adf = prunedPostings(idx, terms)
       .join(broadcast(terms.toDF("term")), Seq("term"))

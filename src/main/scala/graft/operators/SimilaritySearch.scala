@@ -1,8 +1,6 @@
 package graft.operators
 
 import graft.functions.VecOps
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -214,67 +212,6 @@ object SimilaritySearch {
     s
   }
 
-  /** The coarse-quantizer training strategy — the one piece of the IVF
-    * build whose cost is NOT map-only (r18, verdict item 1).
-    *
-    *  - [[CoarseTrainer.Serial]] (the pre-r18 behavior): MLlib
-    *    KMeans on the hash-ordered TakeOrdered sample. The sample lands
-    *    in ONE partition, which is deliberately why retrain ≡ rebuild is
-    *    bit-exact — but it also makes every build/retrain at the √n
-    *    nlist policy single-threaded-k-means-dominated (measured
-    *    e = 1.05, 739 s at ×100 in BASELINE's ann_retrain_ivf row).
-    *  - [[CoarseTrainer.Distributed]]: Lloyd iterations whose per-cell
-    *    accumulators are QUANTIZED INTEGER SUMS (floor(v·10⁶) longs —
-    *    the engine-wide exact-arithmetic convention). Integer sums are
-    *    order-free and merge-combinable, so the rounds run as map-side-
-    *    combined partial aggregations across every core, yet the final
-    *    centroids — one IEEE division of exact longs per dim — are
-    *    bit-identical under ANY partitioning of the sample. Same
-    *    deterministic sample, deterministic first-k-distinct init,
-    *    fixed iteration count: retrain ≡ rebuild stays bit-exact WITHIN
-    *    the distributed family (spec- and gate-pinned), without the
-    *    single partition. The two trainers produce different (both
-    *    valid) geometries — an artifact keeps the family it was built
-    *    with across retrains, or accepts a one-time geometry change.
-    *
-    * DEFAULT POLICY (r19, verdict item 2): [[CoarseTrainer.Distributed]]
-    * is the default for every build/retrain/epoch-rotation verb — NEW
-    * artifacts train on every core (the 100 TB path; measured beside the
-    * serial row in BASELINE.md's drift grid). [[CoarseTrainer.Serial]]
-    * remains available, and callers MUST pin it where an EXISTING
-    * artifact's geometry continuity demands it: retraining a
-    * serial-built artifact under the distributed default is a one-time
-    * geometry change (cell ids/membership shift; probe results stay
-    * exact over the probed cells, but parity-vs-rebuild only holds
-    * within one family). Gates whose published results pin serial
-    * geometry pass Serial explicitly.
-    */
-  sealed trait CoarseTrainer
-  object CoarseTrainer {
-    case object Serial extends CoarseTrainer
-    final case class Distributed(iters: Int = 10) extends CoarseTrainer
-    /** The engine-wide default for new artifacts (see DEFAULT POLICY). */
-    val Default: CoarseTrainer = Distributed()
-  }
-
-  /** The distributed deterministic Lloyd trainer (see
-    * [[CoarseTrainer.Distributed]]). Works in the floor(v·10⁶) quantized
-    * integer space end-to-end: points are Long vectors, per-cell
-    * accumulators are (Σq, count) Long sums folded per partition and
-    * reduced (associative + commutative → partitioning-independent; the
-    * same fold runs driver-local under [[LocalTrainOpsBudgetKey]]), and each
-    * round's centroid view is the exact ratio Σq/count evaluated once in
-    * IEEE double (deterministic for fixed operands). Assignment per point
-    * scans centers in index order with strict `<`, so distance ties keep
-    * the lowest index — deterministic. Empty cells keep their previous
-    * centroid (the [[trainPqCodebook]] convention). Returned centers are
-    * divided back to the original embedding space.
-    *
-    * Overflow headroom: |floor(v·10⁶)| ≤ ~10⁹ for any sane embedding and
-    * the per-cell sum folds ≤ trainSample rows, so Σq stays ≤ ~10¹⁴ ≪
-    * 2⁶³; the squared-distance accumulation runs in double (exact inputs,
-    * fixed order).
-    */
   /** Session conf key bounding the LOCAL Lloyd fast path inside
     * [[trainCentersDistributed]]: when the counted sample's per-round
     * work (nPts × k × dim distance ops) is at or under this budget, the
@@ -336,6 +273,32 @@ object SimilaritySearch {
         Array.tabulate(dim)(i => sums(ci)(i).toDouble / counts(ci))
       else prev(ci))
 
+  /** The coarse quantizer's trainer — the one piece of the IVF build
+    * whose cost is NOT map-only, and the only one every build, retrain
+    * and epoch rotation uses. Deterministic Lloyd rounds whose per-cell
+    * accumulators are QUANTIZED INTEGER SUMS (floor(v·10⁶) longs — the
+    * engine-wide exact-arithmetic convention): integer sums are
+    * order-free and merge-combinable, so the rounds run as map-side-
+    * combined partial aggregations across every core, yet the centroids
+    * are bit-identical under ANY partitioning of the sample — which is
+    * what keeps retrain ≡ rebuild bit-exact (spec- and gate-pinned).
+    *
+    * Points are Long vectors end-to-end, per-cell accumulators are
+    * (Σq, count) Long sums folded per partition and reduced (associative
+    * + commutative → partitioning-independent; the same fold runs
+    * driver-local under [[LocalTrainOpsBudgetKey]]), and each round's
+    * centroid view is the exact ratio Σq/count evaluated once in
+    * IEEE double (deterministic for fixed operands). Assignment per point
+    * scans centers in index order with strict `<`, so distance ties keep
+    * the lowest index — deterministic. Empty cells keep their previous
+    * centroid (the [[trainPqCodebook]] convention). Returned centers are
+    * divided back to the original embedding space.
+    *
+    * Overflow headroom: |floor(v·10⁶)| ≤ ~10⁹ for any sane embedding and
+    * the per-cell sum folds ≤ trainSample rows, so Σq stays ≤ ~10¹⁴ ≪
+    * 2⁶³; the squared-distance accumulation runs in double (exact inputs,
+    * fixed order).
+    */
   private[graft] def trainCentersDistributed(
       corpus: DataFrame, nlist: Int, seed: Long,
       idCol: String, vecCol: String, trainSample: Int,
@@ -357,8 +320,8 @@ object SimilaritySearch {
     val k = initRows.length // < nlist when fewer distinct vectors exist
     val dim = initRows.head.length
     // spread the sample across the cores — the whole point of this
-    // trainer (the serial path's TakeOrdered sample occupies ONE
-    // partition and k-means runs single-threaded on it). Round-robin
+    // trainer (the TakeOrdered sample occupies ONE partition, where
+    // k-means would run single-threaded). Round-robin
     // placement is partitioning-dependent, and that is FINE: everything
     // downstream is an order-free integer fold. The slice count is
     // SCALE-ADAPTIVE (guide §2: never a constant tuned for one mode):
@@ -438,32 +401,19 @@ object SimilaritySearch {
     * merged on the driver), so the sample is unbiased by file order and
     * never gathers the corpus to one partition (unlike a bare `.limit`,
     * which at 100 TB both single-partition-gathers and trains on whatever
-    * files happen to come first). 10 Lloyd iterations suffice for a coarse
-    * index. With `persist=true` the assigned corpus is cached for repeated
-    * probing (the build-once path); one-shot callers pass false.
-    * `trainer` picks the quantizer-training strategy ([[CoarseTrainer]]):
-    * the serial default keeps every pre-r18 artifact bit-identical; the
-    * distributed trainer is the scale path for builds/retrains at large
-    * nlist.
+    * files happen to come first). The quantizer is
+    * [[trainCentersDistributed]] — 10 Lloyd rounds suffice for a coarse
+    * index, and its order-free integer folds make the centers a function
+    * of the sample alone, never of the corpus's partitioning. With
+    * `persist=true` the assigned corpus is cached for repeated probing
+    * (the build-once path); one-shot callers pass false.
     */
   def buildIvfIndex(
       corpus: DataFrame, nlist: Int = 16, seed: Long = 42L,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      trainSample: Int = 50000, persist: Boolean = true,
-      trainer: CoarseTrainer = CoarseTrainer.Default): IvfIndex = {
-    val centers = trainer match {
-      case CoarseTrainer.Serial =>
-        val train = corpus
-          .select(col(vecCol), xxhash64(col(idCol), lit(seed)).as("__h"))
-          .orderBy(col("__h")).limit(trainSample)
-          .select(array_to_vector(col(vecCol)).as("__v"))
-        new KMeans().setK(nlist).setSeed(seed).setMaxIter(10)
-          .setFeaturesCol("__v").setPredictionCol("__cell").fit(train)
-          .clusterCenters.map(_.toArray)
-      case CoarseTrainer.Distributed(iters) =>
-        trainCentersDistributed(corpus, nlist, seed, idCol, vecCol,
-          trainSample, iters)
-    }
+      trainSample: Int = 50000, persist: Boolean = true): IvfIndex = {
+    val centers = trainCentersDistributed(corpus, nlist, seed, idCol, vecCol,
+      trainSample, iters = 10)
     val assigned = assignToCells(corpus, centers, idCol, vecCol)
     IvfIndex(centers, if (persist) assigned.persist() else assigned)
   }
@@ -545,9 +495,7 @@ object SimilaritySearch {
   def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       newVecs: DataFrame, idCol: String = "vec_id",
       vecCol: String = "embedding"): Unit = {
-    val centers = spark.read.parquet(s"$dir/centers").collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1).map(_._2)
+    val centers = readCenters(spark, dir)
     if (validateAppends(spark))
       assertDisjointAppend(
         spark.read.parquet(s"$dir/assigned").select(col("neighbor_id")),
@@ -591,14 +539,6 @@ object SimilaritySearch {
           "re-ingest through delete + compact + append.")
   }
 
-  /** Persist a built IVF index as parquet artifacts under `dir` — the
-    * lifecycle completion of the build-once story: `assigned/` holds the
-    * inverted file PARTITIONED BY cell (so a probe's nprobe-cell equi-join
-    * prunes to nprobe directories at the scan — partition pruning does the
-    * candidate selection before any row is read) and `centers/` the tiny
-    * (cell, center) quantizer table. Round-trips via [[loadIvfIndex]]:
-    * probe results are identical after reload (spec-pinned).
-    */
   /** Cluster a cell-partitioned relation before its partitioned write
     * (guide §6 — output small-file discipline). Without an exchange,
     * every write task sprays one file into EVERY cell directory it
@@ -616,14 +556,40 @@ object SimilaritySearch {
     df.repartition(col("cell"),
       pmod(xxhash64(col(idCol)), lit(CellWriteSalt)))
 
-  def saveIvfIndex(index: IvfIndex, dir: String): Unit = {
-    val spark = index.assigned.sparkSession
+  /** The coarse quantizer's `centers/` relation under an artifact
+    * directory — (cell, center) rows, one tiny file — written and read
+    * HERE for every IVF layout (float, SQ8 and PQ artifacts, the
+    * rebalance staging, the streamed bootstrap), so no two layouts can
+    * disagree on its encoding. [[readCenters]] returns the centers
+    * indexed by cell id.
+    */
+  private[graft] def writeCenters(spark: org.apache.spark.sql.SparkSession,
+      dir: String, centers: Array[Array[Double]]): Unit = {
     import spark.implicits._
-    clusterByCell(index.assigned).write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$dir/assigned")
-    index.centers.zipWithIndex
+    centers.zipWithIndex
       .map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("cell", "center")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/centers")
+  }
+
+  private[graft] def readCenters(spark: org.apache.spark.sql.SparkSession,
+      dir: String): Array[Array[Double]] =
+    spark.read.parquet(s"$dir/centers").collect()
+      .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
+      .sortBy(_._1).map(_._2)
+
+  /** Persist a built IVF index as parquet artifacts under `dir` — the
+    * lifecycle completion of the build-once story: `assigned/` holds the
+    * inverted file PARTITIONED BY cell (so a probe's nprobe-cell equi-join
+    * prunes to nprobe directories at the scan — partition pruning does the
+    * candidate selection before any row is read) and `centers/` the tiny
+    * (cell, center) quantizer table. Round-trips via [[loadIvfIndex]]:
+    * probe results are identical after reload (spec-pinned).
+    */
+  def saveIvfIndex(index: IvfIndex, dir: String): Unit = {
+    val spark = index.assigned.sparkSession
+    clusterByCell(index.assigned).write.mode("overwrite").partitionBy("cell")
+      .parquet(s"$dir/assigned")
+    writeCenters(spark, dir, index.centers)
   }
 
   /** Load an IVF index persisted by [[saveIvfIndex]]. The inverted file is
@@ -633,9 +599,7 @@ object SimilaritySearch {
   def loadIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       persist: Boolean = true): IvfIndex = {
     requireNotTorn(spark, dir)
-    val centers = spark.read.parquet(s"$dir/centers").collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1).map(_._2)
+    val centers = readCenters(spark, dir)
     // tombstones (deleteFromAnnIndex) apply exactly at load: the anti-
     // join removes dead vectors before any probe sees the inverted file
     val assigned = applyAnnTombstones(spark, dir,
@@ -1051,15 +1015,11 @@ object SimilaritySearch {
     * [[ivfScaleParams]] as the corpus grows). Determinism: the sample
     * is `ORDER BY xxhash64(id, seed) LIMIT trainSample` — a distributed
     * TakeOrdered whose result is independent of file order and
-    * partitioning — and the trainer is deterministic on it (the serial
-    * default trains k-means on the single ordered partition; the
-    * [[CoarseTrainer.Distributed]] scale path folds order-free
-    * quantized integer sums across all cores), so retraining an
-    * UNDRIFTED artifact reproduces a fresh [[buildIvfIndex]] of the
-    * same corpus WITH THE SAME TRAINER bit-exactly (spec- and
-    * gate-pinned: same centers, same cells, same probe rows). The two
-    * trainers are different geometries — keep the artifact's family
-    * across retrains.
+    * partitioning — and [[trainCentersDistributed]] is deterministic on
+    * it (order-free quantized integer sums folded across all cores), so
+    * retraining an UNDRIFTED artifact reproduces a fresh
+    * [[buildIvfIndex]] of the same corpus bit-exactly (spec- and
+    * gate-pinned: same centers, same cells, same probe rows).
     *
     * A streamed directory is refused — fold it to the batch layout
     * first ([[graft.streaming.StreamingVecIndex.compactTo]]), then
@@ -1067,23 +1027,36 @@ object SimilaritySearch {
     * .freezeCenters]] the new quantizer for the next stream epoch.
     */
   def retrainIvf(spark: org.apache.spark.sql.SparkSession, dir: String,
-      nlist: Int = 0, seed: Long = 42L, trainSample: Int = 50000,
-      trainer: CoarseTrainer = CoarseTrainer.Default): Unit = {
+      nlist: Int = 0, seed: Long = 42L, trainSample: Int = 50000): Unit =
+    retrainInPlace(spark, dir,
+      "StreamingVecIndex.compactTo(dir, outDir) first, then retrain the " +
+        "folded artifact and freezeCenters the new quantizer",
+      Seq("assigned", "centers")) { staging =>
+      val live = applyAnnTombstones(spark, dir,
+        spark.read.parquet(s"$dir/assigned")
+          .select(col("neighbor_id"), col("tv")), "neighbor_id")
+      saveIvfIndex(buildIvfIndex(live, resolveNlist(spark, dir, nlist), seed,
+        "neighbor_id", "tv", trainSample, persist = false), staging)
+    }
+
+  /** The in-place retrain sequence all three families share: refuse a
+    * streamed directory (`streamedHint` names the fold-first route),
+    * clear `<dir>-retrain-staging`, let the family's `stage` write the
+    * complete replacement artifact there, cut `relations` over
+    * ([[cutOverRelations]] — the torn-window marker and rename-aside),
+    * then drop the tombstones the live-row retrain already applied and
+    * the emptied staging directory.
+    */
+  private def retrainInPlace(spark: org.apache.spark.sql.SparkSession,
+      dir: String, streamedHint: String, relations: Seq[String])(
+      stage: String => Unit): Unit = {
     import org.apache.hadoop.fs.Path
     val (fs, root) = InvertedIndex.fsFor(spark, dir)
-    requireNotStreamed(fs, root, dir,
-      "StreamingVecIndex.compactTo(dir, outDir) first, then retrain the " +
-        "folded artifact and freezeCenters the new quantizer")
-    val live = applyAnnTombstones(spark, dir,
-      spark.read.parquet(s"$dir/assigned")
-        .select(col("neighbor_id"), col("tv")), "neighbor_id")
-    val k = resolveNlist(spark, dir, nlist)
+    requireNotStreamed(fs, root, dir, streamedHint)
     val staging = new Path(s"$dir-retrain-staging")
     fs.delete(staging, true)
-    saveIvfIndex(buildIvfIndex(live, k, seed, "neighbor_id", "tv",
-      trainSample, persist = false, trainer), staging.toString)
-    cutOverRelations(fs, root, staging, dir, "retrain",
-      Seq("assigned", "centers"))
+    stage(staging.toString)
+    cutOverRelations(fs, root, staging, dir, "retrain", relations)
     fs.delete(new Path(root, "tombstones"), true)
     fs.delete(staging, true)
   }
@@ -1147,24 +1120,17 @@ object SimilaritySearch {
   def retrainIvfInt8(spark: org.apache.spark.sql.SparkSession, dir: String,
       corpus: DataFrame, nlist: Int = 0, seed: Long = 42L,
       trainSample: Int = 50000, idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      trainer: CoarseTrainer = CoarseTrainer.Default): Unit = {
-    import org.apache.hadoop.fs.Path
-    val (fs, root) = InvertedIndex.fsFor(spark, dir)
-    requireNotStreamed(fs, root, dir,
+      vecCol: String = "embedding"): Unit =
+    retrainInPlace(spark, dir,
       "StreamingVecIndex.compactToInt8(dir, outDir) first, then retrain " +
-        "the folded artifact and freezeCenters the new quantizer")
-    val liveCorpus = liveCorpusFor(spark, dir, corpus, idCol, "retrainIvfInt8")
-    val staging = new Path(s"$dir-retrain-staging")
-    fs.delete(staging, true)
-    saveIvfInt8Index(buildIvfInt8Index(liveCorpus,
-      resolveNlist(spark, dir, nlist), seed, idCol, vecCol, trainSample,
-      persist = false, trainer), staging.toString)
-    cutOverRelations(fs, root, staging, dir, "retrain",
-      Seq("assigned", "centers"))
-    fs.delete(new Path(root, "tombstones"), true)
-    fs.delete(staging, true)
-  }
+        "the folded artifact and freezeCenters the new quantizer",
+      Seq("assigned", "centers")) { staging =>
+      val liveCorpus =
+        liveCorpusFor(spark, dir, corpus, idCol, "retrainIvfInt8")
+      saveIvfInt8Index(buildIvfInt8Index(liveCorpus,
+        resolveNlist(spark, dir, nlist), seed, idCol, vecCol, trainSample,
+        persist = false), staging)
+    }
 
   /** [[retrainIvf]] for the IVF-PQ artifact ([[saveIvfPqIndex]]
     * layout). Re-trains the COARSE quantizer and re-assigns; the PQ
@@ -1182,33 +1148,24 @@ object SimilaritySearch {
   def retrainIvfPq(spark: org.apache.spark.sql.SparkSession, dir: String,
       corpus: DataFrame, nlist: Int = 0, seed: Long = 42L,
       trainSample: Int = 50000, retrainCodebook: Boolean = false,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      trainer: CoarseTrainer = CoarseTrainer.Default): Unit = {
-    import org.apache.hadoop.fs.Path
-    val (fs, root) = InvertedIndex.fsFor(spark, dir)
-    requireNotStreamed(fs, root, dir,
+      idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
+    retrainInPlace(spark, dir,
       "StreamingVecIndex.compactToPq(dir, outDir) first, then retrain " +
-        "the folded artifact and freezePq the new quantizers")
-    val liveCorpus = liveCorpusFor(spark, dir, corpus, idCol, "retrainIvfPq")
-    val k = resolveNlist(spark, dir, nlist)
-    val staging = new Path(s"$dir-retrain-staging")
-    fs.delete(staging, true)
-    val book =
-      if (retrainCodebook) {
-        val old = readCodebook(spark, dir)
-        trainPqCodebook(liveCorpus, old.m, old.centers.head.length, seed,
-          idCol, vecCol)
-      } else readCodebook(spark, dir)
-    val centers = buildIvfIndex(liveCorpus, k, seed, idCol, vecCol,
-      trainSample, persist = false, trainer).centers
-    saveIvfPqIndex(IvfPqIndex(centers, book,
-      assignAndEncodePq(liveCorpus, centers, book, idCol, vecCol),
-      n = liveCorpus.count()), staging.toString)
-    cutOverRelations(fs, root, staging, dir, "retrain",
-      Seq("assigned", "centers", "codebook", "meta"))
-    fs.delete(new Path(root, "tombstones"), true)
-    fs.delete(staging, true)
-  }
+        "the folded artifact and freezePq the new quantizers",
+      Seq("assigned", "centers", "codebook", "meta")) { staging =>
+      val liveCorpus = liveCorpusFor(spark, dir, corpus, idCol, "retrainIvfPq")
+      val book =
+        if (retrainCodebook) {
+          val old = readCodebook(spark, dir)
+          trainPqCodebook(liveCorpus, old.m, old.centers.head.length, seed,
+            idCol, vecCol)
+        } else readCodebook(spark, dir)
+      val centers = buildIvfIndex(liveCorpus, resolveNlist(spark, dir, nlist),
+        seed, idCol, vecCol, trainSample, persist = false).centers
+      saveIvfPqIndex(IvfPqIndex(centers, book,
+        assignAndEncodePq(liveCorpus, centers, book, idCol, vecCol),
+        n = liveCorpus.count()), staging)
+    }
 
   // ---- cell-local repair: split/merge ONLY the skewed cells (r18) ----
   //
@@ -1282,8 +1239,8 @@ object SimilaritySearch {
     * All flagged cells train in ONE aggregation pass (per-cell serial
     * Lloyd over a hash-capped quantized sample — deterministic under
     * any partitioning), so the round costs O(1) Spark jobs however
-    * many cells are flagged — the [[CoarseTrainer]] choice never enters
-    * this verb.
+    * many cells are flagged — the coarse trainer never enters this
+    * verb.
     */
   def rebalanceCells(spark: org.apache.spark.sql.SparkSession, dir: String,
       splitFactor: Double = 4.0, starveFactor: Double = 8.0,
@@ -1297,9 +1254,7 @@ object SimilaritySearch {
       "StreamingVecIndex.compactTo(dir, outDir) first, then rebalance " +
         "the folded artifact and freezeCenters the new quantizer")
     requireNotTorn(spark, dir)
-    val centers = spark.read.parquet(s"$dir/centers").collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1).map(_._2)
+    val centers = readCenters(spark, dir)
     val nlist = centers.length
     val assigned = spark.read.parquet(s"$dir/assigned")
       .select(col("neighbor_id"), col("tv"), col("cell"))
@@ -1445,11 +1400,7 @@ object SimilaritySearch {
       .parquet(new Path(staging, "cells").toString)
     clusterByCell(retiredRows).write.mode("overwrite").partitionBy("cell")
       .parquet(new Path(staging, "newcomers").toString)
-    import spark.implicits._
-    newCenters.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("cell", "center")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(new Path(staging, "centers").toString)
+    writeCenters(spark, staging.toString, newCenters)
     // staged per-cell counts → the arithmetic skew-after (no rescan;
     // both relations are ∝ the affected volume)
     def cellCounts(sub: String): Map[Int, Long] = {
@@ -1810,10 +1761,9 @@ object SimilaritySearch {
   def buildIvfInt8Index(
       corpus: DataFrame, nlist: Int = 16, seed: Long = 42L,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      trainSample: Int = 50000, persist: Boolean = true,
-      trainer: CoarseTrainer = CoarseTrainer.Default): IvfInt8Index = {
+      trainSample: Int = 50000, persist: Boolean = true): IvfInt8Index = {
     val float = buildIvfIndex(corpus, nlist, seed, idCol, vecCol, trainSample,
-      persist = false, trainer)
+      persist = false)
     val assigned = assignAndQuantizeInt8(corpus, float.centers, idCol, vecCol)
     IvfInt8Index(float.centers,
       if (persist) assigned.persist() else assigned)
@@ -1845,12 +1795,9 @@ object SimilaritySearch {
     */
   def saveIvfInt8Index(index: IvfInt8Index, dir: String): Unit = {
     val spark = index.assigned.sparkSession
-    import spark.implicits._
     clusterByCell(index.assigned).write.mode("overwrite").partitionBy("cell")
       .parquet(s"$dir/assigned")
-    index.centers.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("cell", "center")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centers")
+    writeCenters(spark, dir, index.centers)
   }
 
   /** Load an IVF-SQ8 index persisted by [[saveIvfInt8Index]]; the inverted
@@ -1859,9 +1806,7 @@ object SimilaritySearch {
   def loadIvfInt8Index(spark: org.apache.spark.sql.SparkSession, dir: String,
       persist: Boolean = true): IvfInt8Index = {
     requireNotTorn(spark, dir)
-    val centers = spark.read.parquet(s"$dir/centers").collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1).map(_._2)
+    val centers = readCenters(spark, dir)
     val assigned = applyAnnTombstones(spark, dir,
       spark.read.parquet(s"$dir/assigned")
         .select(col("neighbor_id"), col("cell"), col("scale"), col("qnorm"),
@@ -2014,14 +1959,12 @@ object SimilaritySearch {
   def buildIvfPqIndex(
       corpus: DataFrame, nlist: Int = 16, m: Int = 8, ksub: Int = 64,
       seed: Long = 42L, idCol: String = "vec_id", vecCol: String = "embedding",
-      trainSample: Int = 50000, persist: Boolean = true,
-      trainer: CoarseTrainer = CoarseTrainer.Default): IvfPqIndex = {
-    // `trainer` steers the COARSE quantizer only: the PQ codebook's
-    // per-subspace k-means runs over a driver-side constant-bounded
-    // sample (trainSample = 2000 rows) — never the scale axis the
-    // distributed trainer exists for
+      trainSample: Int = 50000, persist: Boolean = true): IvfPqIndex = {
+    // `trainSample` bounds the COARSE quantizer's sample only: the PQ
+    // codebook's per-subspace k-means runs over a driver-side
+    // constant-bounded sample (2000 rows) — never the scale axis
     val float = buildIvfIndex(corpus, nlist, seed, idCol, vecCol, trainSample,
-      persist = false, trainer)
+      persist = false)
     val book = trainPqCodebook(corpus, m, ksub, seed, idCol, vecCol)
     // ONE fused pass (r15): assignment and PQ encoding are both per-row
     // functions of the same vector — the earlier assign⋈encode join
@@ -2145,9 +2088,7 @@ object SimilaritySearch {
     import spark.implicits._
     clusterByCell(index.assigned).write.mode("overwrite").partitionBy("cell")
       .parquet(s"$dir/assigned")
-    index.centers.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("cell", "center")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centers")
+    writeCenters(spark, dir, index.centers)
     writeCodebook(spark, index.book, dir)
     Seq(Tuple1(index.n)).toDF("n")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
@@ -2159,9 +2100,7 @@ object SimilaritySearch {
   def loadIvfPqIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       persist: Boolean = true): IvfPqIndex = {
     requireNotTorn(spark, dir)
-    val centers = spark.read.parquet(s"$dir/centers").collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1).map(_._2)
+    val centers = readCenters(spark, dir)
     val book = readCodebook(spark, dir)
     val rawAssigned = spark.read.parquet(s"$dir/assigned")
       .select(col("neighbor_id"), col("codes"), col("rnorm"), col("cell"))
@@ -2460,11 +2399,9 @@ object SimilaritySearch {
   def ivfTopK(
       corpus: DataFrame, queries: DataFrame, k: Int,
       nlist: Int = 16, nprobe: Int = 4, seed: Long = 42L,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      trainer: CoarseTrainer = CoarseTrainer.Default): DataFrame =
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
     ivfProbe(
-      buildIvfIndex(corpus, nlist, seed, idCol, vecCol, persist = false,
-        trainer = trainer),
+      buildIvfIndex(corpus, nlist, seed, idCol, vecCol, persist = false),
       queries, k, nprobe, idCol, vecCol)
 
   /** IVF scale policy (published Faiss practice, re-derived): nlist ≈ √n

@@ -2036,17 +2036,13 @@ object EngineQueries extends QueryPack {
     FROM p ORDER BY ia, ib"""))
 
   // IVF-partitioned approximate ANN (k-means inverted file + nprobe probing).
-  // Serial trainer PINNED (r19 default flip): this gate's published top-5
-  // rows are a function of the trained geometry, and the r1-r18 rows were
-  // trained serial — the pin keeps the declared result identical while the
-  // engine default moves to the distributed scale path.
+  // Rows-only: the published top-5 is a function of the trained geometry.
   private val annIvf = OracleQuery(
     "vx_ann_ivf_top5",
     (s, d) => {
       val emb = Tables.embeddings(s, d)
       SimilaritySearch.ivfTopK(emb, emb.filter(col("vec_id") < 10), k = 5,
-        nlist = 8, nprobe = 4,
-        trainer = SimilaritySearch.CoarseTrainer.Serial)
+        nlist = 8, nprobe = 4)
     },
     None)
 
@@ -2061,8 +2057,8 @@ object EngineQueries extends QueryPack {
   // so cell assignment (integer squared L2, ties to the lowest cell), probe
   // selection (each query's 4 nearest cells), and the exact re-rank cosine
   // are all integer-exact and DuckDB replays the ENTIRE serving path:
-  // assignment, probing, candidate generation, ranking. The MLlib k-means
-  // build stays exercised by vx_ann_ivf_top5 (rows-only, spec-pinned) —
+  // assignment, probing, candidate generation, ranking. The trained
+  // k-means build stays exercised by vx_ann_ivf_top5 (rows-only) —
   // same split as vx_semdedup_kmeans / vx_semdedup_quantized.
   private def quantizedEmb(s: org.apache.spark.sql.SparkSession, d: String) =
     Tables.embeddings(s, d).select(col("vec_id"),
@@ -2454,20 +2450,14 @@ object EngineQueries extends QueryPack {
   def prepareIvfInt8Index(s: org.apache.spark.sql.SparkSession,
       d: String): SimilaritySearch.IvfInt8Index =
     graft.SessionMemo.getOrElseUpdate(s, s"ivf_int8_index:$d")(
-      // Serial pinned: vx_ann_ivf_int8_top5's rows depend on the trained
-      // geometry (the vx_ann_ivf_top5 pin rationale)
-      SimilaritySearch.buildIvfInt8Index(Tables.embeddings(s, d), nlist = 8,
-        trainer = SimilaritySearch.CoarseTrainer.Serial))(
+      SimilaritySearch.buildIvfInt8Index(Tables.embeddings(s, d), nlist = 8))(
       _.unpersist())
 
   def prepareIvfPqIndex(s: org.apache.spark.sql.SparkSession,
       d: String): SimilaritySearch.IvfPqIndex =
     graft.SessionMemo.getOrElseUpdate(s, s"ivf_pq_index:$d")(
-      // Serial pinned: vx_ann_ivf_pq_top5's rows depend on the trained
-      // coarse geometry (the vx_ann_ivf_top5 pin rationale)
       SimilaritySearch.buildIvfPqIndex(Tables.embeddings(s, d), nlist = 8,
-        m = 8, ksub = 64,
-        trainer = SimilaritySearch.CoarseTrainer.Serial))(
+        m = 8, ksub = 64))(
       _.unpersist())
 
   /** The PQ index roundtripped through its parquet artifact
@@ -2571,121 +2561,80 @@ object EngineQueries extends QueryPack {
   // misses appended rows, samples differently from the build path, or
   // the staged cut-over serves a torn artifact. NOT memoized: retrain
   // mutates its directory, so each serve builds a fresh one — the gate
-  // prices the full lifecycle by construction.
-  private val annRetrainParity = OracleQuery(
-    "vx_ann_retrain_parity",
-    (s, d) => {
-      val emb = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding"))
-      val q = emb.filter(col("vec_id") < 10)
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-ivf-retrain-gate").toString
-      def rows(idx: SimilaritySearch.IvfIndex) =
-        SimilaritySearch.ivfProbe(idx, q, k = 5, nprobe = 3).collect()
-          .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-          .toSeq
-      // the fresh-rebuild reference never touches `dir` — it runs
-      // CONCURRENTLY with the whole build→append→tombstone→retrain chain
-      // (guide §2.6: both chains are strings of small jobs that leave
-      // most cores idle). Identical inputs, identical outputs — only the
-      // wall-clock overlaps.
-      // Serial trainer PINNED at all three quantizer trainings (r19
-      // default flip): this gate IS the serial family's lifecycle parity
-      // (vx_ann_retrain_dist_parity is the distributed twin) — under the
-      // flipped engine default it would silently become a second
-      // distributed gate and the serial path would lose its only
-      // end-to-end hash.
-      val serial = SimilaritySearch.CoarseTrainer.Serial
-      val fFresh = graft.Par.fork {
-        val fresh = SimilaritySearch.buildIvfIndex(
-          emb.filter(!col("vec_id").isin(11L, 13L)), nlist = 8,
-          persist = false, trainer = serial)
-        (rows(fresh), fresh.centers)
-      }
+  // prices the full lifecycle by construction. `freshLayout` and
+  // `buildLayout` feed the reference and the initial build through
+  // chosen physical layouts (the repartitioned twin below).
+  private def retrainLifecycleParity(s: org.apache.spark.sql.SparkSession,
+      d: String, scratchPrefix: String,
+      freshLayout: org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame,
+      buildLayout: org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val emb = Tables.embeddings(s, d)
+      .select(col("vec_id"), col("embedding"))
+    val q = emb.filter(col("vec_id") < 10)
+    val dir = java.nio.file.Files.createTempDirectory(scratchPrefix).toString
+    def rows(idx: SimilaritySearch.IvfIndex) =
+      SimilaritySearch.ivfProbe(idx, q, k = 5, nprobe = 3).collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+        .toSeq
+    // the fresh-rebuild reference never touches `dir` — it runs
+    // CONCURRENTLY with the whole build→append→tombstone→retrain chain
+    // (guide §2.6: both chains are strings of small jobs that leave
+    // most cores idle). The trainer folds order-free integer sums, so
+    // neither the overlap nor a layout can move a bit.
+    val fFresh = graft.Par.fork {
+      val fresh = SimilaritySearch.buildIvfIndex(
+        freshLayout(emb.filter(!col("vec_id").isin(11L, 13L))), nlist = 8,
+        persist = false)
+      (rows(fresh), fresh.centers)
+    }
+    try {
       SimilaritySearch.saveIvfIndex(
-        SimilaritySearch.buildIvfIndex(emb.filter(col("vec_id") % 4 =!= 3),
-          nlist = 8, persist = false, trainer = serial), dir)
+        SimilaritySearch.buildIvfIndex(
+          buildLayout(emb.filter(col("vec_id") % 4 =!= 3)), nlist = 8,
+          persist = false), dir)
       SimilaritySearch.appendToIvfIndex(s, dir,
         emb.filter(col("vec_id") % 4 === 3))
       SimilaritySearch.deleteFromAnnIndex(s, dir, Seq(11L, 13L))
-      SimilaritySearch.retrainIvf(s, dir, trainer = serial)
+      SimilaritySearch.retrainIvf(s, dir)
       val re = SimilaritySearch.loadIvfIndex(s, dir, persist = false)
       val got = rows(re)
       val (want, freshCenters) = graft.Par.join(fFresh)
       val centerMismatch = re.centers.map(_.toSeq).toSeq
         .zipAll(freshCenters.map(_.toSeq).toSeq, Seq.empty, Seq.empty)
         .count { case (a, b) => a != b }.toLong
-      // every comparison above is collected — the fresh-per-serve index
-      // directory is dead weight now; sweep it so repeated bench/verify
-      // runs don't accumulate artifacts in /tmp (ADVICE r17)
-      sweepScratch(s, dir)
       import s.implicits._
       Seq((centerMismatch,
         (got.size - got.intersect(want).size).toLong +
           (want.size - got.intersect(want).size).toLong))
         .toDF("n_center_mismatch", "n_probe_mismatch")
-    },
+    } finally {
+      // a failed chain must not leave the fork running unattended or
+      // the artifact in /tmp (ADVICE r17): wait the reference out — its
+      // result, or its own failure, is discarded on this path — then
+      // sweep the fresh-per-serve directory
+      scala.util.Try(graft.Par.join(fFresh))
+      sweepScratch(s, dir)
+    }
+  }
+
+  private val annRetrainParity = OracleQuery(
+    "vx_ann_retrain_parity",
+    (s, d) => retrainLifecycleParity(s, d, "graft-ivf-retrain-gate",
+      identity, identity),
     Some("""SELECT CAST(0 AS BIGINT) AS n_center_mismatch,
       CAST(0 AS BIGINT) AS n_probe_mismatch"""))
 
-  // Distributed-trainer retrain parity (r18, verdict item 1): the SAME
-  // lifecycle as vx_ann_retrain_parity — build on a 75% slice, append
-  // the rest under frozen centers, tombstone two ids, retrain — but
-  // every quantizer trains through CoarseTrainer.Distributed (Lloyd
-  // rounds over order-free quantized integer per-cell sums), and the
-  // build/rebuild corpora are fed through DIFFERENT physical layouts
-  // (repartition 5 vs 9 vs the artifact's own files), so the one hash
+  // The repartitioned twin: the SAME lifecycle, but the reference and
+  // the initial build are fed through DIFFERENT physical layouts
+  // (repartition 9 vs 5 vs the artifact's own files), so the one hash
   // prices lifecycle parity AND partitioning invariance together: it
-  // breaks if the distributed fold is order-sensitive anywhere, if the
-  // trainer samples differently from the build path, or if the staged
-  // cut-over serves a torn artifact. NOT memoized (mutating gate).
+  // breaks if the trainer's fold is order-sensitive anywhere.
   private val annRetrainDistParity = OracleQuery(
     "vx_ann_retrain_dist_parity",
-    (s, d) => {
-      import SimilaritySearch.CoarseTrainer
-      val emb = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding"))
-      val q = emb.filter(col("vec_id") < 10)
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-ivf-dist-retrain-gate").toString
-      def rows(idx: SimilaritySearch.IvfIndex) =
-        SimilaritySearch.ivfProbe(idx, q, k = 5, nprobe = 3).collect()
-          .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-          .toSeq
-      // fresh-rebuild reference concurrent with the lifecycle chain —
-      // the vx_ann_retrain_parity overlap argument; the distributed
-      // trainer is order-free by construction, so concurrency cannot
-      // move a bit either.
-      val fFresh = graft.Par.fork {
-        val fresh = SimilaritySearch.buildIvfIndex(
-          emb.filter(!col("vec_id").isin(11L, 13L)).repartition(9),
-          nlist = 8, persist = false,
-          trainer = CoarseTrainer.Distributed())
-        (rows(fresh), fresh.centers)
-      }
-      SimilaritySearch.saveIvfIndex(
-        SimilaritySearch.buildIvfIndex(
-          emb.filter(col("vec_id") % 4 =!= 3).repartition(5),
-          nlist = 8, persist = false,
-          trainer = CoarseTrainer.Distributed()), dir)
-      SimilaritySearch.appendToIvfIndex(s, dir,
-        emb.filter(col("vec_id") % 4 === 3))
-      SimilaritySearch.deleteFromAnnIndex(s, dir, Seq(11L, 13L))
-      SimilaritySearch.retrainIvf(s, dir,
-        trainer = CoarseTrainer.Distributed())
-      val re = SimilaritySearch.loadIvfIndex(s, dir, persist = false)
-      val got = rows(re)
-      val (want, freshCenters) = graft.Par.join(fFresh)
-      val centerMismatch = re.centers.map(_.toSeq).toSeq
-        .zipAll(freshCenters.map(_.toSeq).toSeq, Seq.empty, Seq.empty)
-        .count { case (a, b) => a != b }.toLong
-      sweepScratch(s, dir)
-      import s.implicits._
-      Seq((centerMismatch,
-        (got.size - got.intersect(want).size).toLong +
-          (want.size - got.intersect(want).size).toLong))
-        .toDF("n_center_mismatch", "n_probe_mismatch")
-    },
+    (s, d) => retrainLifecycleParity(s, d, "graft-ivf-dist-retrain-gate",
+      _.repartition(9), _.repartition(5)),
     Some("""SELECT CAST(0 AS BIGINT) AS n_center_mismatch,
       CAST(0 AS BIGINT) AS n_probe_mismatch"""))
 
@@ -3331,18 +3280,14 @@ object EngineQueries extends QueryPack {
   // k-means that builds the ANN inverted file — curation and retrieval
   // share one clustering artifact, memoized per (session, dir) like the
   // other index builds so repeated passes time the prune, not the build.
-  // Iterative MLlib k-means → rows-only; SemDedupSpec pins semantics
+  // Iterative k-means → rows-only; SemDedupSpec pins semantics
   // (near-dup planted pairs pruned, keep-rate monotone in tau, agreement
   // with the oracle-verified seed-center form).
   def prepareSemDedupCenters(s: org.apache.spark.sql.SparkSession,
       d: String): Seq[Seq[Double]] =
     graft.SessionMemo.getOrElseUpdate(s, s"semdedup_centers:$d")(
-      // Serial pinned: vx_semdedup_kmeans's cluster assignments depend on
-      // the trained geometry (the vx_ann_ivf_top5 pin rationale)
       SimilaritySearch.buildIvfIndex(Tables.embeddings(s, d), nlist = 16,
-        persist = false,
-        trainer = SimilaritySearch.CoarseTrainer.Serial)
-        .centers.map(_.toSeq).toSeq)(_ => ())
+        persist = false).centers.map(_.toSeq).toSeq)(_ => ())
   private val semDedupKmeans = OracleQuery(
     "vx_semdedup_kmeans",
     (s, d) => {

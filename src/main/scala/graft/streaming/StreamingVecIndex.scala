@@ -48,18 +48,8 @@ object StreamingVecIndex {
     * batch idempotent and append ≡ rebuild exact.
     */
   def freezeCenters(spark: SparkSession, dir: String,
-      centers: Array[Array[Double]]): Unit = {
-    import spark.implicits._
-    centers.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("cell", "center")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centers")
-  }
-
-  private def loadCenters(spark: SparkSession,
-      dir: String): Array[Array[Double]] =
-    spark.read.parquet(s"$dir/centers").collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1).map(_._2)
+      centers: Array[Array[Double]]): Unit =
+    SimilaritySearch.writeCenters(spark, dir, centers)
 
   /** Apply ONE micro-batch delta: assign under the frozen centers, write
     * as this batch's partitions. Public so the idempotence contract is
@@ -98,7 +88,7 @@ object StreamingVecIndex {
       s"no frozen quantizer at $dir/centers — run freezeCenters first " +
         "(streaming ingest never trains; a per-batch retrain would break " +
         "replay idempotence and append-equals-rebuild exactness)")
-    loadCenters(spark, dir)
+    SimilaritySearch.readCenters(spark, dir)
   }
 
   // the shared per-batch delta mechanics (guards, dynamic partition
@@ -224,7 +214,7 @@ object StreamingVecIndex {
     */
   def skewReport(spark: SparkSession, dir: String,
       reclusterSkewThreshold: Double = 4.0): SimilaritySearch.IvfSkewReport = {
-    val nlist = loadCenters(spark, dir).length
+    val nlist = SimilaritySearch.readCenters(spark, dir).length
     val counts = liveAssigned(spark, dir, Seq("neighbor_id", "cell"),
         persist = false)
       .groupBy(col("cell")).agg(count(lit(1)).as("n"))
@@ -383,7 +373,7 @@ object StreamingVecIndex {
     */
   def load(spark: SparkSession, dir: String,
       persist: Boolean = true): SimilaritySearch.IvfIndex =
-    SimilaritySearch.IvfIndex(loadCenters(spark, dir),
+    SimilaritySearch.IvfIndex(SimilaritySearch.readCenters(spark, dir),
       liveAssigned(spark, dir, Seq("neighbor_id", "tv", "cell"), persist))
 
   // the shared live-index assembly (manifest scoping, batch-identity
@@ -412,7 +402,7 @@ object StreamingVecIndex {
     */
   def loadInt8(spark: SparkSession, dir: String,
       persist: Boolean = true): SimilaritySearch.IvfInt8Index =
-    SimilaritySearch.IvfInt8Index(loadCenters(spark, dir),
+    SimilaritySearch.IvfInt8Index(SimilaritySearch.readCenters(spark, dir),
       liveAssigned(spark, dir,
         Seq("neighbor_id", "cell", "scale", "qnorm", "qv"), persist))
 
@@ -440,7 +430,7 @@ object StreamingVecIndex {
       persist: Boolean = true): SimilaritySearch.IvfPqIndex = {
     val assigned = liveAssigned(spark, dir,
       Seq("neighbor_id", "codes", "rnorm", "cell"), persist)
-    SimilaritySearch.IvfPqIndex(loadCenters(spark, dir),
+    SimilaritySearch.IvfPqIndex(SimilaritySearch.readCenters(spark, dir),
       SimilaritySearch.readCodebook(spark, dir), assigned,
       n = assigned.count())
   }
@@ -549,20 +539,16 @@ object StreamingVecIndex {
   // cannot have.
 
   /** Rotate a float streamed directory into a fresh epoch under
-    * re-trained centers. `nlist` 0 keeps the current cell count;
-    * `trainer` picks the quantizer-training strategy
-    * ([[SimilaritySearch.CoarseTrainer]] — the distributed scale path
-    * keeps rotation ≡ fresh-build parity within its own family). */
+    * re-trained centers. `nlist` 0 keeps the current cell count. */
   def retrainEpoch(spark: SparkSession, dir: String, outDir: String,
-      nlist: Int = 0, seed: Long = 42L, trainSample: Int = 50000,
-      trainer: SimilaritySearch.CoarseTrainer =
-        SimilaritySearch.CoarseTrainer.Default): Unit = {
+      nlist: Int = 0, seed: Long = 42L, trainSample: Int = 50000): Unit = {
     val live = load(spark, dir, persist = false).assigned
       .select(col("neighbor_id").as("vec_id"), col("tv").as("embedding"))
-    val k = if (nlist > 0) nlist else loadCenters(spark, dir).length
+    val k =
+      if (nlist > 0) nlist else SimilaritySearch.readCenters(spark, dir).length
     freezeCenters(spark, outDir, SimilaritySearch
       .buildIvfIndex(live, k, seed, trainSample = trainSample,
-        persist = false, trainer = trainer).centers)
+        persist = false).centers)
     applyBatch(live, 0L, outDir)
   }
 
@@ -575,17 +561,16 @@ object StreamingVecIndex {
   def retrainEpochInt8(spark: SparkSession, dir: String, outDir: String,
       corpus: DataFrame, nlist: Int = 0, seed: Long = 42L,
       trainSample: Int = 50000, idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      trainer: SimilaritySearch.CoarseTrainer =
-        SimilaritySearch.CoarseTrainer.Default): Unit = {
+      vecCol: String = "embedding"): Unit = {
     val liveIds = loadInt8(spark, dir, persist = false).assigned
       .select(col("neighbor_id"))
     val liveCorpus = SimilaritySearch.liveCorpusAmong(liveIds, corpus,
       idCol, s"retrainEpochInt8($dir)")
-    val k = if (nlist > 0) nlist else loadCenters(spark, dir).length
+    val k =
+      if (nlist > 0) nlist else SimilaritySearch.readCenters(spark, dir).length
     freezeCenters(spark, outDir, SimilaritySearch
       .buildIvfIndex(liveCorpus, k, seed, idCol, vecCol, trainSample,
-        persist = false, trainer = trainer).centers)
+        persist = false).centers)
     applyBatchInt8(liveCorpus, 0L, outDir, idCol, vecCol)
   }
 
@@ -598,16 +583,14 @@ object StreamingVecIndex {
   def retrainEpochPq(spark: SparkSession, dir: String, outDir: String,
       corpus: DataFrame, nlist: Int = 0, seed: Long = 42L,
       trainSample: Int = 50000, retrainCodebook: Boolean = false,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      trainer: SimilaritySearch.CoarseTrainer =
-        SimilaritySearch.CoarseTrainer.Default): Unit = {
+      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     val pq = loadPq(spark, dir, persist = false)
     val liveCorpus = SimilaritySearch.liveCorpusAmong(
       pq.assigned.select(col("neighbor_id")), corpus, idCol,
       s"retrainEpochPq($dir)")
     val k = if (nlist > 0) nlist else pq.centers.length
     val centers = SimilaritySearch.buildIvfIndex(liveCorpus, k, seed,
-      idCol, vecCol, trainSample, persist = false, trainer).centers
+      idCol, vecCol, trainSample, persist = false).centers
     val book =
       if (retrainCodebook)
         SimilaritySearch.trainPqCodebook(liveCorpus, pq.book.m,

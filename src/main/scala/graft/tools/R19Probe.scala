@@ -43,7 +43,6 @@ object R19Probe {
       case "lifecycle" => lifecycle(spark, d)
       case "hybrid" => hybrid(spark, d)
       case "rag" => rag(spark, d)
-      case "trainer" => trainer(spark)
       case "assign" => assign(spark, d)
       case other => println(s"unknown probe: $other")
     }
@@ -336,40 +335,6 @@ object R19Probe {
       t("probeRe")(SimilaritySearch.ivfProbe(re, q, k = 5, nprobe = 3).collect())
       t("probeFresh")(SimilaritySearch.ivfProbe(fresh, q, k = 5, nprobe = 3).collect())
     }
-  }
-
-  /** Isolate the coarse-trainer cost at the x100 drift scale: serial
-    * MLlib fit vs trainCentersDistributed vs the map-only reassign+save,
-    * over the generated x100 corpus (run ScaleBench first).
-    */
-  private def trainer(s: SparkSession): Unit = {
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR",
-      "target/scaledata/x100")
-    val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding")).persist()
-    val n = emb.count()
-    val (nlist, _) = SimilaritySearch.ivfScaleParams(2 * n)
-    println(s"R19PROBE corpus n=$n nlist=$nlist")
-    (1 to 2).foreach { r =>
-      val cSer = t(s"serialTrain$r") {
-        SimilaritySearch.buildIvfIndex(emb, nlist, persist = false,
-          trainer = SimilaritySearch.CoarseTrainer.Serial).centers
-      }
-      val cDist = t(s"distTrain$r") {
-        SimilaritySearch.buildIvfIndex(emb, nlist, persist = false,
-          trainer = SimilaritySearch.CoarseTrainer.Distributed()).centers
-      }
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-r19probe-save").toString
-      t(s"assignSave$r") {
-        SimilaritySearch.saveIvfIndex(
-          SimilaritySearch.IvfIndex(cDist,
-            SimilaritySearch.assignToCells(emb, cDist, "vec_id",
-              "embedding")), tmp)
-      }
-      println(s"R19PROBE centers ser=${cSer.length} dist=${cDist.length}")
-    }
-    emb.unpersist()
   }
 
   /** vx_hybrid_rrf_batch_parity stage split. */

@@ -1,26 +1,23 @@
 package graft
 
 import graft.operators.SimilaritySearch
-import graft.operators.SimilaritySearch.CoarseTrainer
 import org.apache.spark.sql.functions._
 
-/** The distributed deterministic coarse trainer (r18, verdict item 1):
-  * Lloyd iterations over QUANTIZED INTEGER per-cell sums — order-free,
-  * merge-combinable — so quantizer training parallelizes across every
-  * core while staying bit-deterministic under any partitioning. The
-  * load-bearing contracts:
+/** The coarse trainer (r18, verdict item 1) behind every IVF build,
+  * retrain and epoch rotation: Lloyd iterations over QUANTIZED INTEGER
+  * per-cell sums — order-free, merge-combinable — so quantizer training
+  * parallelizes across every core while staying bit-deterministic under
+  * any partitioning. The load-bearing contracts:
   *   - partitioning invariance: the SAME corpus through any physical
-  *     layout trains bit-identical centers (the property the serial
-  *     trainer buys with its single-partition sample, re-derived
-  *     without the single thread);
+  *     layout trains bit-identical centers (without funnelling the
+  *     sample through one partition and one thread);
   *   - distributed ≡ a sequential in-JVM reference over the same
   *     quantized inputs (integer sums are associative/commutative, so
   *     the fold order genuinely cannot matter — pinned against an
   *     independent reimplementation, not against itself);
   *   - the trained index is a valid IVF: the exact regime (probe every
   *     cell) reproduces the brute ranking;
-  *   - retrain ≡ fresh build holds WITHIN the distributed family, the
-  *     same parity the serial family gates.
+  *   - retrain ≡ fresh build.
   */
 class DistributedTrainerSpec extends SparkSpec {
 
@@ -30,7 +27,7 @@ class DistributedTrainerSpec extends SparkSpec {
   test("distributed training is bit-identical under any partitioning of the corpus") {
     def centersOf(parts: Int) =
       SimilaritySearch.buildIvfIndex(emb.repartition(parts), nlist = 8,
-          persist = false, trainer = CoarseTrainer.Distributed())
+          persist = false)
         .centers.map(_.toSeq).toSeq
     val a = centersOf(3)
     assert(a == centersOf(11),
@@ -110,7 +107,7 @@ class DistributedTrainerSpec extends SparkSpec {
       // test now routes local by default, where invariance is vacuous)
       def centersOf(parts: Int) =
         SimilaritySearch.buildIvfIndex(emb.repartition(parts), nlist = 8,
-            persist = false, trainer = CoarseTrainer.Distributed())
+            persist = false)
           .centers.map(_.toSeq).toSeq
       assert(centersOf(3) == centersOf(11),
         "forced-distributed centers diverged across physical layouts")
@@ -119,7 +116,7 @@ class DistributedTrainerSpec extends SparkSpec {
 
   test("a distributed-trained index is a valid IVF: exact regime equals brute force") {
     val idx = SimilaritySearch.buildIvfIndex(emb, nlist = 8,
-      persist = false, trainer = CoarseTrainer.Distributed())
+      persist = false)
     val q = emb.filter(col("vec_id") < 5)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
@@ -130,26 +127,16 @@ class DistributedTrainerSpec extends SparkSpec {
         "from brute force")
   }
 
-  test("retrain ≡ fresh build within the distributed family (and the geometry differs from serial)") {
+  test("retrain ≡ fresh build on an undrifted artifact") {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-dist-retrain").toString
     val built = SimilaritySearch.buildIvfIndex(emb, nlist = 8,
-      persist = false, trainer = CoarseTrainer.Distributed())
+      persist = false)
     SimilaritySearch.saveIvfIndex(built, dir)
-    SimilaritySearch.retrainIvf(spark, dir,
-      trainer = CoarseTrainer.Distributed())
+    SimilaritySearch.retrainIvf(spark, dir)
     val re = SimilaritySearch.loadIvfIndex(spark, dir, persist = false)
     assert(re.centers.map(_.toSeq).toSeq ==
       built.centers.map(_.toSeq).toSeq,
-      "distributed retrain diverged from the fresh distributed build")
-    // the two trainers are different (both valid) geometries — the
-    // family must be kept across retrains, which is worth asserting so
-    // a silent unification never masquerades as parity
-    val serial = SimilaritySearch.buildIvfIndex(emb, nlist = 8,
-      persist = false, trainer = CoarseTrainer.Serial)
-    assert(re.centers.map(_.toSeq).toSeq !=
-      serial.centers.map(_.toSeq).toSeq,
-      "distributed and serial geometries coincided — the cross-family " +
-        "parity claims in the scaladoc would be wrong")
+      "retrain diverged from the fresh build")
   }
 }

@@ -531,6 +531,25 @@ class PlanSpec extends SparkSpec {
       l.contains("bucket")), s"bucket pruning not at the scan:\n$f")
   }
 
+  test("bm25 probe plan is the same for a term list and its reverse") {
+    // the posting scan's bucket IN (…) list derives from a collect;
+    // unsorted, its printed order followed the term order, so one query
+    // planned differently run to run — normalized plans must not depend
+    // on the order a caller lists its terms in. Four terms: above the
+    // optimizer's InSet threshold (10 values) the list prints sorted
+    // whatever its order, which would hide the defect
+    val idx = graft.queries.TextQueries.prepareLexIndex(spark, sf001)
+    val terms = Seq("the", "of", "and", "to")
+    def planOf(ts: Seq[String]) = graft.tools.ExplainDump.normalize(
+      graft.operators.InvertedIndex.bm25TopK(idx, ts, k = 10)
+        .queryExecution.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+    val fwd = planOf(terms)
+    assert(fwd.contains("bucket"), s"no bucket pruning in the plan:\n$fwd")
+    assert(fwd == planOf(terms.reverse),
+      s"plan depends on the term order:\n$fwd\n---\n${planOf(terms.reverse)}")
+  }
+
   test("snippet text tokenize sits ABOVE the doc-id broadcast join (r16 weak mark)") {
     // the r16 plan bug: the split/filter tokenize projected BELOW the
     // broadcast join whose build side keeps only the ≤ k(·|Q|) result

@@ -1,19 +1,33 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.queries.{Artifact, OracleQuery}
 object Bench {
+
+  /** The artifacts `queries` declare in `needs`, closed over the
+    * artifacts' own `needs`: each once, every one after all it reads. */
+  def builds(queries: Seq[OracleQuery]): Seq[Artifact[_]] = {
+    val order = scala.collection.mutable.LinkedHashSet.empty[Artifact[_]]
+    def visit(a: Artifact[_]): Unit =
+      if (!order.contains(a)) { a.needs.foreach(visit); order += a }
+    queries.foreach(_.needs.foreach(visit))
+    order.toSeq
+  }
 
   private def fmt(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
 
   /** Time one evaluation of a query result. A THROWING query records its
-    * time-to-exception as a NEGATIVE duration — the builds convention
-    * ([[build]] below) — instead of masquerading as a fast success: round
+    * time-to-exception as a NEGATIVE duration — the build lines'
+    * convention — instead of masquerading as a fast success: round
     * 11's broken lifecycle gate sat invisibly inside the total because the
     * exception was swallowed here.
     */
-  def timeQuery(df: => org.apache.spark.sql.DataFrame): Double = {
+  def timeQuery(df: => org.apache.spark.sql.DataFrame): Double =
+    timed(df.count())
+
+  private def timed(f: => Any): Double = {
     val t0 = System.nanoTime()
-    val ok = try { df.count(); true } catch { case _: Throwable => false }
+    val ok = try { f; true } catch { case _: Throwable => false }
     val secs = (System.nanoTime() - t0) / 1e9
     if (ok) secs else -secs
   }
@@ -46,204 +60,22 @@ object Bench {
     // driver never sets this, so its runs always time the full set
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(set) => SparkEntry.queries.filter { case (n, _) => set(n) }
-      case None => SparkEntry.queries
-    }
+    val selected = SparkEntry.all.filter(q => only.forall(_(q.name)))
     // one-time artifact builds (bucketed-table writes, IVF k-means index,
     // minhash signature snapshot) are timed SEPARATELY, before the query
     // loop: at 100 TB these are persisted layout/index artifacts amortized
     // over every downstream query, so each per-query number below reports
     // steady-state probe cost and the build cost is its own line item —
-    // not billed to whichever consumer the gate happens to run first.
-    val builds = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    def build(name: String, needed: Boolean)(f: => Unit): Unit = if (needed) {
-      val t0 = System.nanoTime()
-      // a failed build is recorded as a NEGATIVE duration, not swallowed:
-      // otherwise the JSON reads like a fast successful build while the
-      // downstream query silently re-pays (or fails) the build inside its
-      // own timed region — the misattribution the split exists to prevent
-      val ok = try { f; true } catch { case _: Throwable => false }
-      val secs = (System.nanoTime() - t0) / 1e9
-      builds(name) = if (ok) secs else -secs
-    }
-    build("bucketed_tables", selected.contains("jx_bucketed_order_revenue")) {
-      graft.queries.ScaleJoinQueries.prepareBucketedTables(spark, sfDir); ()
-    }
-    build("dpp_table", selected.contains("jx_dpp_partition_pruned")) {
-      graft.queries.ScaleJoinQueries.prepareDppTable(spark, sfDir); ()
-    }
-    build("ivf_index", selected.contains("vx_ann_ivf_probe_top5") ||
-        selected.contains("vx_hybrid_rrf_filtered_quantized") ||
-        selected.contains("vx_hybrid_rrf_batch_parity") ||
-        selected.contains("vx_hybrid_rrf_weighted_ql_quantized") ||
-        selected.contains("vx_hybrid_rrf_3leg_quantized") ||
-        selected.contains("vx_hybrid_rrf_positional_quantized") ||
-        selected.contains("vx_ann_auto_filtered_quantized") ||
-        selected.contains("vx_retrieval_eval_ndcg") ||
-        selected.contains("vx_cluster_balanced_sample")) {
-      graft.queries.EngineQueries.prepareIvfIndex(spark, sfDir); ()
-    }
-    build("minhash_sigs", selected.exists(e =>
-        e._1 == "tx_dedup_minhash_pairs" || e._1 == "tx_dedup_canonical" ||
-        e._1 == "tx_stream_neardup_hits")) {
-      graft.queries.EngineQueries.prepareMinhashSigs(spark, sfDir); ()
-    }
-    build("int8_corpus", selected.contains("vx_ann_int8_top5")) {
-      graft.queries.EngineQueries.prepareInt8Corpus(spark, sfDir); ()
-    }
-    build("ivf_int8_index", selected.contains("vx_ann_ivf_int8_top5")) {
-      graft.queries.EngineQueries.prepareIvfInt8Index(spark, sfDir); ()
-    }
-    build("ivf_pq_index", selected.contains("vx_ann_ivf_pq_top5") ||
-        selected.contains("vx_stream_ann_pq_parity") ||
-        selected.contains("vx_ann_ivfpq_artifact_parity")) {
-      graft.queries.EngineQueries.prepareIvfPqIndex(spark, sfDir); ()
-    }
-    build("hybrid_pq_index",
-        selected.contains("vx_hybrid_rrf_pq_quantized")) {
-      graft.queries.EngineQueries.prepareHybridPqIndex(spark, sfDir); ()
-    }
-    build("hybrid_srp_index",
-        selected.contains("vx_hybrid_rrf_srp_quantized")) {
-      graft.queries.EngineQueries.prepareHybridSrpIndex(spark, sfDir); ()
-    }
-    build("ivf_int8_exact_index",
-        selected.contains("vx_ann_int8_filtered_quantized") ||
-        selected.contains("vx_hybrid_rrf_int8_quantized") ||
-        selected.contains("vx_hybrid_rrf_3leg_quantized")) {
-      graft.queries.EngineQueries.prepareIvfInt8ExactIndex(spark, sfDir); ()
-    }
-    // consumers: the streaming vector near-dup re-ingest gate, and (via
-    // prepareSrpIndexDirect's reuse) the hamming artifact-parity pair
-    build("srp_sketch", selected.contains("vx_stream_neardup_hits") ||
-        selected.contains("vx_stream_ann_srp_parity") ||
-        selected.exists(_._1.startsWith("vx_ann_hamming"))) {
-      graft.queries.EngineQueries.prepareSrpSketch(spark, sfDir); ()
-    }
-    build("semdedup_centers", selected.contains("vx_semdedup_kmeans")) {
-      graft.queries.EngineQueries.prepareSemDedupCenters(spark, sfDir); ()
-    }
-    build("bench_grams", selected.exists(e =>
-        e._1 == "tx_curation_funnel" || e._1 == "t_curation_by_source" ||
-        e._1 == "tx_stream_decontaminate")) {
-      graft.queries.EngineQueries.prepareBenchGrams(spark, sfDir); ()
-    }
-    build("lm_bigram_model", selected.contains("t_lm_quality_score")) {
-      graft.queries.TextQueries.prepareLmModel(spark, sfDir); ()
-    }
-    build("bpe_merges", selected.exists(e =>
-        e._1 == "t_bpe_merges" || e._1 == "t_bpe_tokenize_stats" ||
-        e._1 == "t_chunk_bpe_windows")) {
-      graft.queries.TextQueries.prepareBpeMerges(spark, sfDir); ()
-    }
-    build("lex_index", selected.exists(e =>
-        e._1 == "t_bm25_artifact_topk" || e._1 == "vx_hybrid_rrf_top10" ||
-        e._1 == "vx_hybrid_rrf_filtered_quantized" ||
-        e._1 == "vx_hybrid_rrf_batch_parity" ||
-        e._1 == "vx_hybrid_rrf_pq_quantized" ||
-        e._1 == "vx_hybrid_rrf_weighted_ql_quantized" ||
-        e._1 == "vx_hybrid_rrf_srp_quantized" ||
-        e._1 == "vx_hybrid_rrf_int8_quantized" ||
-        e._1 == "vx_hybrid_rrf_3leg_quantized" ||
-        e._1 == "vx_hybrid_rrf_positional_quantized" ||
-        e._1 == "t_bm25_wand_topk" || e._1 == "t_bm25_filtered_topk" ||
-        e._1 == "t_bm25_batch_wand_topk" ||
-        e._1 == "t_spell_suggest" || e._1 == "t_spell_suggest_filtered" ||
-        e._1 == "t_ql_topk" || e._1 == "t_ql_filtered_topk" ||
-        e._1 == "t_ql_batch_topk" || e._1 == "t_bm25_batch_wand_filtered" ||
-        e._1 == "t_lex_index_stats" || e._1 == "t_lex_facet_counts" ||
-        e._1 == "t_lex_facet_counts_filtered")) {
-      graft.queries.TextQueries.prepareLexIndex(spark, sfDir); ()
-    }
-    build("lex_index_tomb", selected.exists(_._1 == "t_bm25_tombstone_topk")) {
-      graft.queries.TextQueries.prepareTombLexIndex(spark, sfDir); ()
-    }
-    build("lex_index_pos", selected.exists(e =>
-        e._1 == "t_phrase_search_topk" || e._1 == "t_phrase_snippets" ||
-        e._1 == "t_phrase_filtered_topk" ||
-        e._1 == "t_phrase_snippets_filtered" ||
-        e._1 == "t_proximity_search_topk" ||
-        e._1 == "t_phrase_batch_topk" ||
-        e._1 == "t_proximity_batch_topk" ||
-        e._1 == "t_phrase_snippets_batch" ||
-        e._1 == "vx_hybrid_rrf_positional_quantized")) {
-      graft.queries.TextQueries.preparePhraseIndex(spark, sfDir); ()
-    }
-    build("lex_index_stream", selected.exists(e =>
-        e._1 == "tx_stream_index_bm25" || e._1 == "tx_stream_index_wand")) {
-      graft.queries.TextQueries.prepareStreamLexIndex(spark, sfDir); ()
-    }
-    build("lex_index_stream_tomb",
-        selected.exists(_._1 == "tx_stream_index_tombstone")) {
-      graft.queries.TextQueries.prepareStreamLexTombIndex(spark, sfDir); ()
-    }
-    build("vec_index_stream",
-        selected.exists(_._1 == "vx_stream_ann_probe_top5")) {
-      graft.queries.EngineQueries.prepareStreamVecIndex(spark, sfDir); ()
-    }
-    build("pq_index_stream",
-        selected.exists(_._1 == "vx_stream_ann_pq_parity")) {
-      graft.queries.EngineQueries.prepareStreamPqIndex(spark, sfDir); ()
-    }
-    build("srp_index_stream",
-        selected.exists(_._1 == "vx_stream_ann_srp_parity")) {
-      graft.queries.EngineQueries.prepareStreamSrpIndex(spark, sfDir); ()
-    }
-    build("ivf_deleted_artifact",
-        selected.exists(_._1 == "vx_ann_delete_parity")) {
-      graft.queries.EngineQueries.prepareDeletedIvfDirs(spark, sfDir); ()
-    }
-    build("jsonl_dump", selected.exists(_._1 == "s_jsonl_contract")) {
-      graft.queries.TextQueries.prepareJsonlDump(spark, sfDir); ()
-    }
-    build("embjson_dump", selected.exists(_._1 == "s_embjson_source")) {
-      graft.queries.MultimodalQueries.prepareEmbJsonDump(spark, sfDir); ()
-    }
-    // only the three consumers of the memoized detection pass — the
-    // decontaminate/incremental gates build their own (benchmark-bounded /
-    // batch-bounded) artifacts and never read prepareDupSpans
-    build("dupspan_spans", selected.exists(e =>
-        e._1 == "t_dupspan_spans" || e._1 == "t_dupspan_scrub" ||
-        e._1 == "t_dupspan_scrub_stats")) {
-      graft.queries.TextQueries.prepareDupSpans(spark, sfDir); ()
-    }
-    build("zorder_layout", selected.exists(_._1 == "jx_zorder_layout_spans")) {
-      graft.queries.ScaleJoinQueries.prepareZorderLayout(spark, sfDir); ()
-    }
-    build("power_eigs", selected.exists(_._1 == "vx_pca_power_quantized")) {
-      graft.queries.EngineQueries.preparePowerEigs(spark, sfDir); ()
-    }
-    build("power_eigs_lm",
-        selected.exists(_._1 == "vx_reduce2d_extend_quantized")) {
-      graft.queries.EngineQueries.prepareLandmarkEigs(spark, sfDir); ()
-    }
-    build("probe_weights",
-        selected.exists(_._1 == "vx_linear_probe_quantized")) {
-      graft.queries.EngineQueries.prepareProbeWeights(spark, sfDir); ()
-    }
-    build("rag_artifacts",
-        selected.exists(_._1.startsWith("tx_rag_pipeline"))) {
-      graft.queries.TextQueries.prepareRagEmb(spark, sfDir)
-      graft.queries.TextQueries.prepareRagIndex(spark, sfDir); ()
-    }
-    build("rag_ivf_artifact",
-        selected.exists(e => e._1 == "tx_rag_pipeline_ivf" ||
-          e._1 == "tx_rag_pipeline_hybrid")) {
-      graft.queries.TextQueries.prepareRagIvf(spark, sfDir); ()
-    }
-    build("srp_index_artifact",
-        selected.exists(_._1.startsWith("vx_ann_hamming"))) {
-      graft.queries.EngineQueries.prepareSrpIndexArtifact(spark, sfDir); ()
-    }
-    build("ivf_pq_index_artifact",
-        selected.exists(_._1 == "vx_ann_ivfpq_artifact_parity")) {
-      graft.queries.EngineQueries.prepareIvfPqIndexArtifact(spark, sfDir); ()
-    }
-    build("quality_weights",
-        selected.exists(_._1 == "t_quality_classifier_select")) {
-      graft.queries.TextQueries.prepareQualityWeights(spark, sfDir); ()
-    }
+    // not billed to whichever consumer the gate happens to run first. The
+    // set is derived from the selected queries' declared `needs`, and a
+    // build runs after the builds it reads, so each line bills only its
+    // own work. A failed build is recorded as a NEGATIVE duration, not
+    // swallowed: otherwise the JSON reads like a fast successful build
+    // while the downstream query silently re-pays (or fails) the build
+    // inside its own timed region — the misattribution the split exists
+    // to prevent.
+    val buildTimes = builds(selected).map(a => a.name -> timed(a(spark, sfDir)))
+    val jobs = new JobCounter(spark.sparkContext)
     // min-of-2 per query: the grading host is co-loaded, and a single-shot
     // timing charged 3-7x of neighbor noise to four innocent queries in
     // round 4 (their code was unchanged and a quiet re-measure matched
@@ -251,15 +83,20 @@ object Bench {
     // min of two runs estimates the query's true cost far better than
     // either sample; the raw pair is preserved in target/bench.json for
     // the audit trail.
-    val rawTimes = selected.map { case (name, fn) =>
-      val times = Seq.fill(2)(timeQuery(fn(spark, sfDir)))
+    val samples = selected.map { q =>
+      val runs = Seq.fill(2) {
+        val before = jobs.settle()
+        val t = timeQuery(q.fn(spark, sfDir))
+        (t, jobs.settle() - before)
+      }
+      val times = runs.map(_._1)
       // per-query line as each finishes: survives any stdout tail capture
       // for the queries near the end, and greppable in full logs
-      println(s"BENCHQ $name ${fmt(settled(times))} raw=${times.map(fmt).mkString(",")}")
-      name -> times
+      println(s"BENCHQ ${q.name} ${fmt(settled(times))} raw=${times.map(fmt).mkString(",")}")
+      (q.name, times, runs.map(_._2))
     }
-    val results = rawTimes.map { case (name, times) => name -> settled(times) }
-    val nFailed = results.values.count(_ < 0)
+    val results = samples.map { case (name, times, _) => name -> settled(times) }
+    val nFailed = results.count(_._2 < 0)
     // Locale.ROOT: the f-interpolator uses the default locale, and a
     // comma-decimal locale (de_DE, fr_FR) would emit invalid JSON
     def qjson(entries: Iterable[(String, Double)]): String =
@@ -267,13 +104,15 @@ object Bench {
         .mkString("{", ",", "}")
     // failed queries (negative) stay visible per-query but are excluded
     // from the headline total, exactly like failed builds
-    val total = results.values.filter(_ > 0).sum
-    val buildsJson = qjson(builds)
-    val rawJson = rawTimes
-      .map { case (k, ts) => "\"" + k + "\":[" + ts.map(fmt).mkString(",") + "]" }
+    val total = results.map(_._2).filter(_ > 0).sum
+    val buildsJson = qjson(buildTimes)
+    def listJson(entries: Seq[(String, Seq[String])]): String = entries
+      .map { case (k, vs) => "\"" + k + "\":[" + vs.mkString(",") + "]" }
       .mkString("{", ",", "}")
+    val rawJson = listJson(samples.map { case (k, ts, _) => k -> ts.map(fmt) })
+    val jobsJson = listJson(samples.map { case (k, _, js) => k -> js.map(_.toString) })
     val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","timing":"min_of_2","n_failed":$nFailed,"queries":${qjson(results)},"raw":$rawJson,"builds":$buildsJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","timing":"min_of_2","n_failed":$nFailed,"queries":${qjson(results)},"raw":$rawJson,"jobs":$jobsJson,"builds":$buildsJson,"sf":"$sfDir"}"""
     // the full record goes to a file; stdout additionally carries it in
     // chunk lines, because the driver artifact keeps only a ~2 KB stdout
     // tail — one 4 KB JSON line arrived truncated and unparseable in
@@ -283,20 +122,11 @@ object Bench {
       java.nio.file.Files.createDirectories(out.getParent)
       java.nio.file.Files.write(out, fullJson.getBytes("UTF-8"))
     } catch { case _: Throwable => () }
-    val sorted = results.toSeq.sortBy(_._1)
-    val chunks = {
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Seq[(String, Double)]]
-      var cur = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-      var size = 0
-      sorted.foreach { e =>
-        val w = e._1.length + 12
-        if (size + w > 1500 && cur.nonEmpty) {
-          buf += cur.toSeq; cur = scala.collection.mutable.ArrayBuffer.empty; size = 0
-        }
-        cur += e; size += w
-      }
-      if (cur.nonEmpty) buf += cur.toSeq
-      buf.toSeq
+    // greedy ≤ ~1.5 KB chunks of the name-sorted queries
+    def width(c: Seq[(String, Double)]) = c.map(_._1.length + 12).sum
+    val chunks = results.sortBy(_._1).foldLeft(Vector.empty[Vector[(String, Double)]]) {
+      case (done :+ cur, e) if width(cur :+ e) <= 1500 => done :+ (cur :+ e)
+      case (done, e) => done :+ Vector(e)
     }
     chunks.zipWithIndex.foreach { case (c, i) =>
       println(s"""{"metric":"queries_part","part":${i + 1},"of":${chunks.length},"queries":${qjson(c)}}""")
@@ -306,7 +136,7 @@ object Bench {
     // complete line-parseable record: total + builds + the 10 slowest
     // queries, count of the elided noted explicitly; full per-query detail
     // lives in the BENCHQ lines, the queries_part chunks, and target/bench.json
-    val slowest = results.toSeq.sortBy(-_._2)
+    val slowest = results.sortBy(-_._2)
     val headline = slowest.take(10)
     val json =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"n_failed":$nFailed,"queries":${qjson(headline)},"elided_faster_queries":${results.size - headline.size},"builds":$buildsJson,"full":"target/bench.json","sf":"$sfDir"}"""

@@ -1,0 +1,33 @@
+package graft
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+/** Counts the Spark jobs started in `sc` from construction on (it
+  * registers itself; `sc.removeSparkListener` ends it). Listener events
+  * arrive in order but asynchronously, so [[settle]] runs one marked
+  * sentinel job and waits for its start event: by then every job started
+  * before it has been counted. With one query running at a time, the
+  * difference of two settled reads is exactly that query's jobs.
+  */
+final class JobCounter(sc: SparkContext) extends SparkListener {
+  private val Sentinel = "graft-job-counter-sentinel"
+  private val started = new java.util.concurrent.atomic.AtomicLong
+  private val sentinels = new java.util.concurrent.Semaphore(0)
+  sc.addSparkListener(this)
+
+  override def onJobStart(e: SparkListenerJobStart): Unit =
+    if (Option(e.properties)
+        .exists(_.getProperty("spark.job.description") == Sentinel))
+      sentinels.release()
+    else { started.incrementAndGet(); () }
+
+  /** Jobs started so far, sentinels excluded, read once every job started
+    * before this call has been delivered. */
+  def settle(): Long = {
+    sc.setJobDescription(Sentinel)
+    try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    sentinels.tryAcquire(60, java.util.concurrent.TimeUnit.SECONDS)
+    started.get
+  }
+}

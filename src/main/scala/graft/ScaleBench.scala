@@ -343,7 +343,7 @@ object ScaleBench {
     val embPqIdx = scala.collection.mutable.Map
       .empty[String, graft.operators.SimilaritySearch.IvfPqIndex]
     def ragQueries(dir: String): DataFrame =
-      graft.queries.TextQueries.prepareRagEmb(spark, dir)
+      graft.queries.TextQueries.ragEmb(spark, dir)
         .filter(pmod(col("cid"), lit(10000L)) === 0 &&
           (col("cid") / 10000L) % 65 === 0)
 
@@ -352,7 +352,7 @@ object ScaleBench {
     // question is about the operator's full-corpus plan
     val families: Seq[(String, String => DataFrame)] = Seq(
       "minhash_canonicalize" -> { dir: String =>
-        val sigs = graft.queries.EngineQueries.prepareMinhashSigs(spark, dir)
+        val sigs = graft.queries.EngineQueries.minhashSigs(spark, dir)
         Dedup.canonicalize(
           Dedup.minhashCandidates(sigs, bands = 8, rowsPerBand = 4)
             .filter(col("est_jaccard") >= 0.5))
@@ -361,7 +361,7 @@ object ScaleBench {
       // iterative connected-components rounds when the combined exponent
       // needs explaining
       "minhash_candidates" -> { dir: String =>
-        val sigs = graft.queries.EngineQueries.prepareMinhashSigs(spark, dir)
+        val sigs = graft.queries.EngineQueries.minhashSigs(spark, dir)
         Dedup.minhashCandidates(sigs, bands = 8, rowsPerBand = 4)
           .filter(col("est_jaccard") >= 0.5)
       },
@@ -850,12 +850,12 @@ object ScaleBench {
         SparkEntry.queries("tx_rag_pipeline")(spark, dir)
       },
       "rag_dense_brute" -> { dir: String =>
-        val emb = graft.queries.TextQueries.prepareRagEmb(spark, dir)
+        val emb = graft.queries.TextQueries.ragEmb(spark, dir)
         graft.operators.SimilaritySearch.bruteForceTopK(
           emb, ragQueries(dir), k = 10, idCol = "cid", vecCol = "embedding")
       },
       "rag_dense_ann" -> { dir: String =>
-        val emb = graft.queries.TextQueries.prepareRagEmb(spark, dir)
+        val emb = graft.queries.TextQueries.ragEmb(spark, dir)
         graft.operators.HybridRetrieval.DenseLeg.Srp(ragSrpIdx(dir), emb)
           .probe(ragQueries(dir), k = 10, idCol = "cid", vecCol = "embedding")
       },
@@ -883,12 +883,12 @@ object ScaleBench {
       // evaluation saves by never shuffling the high-df terms' postings
       "rag_lexical" -> { dir: String =>
         graft.operators.InvertedIndex.bm25TopKPrunedByQuery(
-          graft.queries.TextQueries.prepareRagIndex(spark, dir),
+          graft.queries.TextQueries.ragIndex(spark, dir),
           ragQtermsRel(dir), 11)
       },
       "rag_lexical_unpruned" -> { dir: String =>
         unprunedBatchTopK(
-          graft.queries.TextQueries.prepareRagIndex(spark, dir),
+          graft.queries.TextQueries.ragIndex(spark, dir),
           ragQtermsRel(dir), 11)
       },
       // retrieval-eval harness over PERSISTED results/truth relations
@@ -915,12 +915,12 @@ object ScaleBench {
     }
     if (familySelected("minhash_canonicalize"))
       builds("minhash_sigs") = (
-        timeIt { graft.queries.EngineQueries.prepareMinhashSigs(spark, base); () },
-        timeIt { graft.queries.EngineQueries.prepareMinhashSigs(spark, out); () })
+        timeIt { graft.queries.EngineQueries.minhashSigs(spark, base); () },
+        timeIt { graft.queries.EngineQueries.minhashSigs(spark, out); () })
     if (familySelected("curation_funnel"))
       builds("bench_grams") = (
-        timeIt { graft.queries.EngineQueries.prepareBenchGrams(spark, base); () },
-        timeIt { graft.queries.EngineQueries.prepareBenchGrams(spark, out); () })
+        timeIt { graft.queries.EngineQueries.benchGrams(spark, base); () },
+        timeIt { graft.queries.EngineQueries.benchGrams(spark, out); () })
     if (familySelected("bm25_probe") || familySelected("ql_probe") ||
         familySelected("suggest_probe") ||
         familySelected("suggest_probe_derived") ||
@@ -1062,14 +1062,14 @@ object ScaleBench {
     }
     if (familySelected("rag_dense_ann")) {
       // warm the memoized chunk→BPE→vocab→embed pipeline OUTSIDE the
-      // timed cell: the first prepareRagEmb toucher pays the whole
+      // timed cell: the first ragEmb toucher pays the whole
       // upstream build, and this timing must attribute SRP sketching
       // alone (the rag_pipeline family owns the composed cost)
-      graft.queries.TextQueries.prepareRagEmb(spark, base).count()
-      graft.queries.TextQueries.prepareRagEmb(spark, out).count()
+      graft.queries.TextQueries.ragEmb(spark, base).count()
+      graft.queries.TextQueries.ragEmb(spark, out).count()
       def mkIdx(dir: String): Unit =
         ragSrpIdx(dir) = graft.operators.SimilaritySearch.buildSrpIndex(
-          graft.queries.TextQueries.prepareRagEmb(spark, dir),
+          graft.queries.TextQueries.ragEmb(spark, dir),
           idCol = "cid", vecCol = "embedding")
       builds("rag_srp_index") = (timeIt { mkIdx(base) }, timeIt { mkIdx(out) })
     }
@@ -1152,7 +1152,7 @@ object ScaleBench {
       // query-term relation OUTSIDE the timed cells (the rag_dense_ann
       // discipline): the pair must time the probe organizations alone
       def warm(dir: String): Unit = {
-        graft.queries.TextQueries.prepareRagIndex(spark, dir)
+        graft.queries.TextQueries.ragIndex(spark, dir)
         // the gate's OWN query relation (one shared definition — the
         // bench must measure exactly what ragFuseEval serves)
         val qt = graft.queries.TextQueries.ragQueryTerms(spark, dir)
@@ -1298,10 +1298,10 @@ object ScaleBench {
         (vecProbeTime(base), vecProbeTime(out))
     }
     if (familySelected("rag_dense_ivf")) {
-      graft.queries.TextQueries.prepareRagEmb(spark, base).count()
-      graft.queries.TextQueries.prepareRagEmb(spark, out).count()
+      graft.queries.TextQueries.ragEmb(spark, base).count()
+      graft.queries.TextQueries.ragEmb(spark, out).count()
       def mkIvf(dir: String): Unit = {
-        val emb = graft.queries.TextQueries.prepareRagEmb(spark, dir)
+        val emb = graft.queries.TextQueries.ragEmb(spark, dir)
           .select(col("cid"),
             col("embedding").cast("array<float>").as("embedding"))
         val n = emb.count()

@@ -25,6 +25,9 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     VectorQueries.queries("v_centroid_cosine_matrix")(spark, "/root/testdata/sf0.001")
 
+  /** Every declared query in pack order, with its oracle and `needs`. */
+  def all: Seq[OracleQuery] = packs.flatMap(_.all)
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     packs.flatMap(_.queries).toMap

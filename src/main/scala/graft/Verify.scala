@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.queries.Artifact
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,23 +13,33 @@ object Verify {
     * `__verify_error` parquet in the gate's slot — the driver's DuckDB
     * compare then reports an explicit rows/schema/hash FAIL instead of a
     * silent gap — and the error is returned for the failure manifest.
+    * An artifact read that the gate, or a build it triggered, does not
+    * declare in `needs` is returned the same way (the result is still
+    * written): a missing declaration would otherwise only show as a build
+    * the bench stops billing.
     */
   def writeResult(spark: SparkSession, sfDir: String, outDir: String,
-      name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-      : Option[String] =
-    try {
-      fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      None
-    } catch { case e: Throwable =>
-      val msg = (s"${e.getClass.getSimpleName}: ${e.getMessage}").take(500)
-      System.err.println(s"[verify] $name FAILED: $msg")
-      import spark.implicits._
-      try Seq(msg).toDF("__verify_error").coalesce(1)
-        .write.mode("overwrite").parquet(s"$outDir/$name")
-      catch { case _: Throwable => () }
-      Some(msg)
+      name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+      needs: Seq[Artifact[_]] = Nil): Option[String] = {
+    val (failed, undeclared) = Artifact.watch(needs) {
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
+        val msg = (s"${e.getClass.getSimpleName}: ${e.getMessage}").take(500)
+        System.err.println(s"[verify] $name FAILED: $msg")
+        import spark.implicits._
+        try Seq(msg).toDF("__verify_error").coalesce(1)
+          .write.mode("overwrite").parquet(s"$outDir/$name")
+        catch { case _: Throwable => () }
+        Some(msg)
+      }
     }
+    val unread = Option.when(undeclared.nonEmpty)(
+      "undeclared artifact read: " + undeclared.mkString(", "))
+    (failed ++ unread).reduceOption(_ + "; " + _)
+  }
 
   /** Failure manifest beside the result dirs — empty object when green,
     * so its very presence proves the loud-failure path ran. */
@@ -66,10 +77,10 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    val failures = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .flatMap { case (name, fn) =>
-        writeResult(spark, sfDir, outDir, name, fn).map(name -> _)
+    val failures = SparkEntry.all
+      .filter(q => only.forall(_.contains(q.name)))
+      .flatMap { q =>
+        writeResult(spark, sfDir, outDir, q.name, q.fn, q.needs).map(q.name -> _)
       }
     writeFailures(outDir, failures)
     // jq escapes backslash, quote, and ALL control chars (<0x20) — a tab

@@ -66,8 +66,21 @@ object InvertedIndex {
     def avgdl: Double = if (n == 0) 0.0 else sdl.toDouble / n.toDouble
   }
 
-  private def bucketOf(term: org.apache.spark.sql.Column) =
+  private[graft] def bucketOf(term: org.apache.spark.sql.Column) =
     pmod(xxhash64(term), lit(Buckets.toLong)).cast("int")
+
+  /** [[bucketOf]] on the driver, for a probe's handful of query terms:
+    * the same Spark XXH64 (seed 42) and non-negative modulus, so a probe
+    * prunes to its buckets without launching a job to hash them (the
+    * [[EdJoin.deletionKeyHashes]] precedent). Its documented twin —
+    * LexProbeBucketSpec pins the two equal over a real vocabulary.
+    */
+  private[graft] def bucketOfTerm(term: String): Int =
+    Math.floorMod(
+      org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
+        org.apache.spark.unsafe.types.UTF8String.fromString(term),
+        org.apache.spark.sql.types.StringType, 42L),
+      Buckets.toLong).toInt
 
   /** Filesystem resolved FROM the artifact path through the session's
     * Hadoop configuration — so the tombstone existence check, compact
@@ -518,19 +531,14 @@ object InvertedIndex {
     * hash buckets reach the scan as a partition filter (the build-side
     * bucketing expression replayed exactly) — ONE definition shared by
     * all six probe entry points, so a pruning-convention change cannot
-    * desynchronize them. The bucket list is SORTED: the `IN (…)` it
-    * prints into the plan is then a function of the term SET, never of
-    * the term order or of the collect's arrival order.
+    * desynchronize them. The buckets are hashed on the driver
+    * ([[bucketOfTerm]]), so building a probe starts no job, and the list
+    * is SORTED: the `IN (…)` it prints into the plan is then a function
+    * of the term SET, never of the term order.
     */
-  private def prunedPostings(idx: LexIndex, terms: Seq[String]): DataFrame = {
-    val spark = idx.postings.sparkSession
-    import spark.implicits._
-    val buckets = terms.distinct.toDF("term")
-      .withColumn("bucket", bucketOf(col("term")))
-      .select(col("bucket")).distinct().collect().map(_.getInt(0)).sorted
-      .toSeq
-    idx.postings.filter(col("bucket").isin(buckets: _*))
-  }
+  private def prunedPostings(idx: LexIndex, terms: Seq[String]): DataFrame =
+    idx.postings.filter(
+      col("bucket").isin(terms.map(bucketOfTerm).distinct.sorted: _*))
 
   /** The ungated scoring relation behind [[bm25TopK]]: every matching
     * doc's quantized BM25 score, no ranking cut — the form downstream

@@ -35,7 +35,7 @@ object CorpusCuration {
     *
     * `benchGrams`: a pre-built [[Dedup.benchmarkGrams]] relation (with
     * matching n) to reuse across runs — callers curating repeatedly against
-    * one benchmark memoize it (EngineQueries.prepareBenchGrams) instead of
+    * one benchmark memoize it (EngineQueries.benchGrams) instead of
     * re-deriving the gram explode inside every run.
     */
   def run(docs: DataFrame, benchmark: DataFrame,

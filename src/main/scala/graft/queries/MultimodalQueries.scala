@@ -457,7 +457,7 @@ object MultimodalQueries extends QueryPack {
     })
 
   // ---- the S4 JSON embedding store through the NATIVE DSv2 connector
-  //      (sources/EmbJsonDataSource): the prepare dumps the embeddings
+  //      (sources/EmbJsonDataSource): the artifact dumps the embeddings
   //      table into the reference's exact layout — one {key: [floats]}
   //      object per group file, floats as Float.toString (shortest
   //      round-trip repr, so JSON text → parseFloat is bit-exact) — and
@@ -465,8 +465,8 @@ object MultimodalQueries extends QueryPack {
   //      aggregating a quantized content checksum per group that DuckDB
   //      replays from the parquet twin. Proves the connector end-to-end:
   //      file planning, streaming parse, and the exact float round-trip ----
-  def prepareEmbJsonDump(s: SparkSession, d: String): String =
-    graft.SessionMemo.getOrElseUpdate(s, s"embjson_dump:$d") {
+  lazy val embJsonDump: Artifact[String] =
+    Artifact("embjson_dump") { (s, d) =>
       val dir = java.nio.file.Files
         .createTempDirectory("graft-embjson-dump").toString
       val rows = graft.Tables.embeddings(s, d)
@@ -486,7 +486,7 @@ object MultimodalQueries extends QueryPack {
     }(_ => ())
   private val embJsonSource = OracleQuery(
     "s_embjson_source",
-    (s, d) => s.read.format("embjson").load(prepareEmbJsonDump(s, d))
+    (s, d) => s.read.format("embjson").load(embJsonDump(s, d))
       .select(col("group").as("grp"), col("image_key"),
         explode(col("embedding")).as("v"))
       .groupBy(col("grp"))
@@ -501,7 +501,8 @@ object MultimodalQueries extends QueryPack {
             CAST(floor(CAST(unnest(embedding) AS DOUBLE) * 1000000.0)
               AS BIGINT) AS vq
           FROM embeddings)
-    GROUP BY 1 ORDER BY 1"""))
+    GROUP BY 1 ORDER BY 1"""),
+    needs = Seq(embJsonDump))
 
   // REAL video frame sampling (round 10): binaryFile scan → RIFF/AVI
   // container walk (Multimodal.parseAvi — exact byte slicing, no codec)

@@ -6,12 +6,15 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 /** One named engine query plus (optionally) its ANSI-SQL oracle form for the
   * driver's DuckDB compare (SURVEY.md §5.2#1). Queries without SQL get the
-  * weaker rows-only check and must carry a ScalaTest spec instead.
+  * weaker rows-only check and must carry a ScalaTest spec instead. `needs`
+  * lists every [[Artifact]] the query reads directly; `graft.Verify`
+  * reports a read it does not list.
   */
 final case class OracleQuery(
     name: String,
     fn: (SparkSession, String) => DataFrame,
-    sql: Option[String])
+    sql: Option[String],
+    needs: Seq[Artifact[_]] = Nil)
 
 trait QueryPack {
   def all: Seq[OracleQuery]

@@ -1,5 +1,6 @@
 package graft
 
+import graft.queries.Artifact
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Round-12 loud-failure contract: a throwing gate must be as visible in
@@ -56,5 +57,51 @@ class HarnessFailureSpec extends SparkSpec {
     val json = java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$out/verify_failures.json"))
     assert(json.trim == "{}")
+  }
+
+  // ---- the undeclared-read guard: throwaway artifacts (spark.range
+  //      only), each name fresh so its build runs inside the test ----
+  private def leaf(name: String) =
+    Artifact(name)((s, _) => s.range(3).toDF("id"))(_ => ())
+  private def freshOut(): String =
+    java.nio.file.Files.createTempDirectory("graft-verify-needs").toString
+
+  test("Verify reports a query that reads an artifact it does not declare") {
+    val rows = leaf("harness_spec_rows_q")
+    val out = freshOut()
+    val err = Verify.writeResult(spark, sf001, out, "sloppy_gate",
+      (s: SparkSession, d: String) => rows(s, d))
+    assert(err.contains("undeclared artifact read: harness_spec_rows_q"))
+    // the result is still written: the guard reports, it does not block
+    assert(spark.read.parquet(s"$out/sloppy_gate").count() == 3)
+    Verify.writeFailures(out, Seq("sloppy_gate" -> err.get))
+    val json = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(s"$out/verify_failures.json"))
+    assert(json == """{"sloppy_gate": "undeclared artifact read: harness_spec_rows_q"}""")
+  }
+
+  test("Verify reports an undeclared read inside an artifact build") {
+    val rows = leaf("harness_spec_rows_b")
+    val sloppy = Artifact("harness_spec_sloppy_b")((s, d) => rows(s, d))(_ => ())
+    val err = Verify.writeResult(spark, sf001, freshOut(), "gate_b",
+      (s: SparkSession, d: String) => sloppy(s, d), needs = Seq(sloppy))
+    assert(err.contains(
+      "undeclared artifact read: harness_spec_rows_b (in harness_spec_sloppy_b)"))
+  }
+
+  test("fully declared artifact reads leave verify_failures.json empty") {
+    val rows = leaf("harness_spec_rows_c")
+    val counted = Artifact("harness_spec_counted_c", Seq(rows))(
+      (s, d) => rows(s, d).count())(_ => ())
+    val out = freshOut()
+    val err = Verify.writeResult(spark, sf001, out, "gate_c",
+      (s: SparkSession, d: String) =>
+        rows(s, d).filter(org.apache.spark.sql.functions.col("id") < counted(s, d)),
+      needs = Seq(rows, counted))
+    assert(err.isEmpty)
+    Verify.writeFailures(out, err.map("gate_c" -> _))
+    val json = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(s"$out/verify_failures.json"))
+    assert(json == "{}")
   }
 }

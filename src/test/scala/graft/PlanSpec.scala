@@ -519,7 +519,7 @@ class PlanSpec extends SparkSpec {
   test("bm25ScoresByQuery: queries broadcast, posting scan prunes to their buckets") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val idx = graft.queries.TextQueries.prepareLexIndex(spark, sf001)
+    val idx = graft.queries.TextQueries.lexIndex(spark, sf001)
     val q = Seq((1L, "the"), (1L, "of"), (2L, "and")).toDF("query_id", "term")
     val scored = graft.operators.InvertedIndex.bm25ScoresByQuery(idx, q)
     val f = scored.queryExecution.explainString(
@@ -538,7 +538,7 @@ class PlanSpec extends SparkSpec {
     // on the order a caller lists its terms in. Four terms: above the
     // optimizer's InSet threshold (10 values) the list prints sorted
     // whatever its order, which would hide the defect
-    val idx = graft.queries.TextQueries.prepareLexIndex(spark, sf001)
+    val idx = graft.queries.TextQueries.lexIndex(spark, sf001)
     val terms = Seq("the", "of", "and", "to")
     def planOf(ts: Seq[String]) = graft.tools.ExplainDump.normalize(
       graft.operators.InvertedIndex.bm25TopK(idx, ts, k = 10)
@@ -575,7 +575,7 @@ class PlanSpec extends SparkSpec {
 
   test("streaming quality scoring is shuffle-free row-local codegen") {
     val w = graft.queries.TextQueries
-      .prepareQualityTermWeights(spark, sf001)
+      .qualityTermWeights(spark, sf001)
     val p = graft.streaming.StreamingQuality.scoreFlags(
         Tables.documents(spark, sf001), w)
       .queryExecution.executedPlan.toString

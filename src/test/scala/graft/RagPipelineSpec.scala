@@ -31,8 +31,8 @@ class RagPipelineSpec extends SparkSpec {
   }
 
   test("bm25ScoresByQuery equals per-query bm25Scores") {
-    val idx = TextQueries.prepareRagIndex(spark, sf01)
-    val ch = TextQueries.prepareRagChunks(spark, sf01)
+    val idx = TextQueries.ragIndex(spark, sf01)
+    val ch = TextQueries.ragChunks(spark, sf01)
     val qset = ch.filter(col("doc_id") % 65 === 0 && col("chunk_idx") === 0)
       .select(col("cid")).collect().map(_.getLong(0)).take(3)
     val qterms = ch.filter(col("cid").isin(qset: _*))

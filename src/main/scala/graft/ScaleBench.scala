@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.SimilaritySearch.AnnCodec
 
 /** Measured scale evidence for SURVEY §4.4 (round-5 verdict item 3).
   *
@@ -2016,10 +2017,10 @@ object ScaleBench {
           val centers = SimilaritySearch
             .buildIvfIndex(emb0, nlist, persist = false).centers
           StreamingVecIndex.freezeCenters(spark, fDir, centers)
-          StreamingVecIndex.freezePq(spark, pDir, centers,
-            SimilaritySearch.trainPqCodebook(emb0))
+          StreamingVecIndex.freeze(AnnCodec.Pq, spark, pDir,
+            (centers, SimilaritySearch.trainPqCodebook(emb0)))
           StreamingVecIndex.applyBatch(emb0, 0L, fDir)
-          StreamingVecIndex.applyBatchPq(emb0, 0L, pDir)
+          StreamingVecIndex.applyBatch(AnnCodec.Pq, emb0, 0L, pDir)
           var live = emb0
           var lastQueries: DataFrame = null
           val waveParts = (1 to 4).map { w =>
@@ -2027,7 +2028,7 @@ object ScaleBench {
             cached += wave
             wave.count()
             StreamingVecIndex.applyBatch(wave, w.toLong, fDir)
-            StreamingVecIndex.applyBatchPq(wave, w.toLong, pDir)
+            StreamingVecIndex.applyBatch(AnnCodec.Pq, wave, w.toLong, pDir)
             live = live.unionByName(wave).persist()
             cached += live
             live.count()
@@ -2048,7 +2049,8 @@ object ScaleBench {
             var pProbe: DataFrame = null
             val tP = timeIt {
               pProbe = HybridRetrieval.DenseLeg.PqRefined(
-                StreamingVecIndex.loadPq(spark, pDir, persist = false), live)
+                SimilaritySearch.loadAnnIndex(AnnCodec.Pq, spark, pDir,
+                  persist = false), live)
                 .probe(queries, K, Some(4)).persist()
               pProbe.count(); ()
             }
@@ -2072,7 +2074,7 @@ object ScaleBench {
             .bruteForceTopK(live, lastQueries, K).persist()
           truth4.count()
           val fOut = freshDir("ivf-fold")
-          StreamingVecIndex.compactTo(spark, fDir, fOut)
+          StreamingVecIndex.compactTo(AnnCodec.Float, spark, fDir, fOut)
           // the trainer folds order-free quantized integer sums across
           // every core, so the retrain's exponent should land at the
           // map-only re-assign's level
@@ -2096,7 +2098,7 @@ object ScaleBench {
           // corpus, and the rewritten-row fraction is recorded so the
           // claim is checkable
           val rOut = freshDir("ivf-rebalance")
-          StreamingVecIndex.compactTo(spark, fDir, rOut)
+          StreamingVecIndex.compactTo(AnnCodec.Float, spark, fDir, rOut)
           var rebReport: SimilaritySearch.RebalanceReport = null
           val tRebalance = timeIt {
             rebReport = SimilaritySearch.rebalanceCells(spark, rOut,
@@ -2116,14 +2118,15 @@ object ScaleBench {
             s"rewritten=${rebReport.rowsRewritten}/${rebReport.totalRows} " +
             s"(${fmt(tRebalance)}s) recall=${fmt(rFr)}")
           val pOut = freshDir("pq-fold")
-          StreamingVecIndex.compactToPq(spark, pDir, pOut)
+          StreamingVecIndex.compactTo(AnnCodec.Pq, spark, pDir, pOut)
           val tRetrainPc = timeIt {
             SimilaritySearch.retrainIvfPq(spark, pOut, live, nlist = nlist)
           }
           var pProbeC: DataFrame = null
           val tPc = timeIt {
             pProbeC = HybridRetrieval.DenseLeg.PqRefined(
-              SimilaritySearch.loadIvfPqIndex(spark, pOut, persist = false),
+              SimilaritySearch.loadAnnIndex(AnnCodec.Pq, spark, pOut,
+                persist = false),
               live).probe(lastQueries, K, Some(4)).persist()
             pProbeC.count(); ()
           }
@@ -2135,7 +2138,8 @@ object ScaleBench {
           var pProbeF: DataFrame = null
           val tPf = timeIt {
             pProbeF = HybridRetrieval.DenseLeg.PqRefined(
-              SimilaritySearch.loadIvfPqIndex(spark, pOut, persist = false),
+              SimilaritySearch.loadAnnIndex(AnnCodec.Pq, spark, pOut,
+                persist = false),
               live).probe(lastQueries, K, Some(4)).persist()
             pProbeF.count(); ()
           }

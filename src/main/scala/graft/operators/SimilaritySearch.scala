@@ -577,36 +577,249 @@ object SimilaritySearch {
       .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
       .sortBy(_._1).map(_._2)
 
-  /** Persist a built IVF index as parquet artifacts under `dir` — the
-    * lifecycle completion of the build-once story: `assigned/` holds the
-    * inverted file PARTITIONED BY cell (so a probe's nprobe-cell equi-join
-    * prunes to nprobe directories at the scan — partition pruning does the
-    * candidate selection before any row is read) and `centers/` the tiny
-    * (cell, center) quantizer table. Round-trips via [[loadIvfIndex]]:
-    * probe results are identical after reload (spec-pinned).
+  // ---- the persisted ANN artifact: one codec per family, one lifecycle ----
+  //
+  // Four families persist — float IVF, IVF-SQ8, IVF-PQ and SRP — and what
+  // differs between them is exactly an [[AnnCodec]]: the segment relation
+  // and its served columns, the per-row encoder, the frozen state beside
+  // it, and the index assembly. Save, load and the streamed lifecycle
+  // ([[graft.streaming.StreamingVecIndex]]'s freeze / applyBatch /
+  // compactTo / retrainEpoch) are each written ONCE over the codec, so a
+  // fix to one lifecycle step reaches every family.
+
+  type Centers = Array[Array[Double]]
+
+  /** One persisted ANN family. `S` is its FROZEN state — what streaming
+    * ingest never re-trains and a save writes beside the segment relation
+    * (the coarse centers; centers plus the PQ codebook; the SRP hyperplane
+    * family) — and `I` its serving index.
     */
-  def saveIvfIndex(index: IvfIndex, dir: String): Unit = {
-    val spark = index.assigned.sparkSession
-    clusterByCell(index.assigned).write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$dir/assigned")
-    writeCenters(spark, dir, index.centers)
+  sealed abstract class AnnCodec[S, I](
+      /** `assigned` (the cell-partitioned inverted file) or `sketch` (flat) */
+      private[graft] val segment: String,
+      /** the served projection of the segment; empty serves every column */
+      private[graft] val columns: Seq[String],
+      /** the frozen-state relations streaming ingest requires */
+      private[graft] val stateRelations: Seq[String]) {
+    /** The segment rows of `vecs` under the frozen state: one map-only pass. */
+    private[graft] def encode(vecs: DataFrame, state: S, idCol: String,
+        vecCol: String): DataFrame
+    private[graft] def idColumn(state: S): String = "neighbor_id"
+    /** Write the frozen state; `n` is a saved index's row count (a freeze
+      * has none). */
+    private[graft] def writeState(spark: org.apache.spark.sql.SparkSession,
+        dir: String, state: S, n: Option[Long]): Unit
+    /** Read the frozen state; `served` is the segment relation when a load
+      * has it at hand. */
+    private[graft] def readState(spark: org.apache.spark.sql.SparkSession,
+        dir: String, served: Option[DataFrame]): S
+    /** The index over `rel`; `n` is forced only by the families that carry
+      * a row count. */
+    private[graft] def assemble(state: S, rel: DataFrame, n: => Long): I
+    /** `assemble`'s inverse; the row count only where the family has one. */
+    private[graft] def parts(index: I): (S, DataFrame, Option[Long])
   }
 
-  /** Load an IVF index persisted by [[saveIvfIndex]]. The inverted file is
-    * read lazily (cell partition pruning intact); `persist` caches it for
-    * repeated probing exactly like the build path.
-    */
-  def loadIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-      persist: Boolean = true): IvfIndex = {
-    requireNotTorn(spark, dir)
-    val centers = readCenters(spark, dir)
-    // tombstones (deleteFromAnnIndex) apply exactly at load: the anti-
-    // join removes dead vectors before any probe sees the inverted file
-    val assigned = applyAnnTombstones(spark, dir,
-      spark.read.parquet(s"$dir/assigned")
-        .select(col("neighbor_id"), col("tv"), col("cell")), "neighbor_id")
-    IvfIndex(centers, if (persist) assigned.persist() else assigned)
+  /** The IVF families: the frozen state holds the coarse centers an epoch
+    * rotation re-trains. */
+  sealed abstract class IvfCodec[S, I](columns: Seq[String],
+      stateRelations: Seq[String])
+      extends AnnCodec[S, I]("assigned", columns, stateRelations) {
+    private[graft] def centers(state: S): Centers
+    private[graft] def withCenters(state: S, centers: Centers): S
   }
+
+  /** The IVF families whose whole frozen state is the centers. */
+  sealed abstract class CentersCodec[I](columns: Seq[String])
+      extends IvfCodec[Centers, I](columns, Seq("centers")) {
+    private[graft] def writeState(spark: org.apache.spark.sql.SparkSession,
+        dir: String, state: Centers, n: Option[Long]): Unit =
+      writeCenters(spark, dir, state)
+    private[graft] def readState(spark: org.apache.spark.sql.SparkSession,
+        dir: String, served: Option[DataFrame]): Centers =
+      readCenters(spark, dir)
+    private[graft] def centers(state: Centers): Centers = state
+    private[graft] def withCenters(state: Centers, centers: Centers): Centers =
+      centers
+  }
+
+  /** The SRP family's frozen state: the hyperplanes are hash-derived from
+    * (bits, seed), so freezing the pair freezes the family; `idCol` names
+    * the sketch's id column ON the artifact, so the delete lifecycle
+    * anti-joins on the right column even after the sketch schema evolves
+    * (r15). */
+  final case class SrpPlanes(bits: Int = 128, seed: Long = 42L,
+      idCol: String = "vec_id") {
+    require(bits % 64 == 0 && bits > 0,
+      s"bits=$bits must be a positive multiple of 64")
+  }
+
+  object AnnCodec {
+    /** Float IVF: `assigned` = (neighbor_id, tv, cell) under `centers/`. */
+    case object Float extends CentersCodec[IvfIndex](
+        Seq("neighbor_id", "tv", "cell")) {
+      private[graft] def encode(vecs: DataFrame, state: Centers,
+          idCol: String, vecCol: String): DataFrame =
+        assignToCells(vecs, state, idCol, vecCol)
+      private[graft] def assemble(state: Centers, rel: DataFrame,
+          n: => Long): IvfIndex = IvfIndex(state, rel)
+      private[graft] def parts(index: IvfIndex) =
+        (index.centers, index.assigned, None)
+    }
+
+    /** IVF-SQ8: the inverted file stores per-row int8 codes (bytes, scale,
+      * norm) — the 4× saving is what gets persisted. */
+    case object Int8 extends CentersCodec[IvfInt8Index](
+        Seq("neighbor_id", "cell", "scale", "qnorm", "qv")) {
+      private[graft] def encode(vecs: DataFrame, state: Centers,
+          idCol: String, vecCol: String): DataFrame =
+        assignAndQuantizeInt8(vecs, state, idCol, vecCol)
+      private[graft] def assemble(state: Centers, rel: DataFrame,
+          n: => Long): IvfInt8Index = IvfInt8Index(state, rel)
+      private[graft] def parts(index: IvfInt8Index) =
+        (index.centers, index.assigned, None)
+    }
+
+    /** IVF-PQ: 8-byte codes under `centers/` plus `codebook/` (sub, code,
+      * center); a save stamps `meta/` = (n), the auto refine dial's input. */
+    case object Pq extends IvfCodec[(Centers, PqCodebook), IvfPqIndex](
+        Seq("neighbor_id", "codes", "rnorm", "cell"),
+        Seq("centers", "codebook")) {
+      private[graft] def encode(vecs: DataFrame, state: (Centers, PqCodebook),
+          idCol: String, vecCol: String): DataFrame =
+        assignAndEncodePq(vecs, state._1, state._2, idCol, vecCol)
+      private[graft] def writeState(spark: org.apache.spark.sql.SparkSession,
+          dir: String, state: (Centers, PqCodebook), n: Option[Long]): Unit = {
+        import spark.implicits._
+        writeCenters(spark, dir, state._1)
+        writeCodebook(spark, state._2, dir)
+        n.foreach(v => Seq(Tuple1(v)).toDF("n")
+          .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta"))
+      }
+      private[graft] def readState(spark: org.apache.spark.sql.SparkSession,
+          dir: String, served: Option[DataFrame]): (Centers, PqCodebook) =
+        (readCenters(spark, dir), readCodebook(spark, dir))
+      private[graft] def assemble(state: (Centers, PqCodebook),
+          rel: DataFrame, n: => Long): IvfPqIndex =
+        IvfPqIndex(state._1, state._2, rel, n)
+      private[graft] def parts(index: IvfPqIndex) =
+        ((index.centers, index.book), index.assigned, Some(index.n))
+      private[graft] def centers(state: (Centers, PqCodebook)): Centers =
+        state._1
+      private[graft] def withCenters(state: (Centers, PqCodebook),
+          centers: Centers): (Centers, PqCodebook) = (centers, state._2)
+    }
+
+    /** SRP: the flat packed-signature `sketch/` (16 bytes/vector at 128
+      * bits) beside one `meta/` row (n, bits, seed, id_col); a freeze
+      * stamps n = −1, since a streamed artifact has no single n. The id
+      * column is the FROZEN one — SRP ingest ignores the caller's. */
+    case object Srp extends AnnCodec[SrpPlanes, SrpIndex]("sketch", Nil,
+        Seq("meta")) {
+      private[graft] def encode(vecs: DataFrame, state: SrpPlanes,
+          idCol: String, vecCol: String): DataFrame =
+        srpSketch(vecs, state.bits, state.seed, state.idCol, vecCol)
+      override private[graft] def idColumn(state: SrpPlanes): String =
+        state.idCol
+      private[graft] def writeState(spark: org.apache.spark.sql.SparkSession,
+          dir: String, state: SrpPlanes, n: Option[Long]): Unit = {
+        import spark.implicits._
+        Seq((n.getOrElse(-1L), state.bits, state.seed, state.idCol))
+          .toDF("n", "bits", "seed", "id_col")
+          .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+      }
+      // a load resolves the id column against the served sketch (legacy
+      // artifacts without id_col: the unambiguous-schema inference)
+      private[graft] def readState(spark: org.apache.spark.sql.SparkSession,
+          dir: String, served: Option[DataFrame]): SrpPlanes = {
+        val m = spark.read.parquet(s"$dir/meta").collect()(0)
+        SrpPlanes(m.getAs[Int]("bits"), m.getAs[Long]("seed"),
+          served.fold(m.getAs[String]("id_col"))(srpIdColumn(spark, dir, _)))
+      }
+      private[graft] def assemble(state: SrpPlanes, rel: DataFrame,
+          n: => Long): SrpIndex =
+        SrpIndex(rel, n, state.bits, state.seed, state.idCol)
+      private[graft] def parts(index: SrpIndex) =
+        (SrpPlanes(index.bits, index.seed, index.idCol), index.sketched,
+          Some(index.n))
+    }
+  }
+
+  /** Write a segment relation: the inverted file cell-clustered and
+    * PARTITIONED BY cell (a probe's nprobe-cell equi-join prunes to nprobe
+    * directories at the scan), the SRP sketch flat. */
+  private[graft] def writeSegment(rel: DataFrame, segment: String,
+      path: String): Unit =
+    if (segment == "sketch") rel.write.mode("overwrite").parquet(path)
+    else clusterByCell(rel).write.mode("overwrite").partitionBy("cell")
+      .parquet(path)
+
+  /** Persist a built ANN index under `dir`: the family's frozen state, then
+    * its segment relation. Round-trips via [[loadAnnIndex]]: probe results
+    * are identical after reload (spec-pinned per family).
+    */
+  def saveAnnIndex[S, I](codec: AnnCodec[S, I], index: I, dir: String): Unit = {
+    val (state, rel, n) = codec.parts(index)
+    codec.writeState(rel.sparkSession, dir, state, n)
+    writeSegment(rel, codec.segment, s"$dir/${codec.segment}")
+  }
+
+  /** Load a persisted ANN index — the batch artifact ([[saveAnnIndex]]) and
+    * the streamed directory ([[graft.streaming.StreamingVecIndex]]) alike.
+    * A torn multi-relation cut-over refuses ([[requireNotTorn]]); the
+    * segment relation scopes to the `_segments` manifest when one exists,
+    * drops the `batch` write identity, projects the served columns and
+    * applies any [[deleteFromAnnIndex]] tombstones exactly. The segment
+    * reads lazily (cell partition pruning intact); `persist` caches it for
+    * repeated probing. `n` (PQ, SRP) comes from `meta/` when it holds an
+    * n ≥ 0 and no tombstones apply; otherwise it counts the live relation
+    * (one bounded load-time job) — n feeds the auto refine dial and must
+    * describe what the probe can actually see.
+    */
+  def loadAnnIndex[S, I](codec: AnnCodec[S, I],
+      spark: org.apache.spark.sql.SparkSession, dir: String,
+      persist: Boolean = true): I = {
+    import org.apache.hadoop.fs.Path
+    requireNotTorn(spark, dir)
+    val (fs, root) = InvertedIndex.fsFor(spark, dir)
+    val served = liveSegment(spark, dir, codec.segment)
+    val state = codec.readState(spark, dir, Some(served))
+    val live = applyAnnTombstones(spark, dir,
+      if (codec.columns.isEmpty) served
+      else served.select(codec.columns.map(col): _*),
+      codec.idColumn(state))
+    val rel = if (persist) live.persist() else live
+    codec.assemble(state, rel, {
+      val stamped =
+        if (fs.exists(new Path(root, "tombstones")) ||
+            !fs.exists(new Path(root, "meta"))) -1L
+        else spark.read.parquet(s"$dir/meta").select(col("n"))
+          .collect()(0).getLong(0)
+      if (stamped >= 0) stamped else rel.count()
+    })
+  }
+
+  /** A segment relation as served: scoped to the live segments when a
+    * `_segments` merge manifest governs the directory, without the
+    * `batch` write identity (a no-op on the batch layout). */
+  private[graft] def liveSegment(spark: org.apache.spark.sql.SparkSession,
+      dir: String, segment: String): DataFrame = {
+    val (fs, root) = InvertedIndex.fsFor(spark, dir)
+    val raw = spark.read.parquet(s"$dir/$segment")
+    (if (fs.exists(new org.apache.hadoop.fs.Path(root, "_segments")))
+      raw.filter(col("batch").isin(
+        graft.streaming.StreamingVecIndex.liveSegments(spark, dir): _*))
+     else raw).drop("batch")
+  }
+
+  /** [[saveAnnIndex]] for the float family. */
+  def saveIvfIndex(index: IvfIndex, dir: String): Unit =
+    saveAnnIndex(AnnCodec.Float, index, dir)
+
+  /** [[loadAnnIndex]] for the float family. */
+  def loadIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
+      persist: Boolean = true): IvfIndex =
+    loadAnnIndex(AnnCodec.Float, spark, dir, persist)
 
   /** Cell-occupancy health of a persisted IVF index — the maintenance
     * trigger that keeps the build-once artifact honest under continuous
@@ -688,8 +901,8 @@ object SimilaritySearch {
   // deletion's identity is the vector id in every layout.
 
   /** Tombstone a batch of vector ids on a persisted ANN artifact
-    * ([[saveIvfIndex]] / [[saveIvfInt8Index]] / [[saveIvfPqIndex]] /
-    * [[saveSrpIndex]] directories all accept it). Idempotent (ids
+    * (every [[saveAnnIndex]] family's directory, batch or streamed,
+    * accepts it). Idempotent (ids
     * distinct at load) and safe for ids the index never held; write cost
     * is O(batch), the file rewrite is deferred to [[compactAnnIndex]].
     * Probes after a load see the deletion exactly: dead rows leave the
@@ -731,7 +944,7 @@ object SimilaritySearch {
   }
 
   /** The persisted SRP artifact's id column: the `id_col` metadata when
-    * the artifact carries it (r15 [[saveSrpIndex]] layout — the
+    * the artifact carries it (r15 [[AnnCodec.Srp]] layout — the
     * modulus-on-the-artifact lesson from the suggest grid), else the
     * single non-signature column of the sketch schema, REQUIRED to be
     * unambiguous: a legacy artifact whose sketch grew extra columns has
@@ -754,7 +967,7 @@ object SimilaritySearch {
         s"cannot infer the id column of legacy SRP artifact $dir: " +
           s"${nonSig.length} non-signature columns " +
           s"${nonSig.mkString("(", ", ", ")")} — re-save with " +
-          "saveSrpIndex to stamp id_col metadata")
+          "saveAnnIndex(AnnCodec.Srp, …) to stamp id_col metadata")
       nonSig.head
     }
   }
@@ -807,7 +1020,7 @@ object SimilaritySearch {
     // fail in the rehearsal, not in production when the first takedown
     // lands.
     requireNotStreamed(fs, root, dir,
-      "StreamingVecIndex.compactTo/compactToSrp(dir, outDir) " +
+      "StreamingVecIndex.compactTo(codec, …, dir, outDir) " +
         "(tombstones apply there at load and fold into the compacted copy)")
     if (!fs.exists(new Path(root, "tombstones"))) return
     val staging = s"$dir-compact-staging"
@@ -817,10 +1030,9 @@ object SimilaritySearch {
     val rewritten: Seq[String] =
       if (fs.exists(new Path(root, "assigned"))) {
         // IVF family (float / SQ8 / PQ): cell-partitioned inverted file
-        val survivors = applyAnnTombstones(spark, dir,
-          spark.read.parquet(s"$dir/assigned"), "neighbor_id")
-        clusterByCell(survivors).write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$staging/assigned")
+        writeSegment(applyAnnTombstones(spark, dir,
+          spark.read.parquet(s"$dir/assigned"), "neighbor_id"),
+          "assigned", s"$staging/assigned")
         if (fs.exists(new Path(root, "meta"))) { // PQ carries n
           val n = spark.read.parquet(s"$staging/assigned").count()
           Seq(Tuple1(n)).toDF("n")
@@ -835,13 +1047,12 @@ object SimilaritySearch {
         // a compacted legacy artifact is upgraded to the named layout.
         val sk = spark.read.parquet(s"$dir/sketch")
         val relId = srpIdColumn(spark, dir, sk)
-        applyAnnTombstones(spark, dir, sk, relId)
-          .write.mode("overwrite").parquet(s"$staging/sketch")
+        writeSegment(applyAnnTombstones(spark, dir, sk, relId), "sketch",
+          s"$staging/sketch")
         val meta = spark.read.parquet(s"$dir/meta").collect()(0)
-        val n = spark.read.parquet(s"$staging/sketch").count()
-        Seq((n, meta.getAs[Int]("bits"), meta.getAs[Long]("seed"), relId))
-          .toDF("n", "bits", "seed", "id_col")
-          .coalesce(1).write.mode("overwrite").parquet(s"$staging/meta")
+        AnnCodec.Srp.writeState(spark, staging,
+          SrpPlanes(meta.getAs[Int]("bits"), meta.getAs[Long]("seed"), relId),
+          Some(spark.read.parquet(s"$staging/sketch").count()))
         Seq("sketch", "meta")
       }
     cutOverRelations(fs, root, stagingRoot, dir, "compact", rewritten)
@@ -1109,7 +1320,7 @@ object SimilaritySearch {
     liveCorpus
   }
 
-  /** [[retrainIvf]] for the IVF-SQ8 artifact ([[saveIvfInt8Index]]
+  /** [[retrainIvf]] for the IVF-SQ8 artifact ([[AnnCodec.Int8]]
     * layout). The inverted file carries int8 codes, not floats, so the
     * caller supplies the float `corpus`; rows are matched to the
     * artifact's LIVE ids (every live id must be present — fails loudly
@@ -1122,17 +1333,17 @@ object SimilaritySearch {
       trainSample: Int = 50000, idCol: String = "vec_id",
       vecCol: String = "embedding"): Unit =
     retrainInPlace(spark, dir,
-      "StreamingVecIndex.compactToInt8(dir, outDir) first, then retrain " +
-        "the folded artifact and freezeCenters the new quantizer",
+      "StreamingVecIndex.compactTo(AnnCodec.Int8, …, dir, outDir) first, " +
+        "then retrain the folded artifact and freeze the new quantizer",
       Seq("assigned", "centers")) { staging =>
       val liveCorpus =
         liveCorpusFor(spark, dir, corpus, idCol, "retrainIvfInt8")
-      saveIvfInt8Index(buildIvfInt8Index(liveCorpus,
+      saveAnnIndex(AnnCodec.Int8, buildIvfInt8Index(liveCorpus,
         resolveNlist(spark, dir, nlist), seed, idCol, vecCol, trainSample,
         persist = false), staging)
     }
 
-  /** [[retrainIvf]] for the IVF-PQ artifact ([[saveIvfPqIndex]]
+  /** [[retrainIvf]] for the IVF-PQ artifact ([[AnnCodec.Pq]]
     * layout). Re-trains the COARSE quantizer and re-assigns; the PQ
     * codebook stays FROZEN by default (`retrainCodebook = false`):
     * PQ codes are row-local functions of the vector alone — cell
@@ -1150,8 +1361,8 @@ object SimilaritySearch {
       trainSample: Int = 50000, retrainCodebook: Boolean = false,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
     retrainInPlace(spark, dir,
-      "StreamingVecIndex.compactToPq(dir, outDir) first, then retrain " +
-        "the folded artifact and freezePq the new quantizers",
+      "StreamingVecIndex.compactTo(AnnCodec.Pq, …, dir, outDir) first, " +
+        "then retrain the folded artifact and freeze the new quantizers",
       Seq("assigned", "centers", "codebook", "meta")) { staging =>
       val liveCorpus = liveCorpusFor(spark, dir, corpus, idCol, "retrainIvfPq")
       val book =
@@ -1162,7 +1373,7 @@ object SimilaritySearch {
         } else readCodebook(spark, dir)
       val centers = buildIvfIndex(liveCorpus, resolveNlist(spark, dir, nlist),
         seed, idCol, vecCol, trainSample, persist = false).centers
-      saveIvfPqIndex(IvfPqIndex(centers, book,
+      saveAnnIndex(AnnCodec.Pq, IvfPqIndex(centers, book,
         assignAndEncodePq(liveCorpus, centers, book, idCol, vecCol),
         n = liveCorpus.count()), staging)
     }
@@ -1774,7 +1985,7 @@ object SimilaritySearch {
     * the corpus (both are per-row functions; a join of two separate
     * projections would scan the source twice and shuffle for nothing).
     * Shared by [[buildIvfInt8Index]] and the streaming ingest
-    * ([[graft.streaming.StreamingVecIndex.applyBatchInt8]]).
+    * ([[graft.streaming.StreamingVecIndex.applyBatch]] with [[AnnCodec.Int8]]).
     */
   private[graft] def assignAndQuantizeInt8(vecs: DataFrame,
       centers: Array[Array[Double]],
@@ -1784,35 +1995,6 @@ object SimilaritySearch {
         quantizeInt8Udf(col(vecCol)).as("__q"))
       .select(col("neighbor_id"), col("cell"), col("__q._1").as("scale"),
         col("__q._2").as("qnorm"), col("__q._3").as("qv"))
-
-  /** Persist an IVF-SQ8 index — completes the persistence symmetry with
-    * [[saveIvfIndex]]/[[saveIvfPqIndex]]: `assigned/` holds the QUANTIZED
-    * inverted file partitioned by cell (the resident artifact is dim
-    * bytes + scale + norm per vector — the 4× saving is exactly what gets
-    * persisted, floats stay in cold storage) and `centers/` the coarse
-    * quantizer. Probe-identical round-trip via [[loadIvfInt8Index]]
-    * (spec-pinned).
-    */
-  def saveIvfInt8Index(index: IvfInt8Index, dir: String): Unit = {
-    val spark = index.assigned.sparkSession
-    clusterByCell(index.assigned).write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$dir/assigned")
-    writeCenters(spark, dir, index.centers)
-  }
-
-  /** Load an IVF-SQ8 index persisted by [[saveIvfInt8Index]]; the inverted
-    * file reads lazily with cell partition pruning intact.
-    */
-  def loadIvfInt8Index(spark: org.apache.spark.sql.SparkSession, dir: String,
-      persist: Boolean = true): IvfInt8Index = {
-    requireNotTorn(spark, dir)
-    val centers = readCenters(spark, dir)
-    val assigned = applyAnnTombstones(spark, dir,
-      spark.read.parquet(s"$dir/assigned")
-        .select(col("neighbor_id"), col("cell"), col("scale"), col("qnorm"),
-          col("qv")), "neighbor_id")
-    IvfInt8Index(centers, if (persist) assigned.persist() else assigned)
-  }
 
   /** Probe an IVF-SQ8 index: nprobe nearest cells per query, candidates
     * from the cell equi-join, scoring through the native int8 codegen
@@ -1980,7 +2162,7 @@ object SimilaritySearch {
     * assignment AND PQ encoding in a single select over the corpus (the
     * [[assignAndQuantizeInt8]] discipline). Shared by [[buildIvfPqIndex]]
     * and the streaming ingest
-    * ([[graft.streaming.StreamingVecIndex.applyBatchPq]]).
+    * ([[graft.streaming.StreamingVecIndex.applyBatch]] with [[AnnCodec.Pq]]).
     */
   private[graft] def assignAndEncodePq(vecs: DataFrame,
       centers: Array[Array[Double]], book: PqCodebook,
@@ -1992,8 +2174,8 @@ object SimilaritySearch {
         col("__e._2").as("rnorm"))
 
   /** The PQ codebook relation writers/readers — ONE (sub, code, center)
-    * layout shared by the batch artifact ([[saveIvfPqIndex]] /
-    * [[loadIvfPqIndex]]) and the streamed one
+    * layout shared by the batch artifact ([[saveAnnIndex]] /
+    * [[loadAnnIndex]] with [[AnnCodec.Pq]]) and the streamed one
     * ([[graft.streaming.StreamingVecIndex]]'s frozen codebook), so the
     * two lifecycles cannot drift.
     */
@@ -2076,49 +2258,6 @@ object SimilaritySearch {
     topKPerQuery(cand.select(col("query_id"), col("neighbor_id"),
       adc(col("codes"), col("rnorm"), col("lut"), col("qnorm")).as("cosine")),
       k)
-  }
-
-  /** Persist an IVF-PQ index under `dir`: `assigned/` = the 8-byte-code
-    * inverted file partitioned by cell (same pruning layout as
-    * [[saveIvfIndex]]), `centers/` = the coarse quantizer, `codebook/` =
-    * the per-subspace PQ centroid tables as (sub, code, center) rows.
-    */
-  def saveIvfPqIndex(index: IvfPqIndex, dir: String): Unit = {
-    val spark = index.assigned.sparkSession
-    import spark.implicits._
-    clusterByCell(index.assigned).write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$dir/assigned")
-    writeCenters(spark, dir, index.centers)
-    writeCodebook(spark, index.book, dir)
-    Seq(Tuple1(index.n)).toDF("n")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-  }
-
-  /** Load an IVF-PQ index persisted by [[saveIvfPqIndex]]; probe results
-    * are identical after reload (spec-pinned).
-    */
-  def loadIvfPqIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-      persist: Boolean = true): IvfPqIndex = {
-    requireNotTorn(spark, dir)
-    val centers = readCenters(spark, dir)
-    val book = readCodebook(spark, dir)
-    val rawAssigned = spark.read.parquet(s"$dir/assigned")
-      .select(col("neighbor_id"), col("codes"), col("rnorm"), col("cell"))
-    val tombstoned = annTombstones(spark, dir).isDefined
-    val assigned = applyAnnTombstones(spark, dir, rawAssigned, "neighbor_id")
-    // pre-metadata artifacts (no meta/): reconstruct n with one count of
-    // the code relation — paid once at LOAD, never per probe. A
-    // tombstoned artifact counts SURVIVORS the same way: n feeds the
-    // auto refine dial and must describe what the probe can actually see
-    val metaPath = new org.apache.hadoop.fs.Path(s"$dir/meta")
-    val n =
-      if (tombstoned) assigned.count()
-      else if (metaPath.getFileSystem(spark.sessionState.newHadoopConf())
-          .exists(metaPath))
-        spark.read.parquet(s"$dir/meta").collect()(0).getLong(0)
-      else assigned.count()
-    IvfPqIndex(centers, book,
-      if (persist) assigned.persist() else assigned, n)
   }
 
   /** IVF-PQ probe with a refine stage (the FAISS `IndexRefineFlat` layout,
@@ -2235,46 +2374,6 @@ object SimilaritySearch {
     val sk = srpSketch(corpus, bits, seed, idCol, vecCol)
     SrpIndex(if (persist) sk.persist() else sk, corpus.count(), bits, seed,
       idCol)
-  }
-
-  /** Persist an SRP index under `dir`: `sketch/` = the packed signature
-    * relation, `meta/` = one (n, bits, seed, id_col) row. 16 bytes/vector
-    * at the 128-bit default — the leanest persisted ANN artifact in the
-    * family. `id_col` names the sketch's id column ON the artifact (r15):
-    * SRP supports an arbitrary build-time idCol, and the delete lifecycle
-    * ([[deleteFromAnnIndex]]'s type resolution, [[compactAnnIndex]]'s
-    * survivor rewrite) must anti-join on the RIGHT column even after the
-    * sketch schema evolves — a first-non-signature-column guess would
-    * silently delete nothing, or everything.
-    */
-  def saveSrpIndex(index: SrpIndex, dir: String): Unit = {
-    val spark = index.sketched.sparkSession
-    import spark.implicits._
-    index.sketched.write.mode("overwrite").parquet(s"$dir/sketch")
-    Seq((index.n, index.bits, index.seed, index.idCol))
-      .toDF("n", "bits", "seed", "id_col")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-  }
-
-  /** Load an SRP index persisted by [[saveSrpIndex]]; probes against the
-    * reloaded artifact are bit-identical (the signatures are exact longs
-    * and the metadata pins the hyperplane family).
-    */
-  def loadSrpIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-      persist: Boolean = true): SrpIndex = {
-    requireNotTorn(spark, dir)
-    val meta = spark.read.parquet(s"$dir/meta").collect()(0)
-    val raw = spark.read.parquet(s"$dir/sketch")
-    // the id column comes from the artifact's metadata (legacy df-less
-    // artifacts: the unambiguous-schema inference, loud on ambiguity)
-    val relId = srpIdColumn(spark, dir, raw)
-    val tombstoned = annTombstones(spark, dir).isDefined
-    val sk = applyAnnTombstones(spark, dir, raw, relId)
-    // under live tombstones n counts SURVIVORS (one bounded load-time
-    // job): n is the scale dial input and must describe the served scan
-    SrpIndex(if (persist) sk.persist() else sk,
-      if (tombstoned) sk.count() else meta.getAs[Long]("n"),
-      meta.getAs[Int]("bits"), meta.getAs[Long]("seed"), relId)
   }
 
   /** Brute Hamming top-k over SRP sketches with exact refine: the scan

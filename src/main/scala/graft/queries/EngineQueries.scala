@@ -4,6 +4,7 @@ import graft.Tables
 import graft.functions.VecOps
 import graft.ml.MlOps
 import graft.operators.{Dedup, HybridRetrieval, SimilaritySearch, VecAgg}
+import graft.operators.SimilaritySearch.AnnCodec
 import org.apache.spark.sql.functions._
 
 /** Engine-native operators with no exact ANSI-SQL twin (hash-seeded LSH,
@@ -1187,10 +1188,12 @@ object EngineQueries extends QueryPack {
     * replays).
     */
   lazy val hybridPqIndex: Artifact[SimilaritySearch.IvfPqIndex] =
-    Artifact("hybrid_pq_index")((s, d) =>
-      SimilaritySearch.buildIvfPqIndex(quantizedEmb(s, d), nlist = 8,
-        m = 8, ksub = 64))(
-      _.unpersist())
+    Artifact("hybrid_pq_index") { (s, d) =>
+      val idx = SimilaritySearch.buildIvfPqIndex(quantizedEmb(s, d),
+        nlist = 8, m = 8, ksub = 64)
+      idx.assigned.count() // materialize once — probes time the join
+      idx
+    }(_.unpersist())
 
   // ---- FILTERED hybrid retrieval with the dense leg served from the
   //      32×-COMPRESSED tier (r16 — verdict item 1: rrfTopK* accepted
@@ -1509,9 +1512,11 @@ object EngineQueries extends QueryPack {
     * stamped for the refine dial; the gate pins refine anyway).
     */
   lazy val hybridSrpIndex: Artifact[SimilaritySearch.SrpIndex] =
-    Artifact("hybrid_srp_index")((s, d) =>
-      SimilaritySearch.buildSrpIndex(quantizedEmb(s, d)))(
-      _.unpersist())
+    Artifact("hybrid_srp_index") { (s, d) =>
+      val idx = SimilaritySearch.buildSrpIndex(quantizedEmb(s, d))
+      idx.sketched.count() // materialize once — probes time the scan
+      idx
+    }(_.unpersist())
 
   // ---- WEIGHTED hybrid with the QL lexical leg (r16 — verdict item 6:
   //      rrfFuseRanked already took arbitrary legs; weighted RRF plus a
@@ -2183,9 +2188,9 @@ object EngineQueries extends QueryPack {
 
   // ---- STREAMED PQ ingest parity (r15 — the int8 extension proved the
   //      segment machinery schema-agnostic; this gate proves the ENCODE
-  //      step streams too): the corpus lands as three applyBatchPq
-  //      deltas under quantizers FROZEN from the session's batch-built
-  //      PQ index (coarse centers + PQ codebook), with a manifest-
+  //      step streams too): the corpus lands as three AnnCodec.Pq
+  //      applyBatch deltas under quantizers FROZEN from the session's
+  //      batch-built PQ index (coarse centers + PQ codebook), with a manifest-
   //      committed merge mid-stream; both indexes are probed with the
   //      same metadata-resolved auto policy and the contract is
   //      IDENTICAL result lists, stated as constants (the
@@ -2199,15 +2204,15 @@ object EngineQueries extends QueryPack {
       val dir = java.nio.file.Files
         .createTempDirectory("graft-svec-pq-gate").toString
       val built = ivfPqIndex(s, d)
-      graft.streaming.StreamingVecIndex.freezePq(s, dir, built.centers,
-        built.book)
+      graft.streaming.StreamingVecIndex.freeze(AnnCodec.Pq, s, dir,
+        (built.centers, built.book))
       val emb = Tables.embeddings(s, d)
       (0L to 2L).foreach { b =>
-        graft.streaming.StreamingVecIndex.applyBatchPq(
+        graft.streaming.StreamingVecIndex.applyBatch(AnnCodec.Pq,
           emb.filter(pmod(col("vec_id"), lit(3L)) === b), b, dir)
         graft.streaming.StreamingVecIndex.maybeMerge(s, dir, 2, b)
       }
-      val idx = graft.streaming.StreamingVecIndex.loadPq(s, dir)
+      val idx = SimilaritySearch.loadAnnIndex(AnnCodec.Pq, s, dir)
       idx.assigned.count() // materialize once — probes time the join
       idx
     }(_.unpersist())
@@ -2215,7 +2220,7 @@ object EngineQueries extends QueryPack {
   //      streaming symmetry: float/int8/PQ streamed through the cell
   //      machinery, and the flat sketch tier now streams through the
   //      SAME manifest/merge/orphan mechanics under a batch=-only
-  //      layout): three applyBatchSrp deltas under the frozen
+  //      layout): three AnnCodec.Srp applyBatch deltas under the frozen
   //      (bits, seed) family + a mid-stream merge, probed with the
   //      metadata-resolved auto policy against the session's direct
   //      sketch — sketching is row-local and deterministic, so
@@ -2224,14 +2229,15 @@ object EngineQueries extends QueryPack {
     Artifact("srp_index_stream") { (s, d) =>
       val dir = java.nio.file.Files
         .createTempDirectory("graft-svec-srp-gate").toString
-      graft.streaming.StreamingVecIndex.freezeSrp(s, dir) // 128 bits, seed 42
+      graft.streaming.StreamingVecIndex.freeze(AnnCodec.Srp, s, dir,
+        SimilaritySearch.SrpPlanes()) // 128 bits, seed 42
       val emb = Tables.embeddings(s, d)
       (0L to 2L).foreach { b =>
-        graft.streaming.StreamingVecIndex.applyBatchSrp(
+        graft.streaming.StreamingVecIndex.applyBatch(AnnCodec.Srp,
           emb.filter(pmod(col("vec_id"), lit(3L)) === b), b, dir)
         graft.streaming.StreamingVecIndex.maybeMerge(s, dir, 2, b)
       }
-      val idx = graft.streaming.StreamingVecIndex.loadSrp(s, dir)
+      val idx = SimilaritySearch.loadAnnIndex(AnnCodec.Srp, s, dir)
       idx.sketched.count() // materialize once — probes time the scan
       idx
     }(_.unpersist())
@@ -2460,9 +2466,12 @@ object EngineQueries extends QueryPack {
   // candidates AND 4× less resident state, the standard large-scale ANN
   // deployment shape. Build-once via SessionMemo like its siblings.
   lazy val ivfInt8Index: Artifact[SimilaritySearch.IvfInt8Index] =
-    Artifact("ivf_int8_index")((s, d) =>
-      SimilaritySearch.buildIvfInt8Index(Tables.embeddings(s, d), nlist = 8))(
-      _.unpersist())
+    Artifact("ivf_int8_index") { (s, d) =>
+      val idx = SimilaritySearch.buildIvfInt8Index(Tables.embeddings(s, d),
+        nlist = 8)
+      idx.assigned.count() // materialize once — probes time the join
+      idx
+    }(_.unpersist())
 
   lazy val ivfPqIndex: Artifact[SimilaritySearch.IvfPqIndex] =
     Artifact("ivf_pq_index")((s, d) =>
@@ -2471,14 +2480,16 @@ object EngineQueries extends QueryPack {
       _.unpersist())
 
   /** The PQ index roundtripped through its parquet artifact
-    * (saveIvfPqIndex → loadIvfPqIndex) — centers, codebook, codes, and
-    * the n metadata the auto refine dial resolves from. */
+    * (saveAnnIndex → loadAnnIndex, AnnCodec.Pq) — centers, codebook,
+    * codes, and the n metadata the auto refine dial resolves from. */
   lazy val ivfPqIndexArtifact: Artifact[SimilaritySearch.IvfPqIndex] =
     Artifact("ivf_pq_index_artifact", Seq(ivfPqIndex)) { (s, d) =>
       val dir = java.nio.file.Files
         .createTempDirectory("graft-ivfpqidx").toString
-      SimilaritySearch.saveIvfPqIndex(ivfPqIndex(s, d), dir)
-      SimilaritySearch.loadIvfPqIndex(s, dir)
+      SimilaritySearch.saveAnnIndex(AnnCodec.Pq, ivfPqIndex(s, d), dir)
+      val idx = SimilaritySearch.loadAnnIndex(AnnCodec.Pq, s, dir)
+      idx.assigned.count() // materialize once — probes time the join
+      idx
     }(_.unpersist())
 
   // Artifact parity for the family's most complex persisted index
@@ -2497,24 +2508,20 @@ object EngineQueries extends QueryPack {
   // assignment of the surviving corpus — the GDPR/DMCA takedown contract
   // (deleteFromAnnIndex/compactAnnIndex) stated as constants: any
   // under-deletion (dead id served), over-deletion, or compact drift
-  // breaks the hash. The artifact builds once per session (SessionMemo).
-  lazy val deletedIvfDirs: Artifact[(String, SimilaritySearch.IvfIndex)] =
-    Artifact("ivf_deleted_artifact") { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-      val idx = SimilaritySearch.buildIvfIndex(emb, nlist = 8,
-        persist = false)
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-ivf-del-gate").toString
-      SimilaritySearch.saveIvfIndex(idx, dir)
-      SimilaritySearch.deleteFromAnnIndex(s, dir, Seq(11L, 13L, 999999999L))
-      (dir, idx)
-    }(_ => ())
+  // breaks the hash. Only the untombstoned index builds once per session
+  // (SessionMemo); the lifecycle mutates its directory, so each serve
+  // saves it to a FRESH one — every evaluation probes a tombstoned
+  // artifact and prices the same work.
+  lazy val deleteGateIndex: Artifact[SimilaritySearch.IvfIndex] =
+    Artifact("ivf_deleted_artifact")((s, d) =>
+      SimilaritySearch.buildIvfIndex(Tables.embeddings(s, d), nlist = 8,
+        persist = false))(_ => ())
   private val annDeleteParity = OracleQuery(
     "vx_ann_delete_parity",
     (s, d) => {
       val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") < 10)
-      val (dir, idx) = deletedIvfDirs(s, d)
+      val idx = deleteGateIndex(s, d)
       val survivors = emb.filter(!col("vec_id").isin(11L, 13L, 999999999L))
       // each probe is a bounded k×|Q| relation: COLLECT before the next
       // lifecycle step (compact deletes the tombstone files a lazy plan
@@ -2528,23 +2535,30 @@ object EngineQueries extends QueryPack {
         SimilaritySearch.IvfIndex(idx.centers, SimilaritySearch
           .assignToCells(survivors, idx.centers, "vec_id", "embedding")),
         q, k = 5, nprobe = 3))
-      val tombstoned = rows(SimilaritySearch.ivfProbe(
-        SimilaritySearch.loadIvfIndex(s, dir, persist = false),
-        q, k = 5, nprobe = 3))
-      SimilaritySearch.compactAnnIndex(s, dir)
-      val compacted = rows(SimilaritySearch.ivfProbe(
-        SimilaritySearch.loadIvfIndex(s, dir, persist = false),
-        q, k = 5, nprobe = 3))
-      def mismatches(a: Seq[(Long, Int, Long, Double)],
-          b: Seq[(Long, Int, Long, Double)]): Long =
-        (a.size - a.intersect(b).size).toLong + (b.size - a.intersect(b).size)
-      import s.implicits._
-      Seq((mismatches(want, tombstoned), mismatches(want, compacted)))
-        .toDF("n_mismatch_tombstoned", "n_mismatch_compacted")
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft-ivf-del-gate").toString
+      try {
+        SimilaritySearch.saveIvfIndex(idx, dir)
+        SimilaritySearch.deleteFromAnnIndex(s, dir,
+          Seq(11L, 13L, 999999999L))
+        val tombstoned = rows(SimilaritySearch.ivfProbe(
+          SimilaritySearch.loadIvfIndex(s, dir, persist = false),
+          q, k = 5, nprobe = 3))
+        SimilaritySearch.compactAnnIndex(s, dir)
+        val compacted = rows(SimilaritySearch.ivfProbe(
+          SimilaritySearch.loadIvfIndex(s, dir, persist = false),
+          q, k = 5, nprobe = 3))
+        def mismatches(a: Seq[(Long, Int, Long, Double)],
+            b: Seq[(Long, Int, Long, Double)]): Long =
+          (a.size - a.intersect(b).size).toLong + (b.size - a.intersect(b).size)
+        import s.implicits._
+        Seq((mismatches(want, tombstoned), mismatches(want, compacted)))
+          .toDF("n_mismatch_tombstoned", "n_mismatch_compacted")
+      } finally sweepScratch(s, dir)
     },
     Some("""SELECT CAST(0 AS BIGINT) AS n_mismatch_tombstoned,
       CAST(0 AS BIGINT) AS n_mismatch_compacted"""),
-    needs = Seq(deletedIvfDirs))
+    needs = Seq(deleteGateIndex))
 
   // The self-priced lifecycle gates build a FRESH artifact directory per
   // serve (memoizing a verb that mutates its artifact would be a
@@ -2764,7 +2778,7 @@ object EngineQueries extends QueryPack {
         emb.filter(col("vec_id") % 2 === 1 && col("vec_id") % 4 =!= 1),
         1L, src)
       SimilaritySearch.deleteFromAnnIndex(s, src, Seq(12L))
-      StreamingVecIndex.retrainEpoch(s, src, out, nlist = 8)
+      StreamingVecIndex.retrainEpoch(AnnCodec.Float, s, src, out, nlist = 8)
       val re = StreamingVecIndex.load(s, out, persist = false)
       val got = rows(re)
       // the resume leg: a post-rotation wave appends under the new
@@ -2822,7 +2836,7 @@ object EngineQueries extends QueryPack {
     }(_.unpersist())
 
   /** Build-once DIRECT SrpIndex (in-session, no disk roundtrip) and its
-    * PERSISTED twin (saveSrpIndex → loadSrpIndex through parquet) — the
+    * PERSISTED twin (saveAnnIndex → loadAnnIndex through parquet) — the
     * hamming gate serves from the artifact (what a deployment probes)
     * and the parity gate proves the roundtrip changed nothing, down to
     * the metadata-resolved refine dial.
@@ -2840,8 +2854,10 @@ object EngineQueries extends QueryPack {
     Artifact("srp_index_artifact", Seq(srpIndexDirect)) { (s, d) =>
       val dir = java.nio.file.Files
         .createTempDirectory("graft-srpidx").toString
-      SimilaritySearch.saveSrpIndex(srpIndexDirect(s, d), dir)
-      SimilaritySearch.loadSrpIndex(s, dir)
+      SimilaritySearch.saveAnnIndex(AnnCodec.Srp, srpIndexDirect(s, d), dir)
+      val idx = SimilaritySearch.loadAnnIndex(AnnCodec.Srp, s, dir)
+      idx.sketched.count() // materialize once — probes time the scan
+      idx
     }(_.unpersist())
 
   // SRP-Hamming brute scan + exact refine: every corpus row scored by
@@ -2849,7 +2865,7 @@ object EngineQueries extends QueryPack {
   // with NO UDF (PlanSpec-pinned), the leanest full-scan operating point
   // (no bucket-miss cliff). Hyperplane signs are engine floats → rows-only;
   // SimilaritySearchSpec pins recall ≥ 0.6 refined. Served from the
-  // PERSISTED saveSrpIndex artifact via the metadata-resolved auto
+  // PERSISTED AnnCodec.Srp artifact via the metadata-resolved auto
   // policy — the deployment path; vx_ann_hamming_artifact_parity proves
   // it bit-equal to the direct in-session index IN the gate suite.
   private val annHamming = OracleQuery(

@@ -164,4 +164,24 @@ class EngineQueriesSpec extends SparkSpec {
     val acc = MlOps.gbtCvAccuracy(df, "embedding", "y", "id", k = 2, maxIter = 5)
     assert(acc > 0.9, s"gbt acc = $acc")
   }
+
+  test("vx_ann_delete_parity starts the same jobs on every evaluation: each serve tombstones a fresh artifact") {
+    // sf0.01, not the sf0.001 corpus EntrySpec evaluates every query on:
+    // this session's memoized artifact must be fresh here
+    val q = SparkEntry.all.find(_.name == "vx_ann_delete_parity").get
+    Bench.builds(Seq(q)).foreach(_(spark, sf01))
+    val jobs = new JobCounter(spark.sparkContext)
+    try {
+      val counts = Seq.fill(2) {
+        val before = jobs.settle()
+        val out = q.fn(spark, sf01).collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSeq
+        assert(out == Seq((0L, 0L)), s"delete parity mismatches: $out")
+        jobs.settle() - before
+      }
+      assert(counts.head == counts(1),
+        s"jobs per evaluation differ: $counts — a later evaluation is not " +
+          "pricing the tombstoned probe and the compact")
+    } finally spark.sparkContext.removeSparkListener(jobs)
+  }
 }

@@ -1,6 +1,8 @@
 package graft
 
 import graft.operators.SimilaritySearch
+import graft.operators.SimilaritySearch.AnnCodec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The retrain lifecycle (r17): re-training a persisted ANN artifact's
@@ -109,7 +111,7 @@ class RetrainSpec extends SparkSpec {
     assert(e.getMessage.contains("compactTo"))
     // the documented route works end-to-end: fold, then retrain the fold
     val out = tmp("ivf-streamed-fold")
-    StreamingVecIndex.compactTo(spark, dir, out)
+    StreamingVecIndex.compactTo(AnnCodec.Float, spark, dir, out)
     SimilaritySearch.retrainIvf(spark, out)
     assert(SimilaritySearch.loadIvfIndex(spark, out, persist = false)
       .assigned.count() == 100)
@@ -117,12 +119,12 @@ class RetrainSpec extends SparkSpec {
 
   test("retrainIvfInt8 parity and nlist re-shape") {
     val dir = tmp("int8")
-    SimilaritySearch.saveIvfInt8Index(
+    SimilaritySearch.saveAnnIndex(AnnCodec.Int8,
       SimilaritySearch.buildIvfInt8Index(emb, nlist = 8, persist = false), dir)
     // re-shape to 4 cells while retraining — the √n policy path as the
     // corpus outgrows its original cell count
     SimilaritySearch.retrainIvfInt8(spark, dir, emb, nlist = 4)
-    val re = SimilaritySearch.loadIvfInt8Index(spark, dir, persist = false)
+    val re = SimilaritySearch.loadAnnIndex(AnnCodec.Int8, spark, dir, persist = false)
     val fresh = SimilaritySearch.buildIvfInt8Index(emb, nlist = 4,
       persist = false)
     assert(re.centers.length == 4)
@@ -140,11 +142,11 @@ class RetrainSpec extends SparkSpec {
     val dir = tmp("pq")
     val built = SimilaritySearch.buildIvfPqIndex(emb, nlist = 8,
       persist = false)
-    SimilaritySearch.saveIvfPqIndex(built, dir)
+    SimilaritySearch.saveAnnIndex(AnnCodec.Pq, built, dir)
     SimilaritySearch.deleteFromAnnIndex(
       emb.filter(col("vec_id") >= 450).select(col("vec_id")), dir)
     SimilaritySearch.retrainIvfPq(spark, dir, emb)
-    val re = SimilaritySearch.loadIvfPqIndex(spark, dir, persist = false)
+    val re = SimilaritySearch.loadAnnIndex(AnnCodec.Pq, spark, dir, persist = false)
     // the codebook is FROZEN by default: codes are row-local, so coarse
     // drift repair never invalidates them
     assert(re.book.centers.map(_.map(_.toSeq).toSeq).toSeq ==
@@ -159,7 +161,7 @@ class RetrainSpec extends SparkSpec {
     // retrainCodebook = true re-trains BOTH quantizers: on the same live
     // rows and seed this reproduces a fresh full build's codebook
     SimilaritySearch.retrainIvfPq(spark, dir, emb, retrainCodebook = true)
-    val re2 = SimilaritySearch.loadIvfPqIndex(spark, dir, persist = false)
+    val re2 = SimilaritySearch.loadAnnIndex(AnnCodec.Pq, spark, dir, persist = false)
     val freshPq = SimilaritySearch.buildIvfPqIndex(
       emb.filter(col("vec_id") < 450), nlist = 8, persist = false)
     assert(re2.book.centers.map(_.map(_.toSeq).toSeq).toSeq ==
@@ -168,36 +170,49 @@ class RetrainSpec extends SparkSpec {
 
   test("retrainEpoch rotates a streamed dir into a fresh epoch that equals a fresh build and keeps ingesting") {
     import graft.streaming.StreamingVecIndex
-    val s1 = tmp("epoch-src")
-    val s2 = tmp("epoch-out")
+    import graft.operators.HybridRetrieval.DenseLeg
     val e = emb.select(col("vec_id"), col("embedding"))
-    StreamingVecIndex.freezeCenters(spark, s1,
-      SimilaritySearch.buildIvfIndex(e.filter(col("vec_id") < 200),
-        nlist = 4, persist = false).centers)
-    StreamingVecIndex.applyBatch(e.filter(col("vec_id") < 200), 0L, s1)
-    StreamingVecIndex.applyBatch(
-      e.filter(col("vec_id") >= 200 && col("vec_id") < 400), 1L, s1)
-    SimilaritySearch.deleteFromAnnIndex(spark, s1, Seq(7L))
-    StreamingVecIndex.retrainEpoch(spark, s1, s2, nlist = 8)
-    // the new epoch IS a fresh build over the live rows (re-shaped 4→8)
     val survivors = e.filter(col("vec_id") < 400 && col("vec_id") =!= 7L)
+    val wave = e.filter(col("vec_id") >= 400 && col("vec_id") < 450)
+    // the new epoch IS a fresh build over the live rows (re-shaped 4→8)
     val fresh = SimilaritySearch.buildIvfIndex(survivors, nlist = 8,
       persist = false)
-    val re = StreamingVecIndex.load(spark, s2, persist = false)
-    assert(re.centers.map(_.toSeq).toSeq == fresh.centers.map(_.toSeq).toSeq)
-    assert(probeRows(re) == probeRows(fresh))
-    // and the stream RESUMES against the rotated epoch: a new wave
-    // appends under the new frozen centers, probing exactly like a
-    // same-centers assignment of the union (the append ≡ rebuild
-    // contract, now on the post-rotation quantizer)
-    val wave = e.filter(col("vec_id") >= 400 && col("vec_id") < 450)
-    StreamingVecIndex.applyBatch(wave, 1L, s2)
-    val after = StreamingVecIndex.load(spark, s2, persist = false)
-    assert(after.assigned.count() == 399 + 50)
-    val want = SimilaritySearch.IvfIndex(fresh.centers,
-      SimilaritySearch.assignToCells(survivors.unionByName(wave),
-        fresh.centers, "vec_id", "embedding"))
-    assert(probeRows(after) == probeRows(want))
+    // the float segments carry their vectors; the int8 ones carry codes,
+    // so that rotation re-quantizes from the supplied corpus
+    def rotation[I](fam: SimilaritySearch.CentersCodec[I],
+        corpus: Option[DataFrame])(leg: I => DenseLeg): Unit = {
+      val s1 = tmp(s"epoch-$fam-src")
+      val s2 = tmp(s"epoch-$fam-out")
+      def rows(idx: I) = leg(idx).probe(e.filter(col("vec_id") < 10), k = 5,
+          nprobe = Some(2))
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
+      def sameCenters(corpus: DataFrame) = fam.assemble(fresh.centers,
+        fam.encode(corpus, fresh.centers, "vec_id", "embedding"), -1L)
+      StreamingVecIndex.freeze(fam, spark, s1,
+        SimilaritySearch.buildIvfIndex(e.filter(col("vec_id") < 200),
+          nlist = 4, persist = false).centers)
+      StreamingVecIndex.applyBatch(fam, e.filter(col("vec_id") < 200), 0L, s1)
+      StreamingVecIndex.applyBatch(fam,
+        e.filter(col("vec_id") >= 200 && col("vec_id") < 400), 1L, s1)
+      SimilaritySearch.deleteFromAnnIndex(spark, s1, Seq(7L))
+      StreamingVecIndex.retrainEpoch(fam, spark, s1, s2, corpus, nlist = 8)
+      val re = SimilaritySearch.loadAnnIndex(fam, spark, s2, persist = false)
+      assert(fam.parts(re)._1.map(_.toSeq).toSeq ==
+        fresh.centers.map(_.toSeq).toSeq, s"$fam: centers diverged")
+      assert(rows(re) == rows(sameCenters(survivors)), s"$fam: probe diverged")
+      // and the stream RESUMES against the rotated epoch: a new wave
+      // appends under the new frozen centers, probing exactly like a
+      // same-centers assignment of the union (the append ≡ rebuild
+      // contract, now on the post-rotation quantizer)
+      StreamingVecIndex.applyBatch(fam, wave, 1L, s2)
+      val after = SimilaritySearch.loadAnnIndex(fam, spark, s2,
+        persist = false)
+      assert(fam.parts(after)._2.count() == 399 + 50)
+      assert(rows(after) == rows(sameCenters(survivors.unionByName(wave))),
+        s"$fam: resumed probe diverged")
+    }
+    rotation(AnnCodec.Float, None)(DenseLeg.Float32(_))
+    rotation(AnnCodec.Int8, Some(e))(DenseLeg.Int8(_))
   }
 
   test("retrainEpochPq keeps the frozen codebook and serves the rotated epoch") {
@@ -207,12 +222,13 @@ class RetrainSpec extends SparkSpec {
     val e = emb.select(col("vec_id"), col("embedding"))
     val boot = SimilaritySearch.buildIvfPqIndex(
       e.filter(col("vec_id") < 200), nlist = 4, persist = false)
-    StreamingVecIndex.freezePq(spark, s1, boot.centers, boot.book)
-    StreamingVecIndex.applyBatchPq(e.filter(col("vec_id") < 200), 0L, s1)
-    StreamingVecIndex.applyBatchPq(
+    StreamingVecIndex.freeze(AnnCodec.Pq, spark, s1, (boot.centers, boot.book))
+    StreamingVecIndex.applyBatch(AnnCodec.Pq, e.filter(col("vec_id") < 200), 0L, s1)
+    StreamingVecIndex.applyBatch(AnnCodec.Pq,
       e.filter(col("vec_id") >= 200 && col("vec_id") < 400), 1L, s1)
-    StreamingVecIndex.retrainEpochPq(spark, s1, s2, e, nlist = 8)
-    val re = StreamingVecIndex.loadPq(spark, s2, persist = false)
+    StreamingVecIndex.retrainEpoch(AnnCodec.Pq, spark, s1, s2, Some(e),
+      nlist = 8)
+    val re = SimilaritySearch.loadAnnIndex(AnnCodec.Pq, spark, s2, persist = false)
     // frozen book travels; coarse geometry re-trains to the fresh build
     assert(re.book.centers.map(_.map(_.toSeq).toSeq).toSeq ==
       boot.book.centers.map(_.map(_.toSeq).toSeq).toSeq)
@@ -236,7 +252,7 @@ class RetrainSpec extends SparkSpec {
 
   test("compressed retrain fails loudly when the corpus is missing a live id") {
     val dir = tmp("missing")
-    SimilaritySearch.saveIvfInt8Index(
+    SimilaritySearch.saveAnnIndex(AnnCodec.Int8,
       SimilaritySearch.buildIvfInt8Index(emb, nlist = 4, persist = false), dir)
     val e = intercept[IllegalArgumentException] {
       SimilaritySearch.retrainIvfInt8(spark, dir,

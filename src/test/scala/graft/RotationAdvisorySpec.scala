@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.SimilaritySearch
+import graft.operators.SimilaritySearch.AnnCodec
 import graft.streaming.StreamingVecIndex
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -50,7 +51,7 @@ class RotationAdvisorySpec extends SparkSpec {
     val streamedRep = StreamingVecIndex.skewReport(spark, dir)
     val fold = java.nio.file.Files
       .createTempDirectory("graft-rot-fold").toString
-    StreamingVecIndex.compactTo(spark, dir, fold)
+    StreamingVecIndex.compactTo(AnnCodec.Float, spark, dir, fold)
     val batchRep = SimilaritySearch.ivfSkewReport(spark, fold)
     assert(streamedRep == batchRep,
       s"streamed report diverged from the fold's: $streamedRep vs $batchRep")

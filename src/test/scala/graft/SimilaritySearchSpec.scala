@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.SimilaritySearch
+import graft.operators.SimilaritySearch.AnnCodec
 import graft.operators.HybridRetrieval.DenseLeg
 import org.apache.spark.sql.functions._
 
@@ -568,9 +569,9 @@ class SimilaritySearchSpec extends SparkSpec {
     val before = SimilaritySearch.ivfProbePq(idx, queries, k = 5, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
     val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-idx").toString
-    SimilaritySearch.saveIvfPqIndex(idx, dir)
+    SimilaritySearch.saveAnnIndex(AnnCodec.Pq, idx, dir)
     idx.unpersist()
-    val loaded = SimilaritySearch.loadIvfPqIndex(spark, dir)
+    val loaded = SimilaritySearch.loadAnnIndex(AnnCodec.Pq, spark, dir)
     assert(loaded.book.m == 8 && loaded.book.dsub == 8)
     // build stamps the corpus size; the artifact round-trips it — the
     // auto probe's dial source, so no corpus count at probe time
@@ -591,9 +592,9 @@ class SimilaritySearchSpec extends SparkSpec {
     val before = SimilaritySearch.ivfProbeInt8(idx, queries, k = 5, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
     val dir = java.nio.file.Files.createTempDirectory("graft-ivfsq8-idx").toString
-    SimilaritySearch.saveIvfInt8Index(idx, dir)
+    SimilaritySearch.saveAnnIndex(AnnCodec.Int8, idx, dir)
     idx.unpersist()
-    val loaded = SimilaritySearch.loadIvfInt8Index(spark, dir)
+    val loaded = SimilaritySearch.loadAnnIndex(AnnCodec.Int8, spark, dir)
     val after = SimilaritySearch.ivfProbeInt8(loaded, queries, k = 5, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
     loaded.unpersist()
@@ -669,9 +670,9 @@ class SimilaritySearchSpec extends SparkSpec {
     val before = DenseLeg.Srp(idx, emb).probe(queries, 5)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
     val dir = java.nio.file.Files.createTempDirectory("graft-srp-idx").toString
-    SimilaritySearch.saveSrpIndex(idx, dir)
+    SimilaritySearch.saveAnnIndex(AnnCodec.Srp, idx, dir)
     idx.unpersist()
-    val loaded = SimilaritySearch.loadSrpIndex(spark, dir)
+    val loaded = SimilaritySearch.loadAnnIndex(AnnCodec.Srp, spark, dir)
     assert((loaded.n, loaded.bits, loaded.seed) == ((idx.n, 128, 7L)),
       "SRP metadata lost across save/load")
     val after = DenseLeg.Srp(loaded, emb).probe(queries, 5)
@@ -808,14 +809,14 @@ class SimilaritySearchSpec extends SparkSpec {
     val int8 = SimilaritySearch.buildIvfInt8Index(emb, nlist = 4)
     val int8Dir = java.nio.file.Files
       .createTempDirectory("graft-ann-del-int8").toString
-    SimilaritySearch.saveIvfInt8Index(int8, int8Dir)
+    SimilaritySearch.saveAnnIndex(AnnCodec.Int8, int8, int8Dir)
     val int8Want = probeRows(SimilaritySearch.ivfProbeInt8(
       SimilaritySearch.IvfInt8Index(int8.centers,
         int8.assigned.filter(!col("neighbor_id").isin(dead: _*))),
       queries, 5, nprobe = 2))
     checkFamily("int8", int8Dir,
       () => SimilaritySearch.ivfProbeInt8(
-        SimilaritySearch.loadIvfInt8Index(spark, int8Dir, persist = false),
+        SimilaritySearch.loadAnnIndex(AnnCodec.Int8, spark, int8Dir, persist = false),
         queries, 5, nprobe = 2),
       int8Want, nSurv, "assigned")
     int8.unpersist()
@@ -825,14 +826,14 @@ class SimilaritySearchSpec extends SparkSpec {
     val pq = SimilaritySearch.buildIvfPqIndex(emb, nlist = 4, m = 8, ksub = 16)
     val pqDir = java.nio.file.Files
       .createTempDirectory("graft-ann-del-pq").toString
-    SimilaritySearch.saveIvfPqIndex(pq, pqDir)
+    SimilaritySearch.saveAnnIndex(AnnCodec.Pq, pq, pqDir)
     val pqWant = probeRows(DenseLeg.PqRefined(
       pq.copy(assigned =
         pq.assigned.filter(!col("neighbor_id").isin(dead: _*)), n = nSurv),
       survivors).probe(queries, 5))
     checkFamily("pq", pqDir,
       () => {
-        val l = SimilaritySearch.loadIvfPqIndex(spark, pqDir, persist = false)
+        val l = SimilaritySearch.loadAnnIndex(AnnCodec.Pq, spark, pqDir, persist = false)
         assert(l.n == nSurv, s"pq: n=${l.n}, want survivors $nSurv")
         // the re-rank corpus a deployment serves is also takedown-filtered
         DenseLeg.PqRefined(l, survivors).probe(queries, 5)
@@ -845,7 +846,7 @@ class SimilaritySearchSpec extends SparkSpec {
     val srp = SimilaritySearch.buildSrpIndex(emb, bits = 128, seed = 7L)
     val srpDir = java.nio.file.Files
       .createTempDirectory("graft-ann-del-srp").toString
-    SimilaritySearch.saveSrpIndex(srp, srpDir)
+    SimilaritySearch.saveAnnIndex(AnnCodec.Srp, srp, srpDir)
     val srpWant = probeRows(SimilaritySearch.hammingTopK(
       SimilaritySearch.srpSketch(survivors, bits = 128, seed = 7L),
       survivors, queries, 5,
@@ -853,7 +854,7 @@ class SimilaritySearchSpec extends SparkSpec {
       bits = 128, seed = 7L))
     checkFamily("srp", srpDir,
       () => {
-        val l = SimilaritySearch.loadSrpIndex(spark, srpDir, persist = false)
+        val l = SimilaritySearch.loadAnnIndex(AnnCodec.Srp, spark, srpDir, persist = false)
         assert(l.n == nSurv, s"srp: n=${l.n}, want survivors $nSurv")
         DenseLeg.Srp(l, survivors).probe(queries, 5)
       },
@@ -879,7 +880,7 @@ class SimilaritySearchSpec extends SparkSpec {
       idCol = "img_id")
     val dir = java.nio.file.Files
       .createTempDirectory("graft-srp-idcol").toString
-    SimilaritySearch.saveSrpIndex(idx, dir)
+    SimilaritySearch.saveAnnIndex(AnnCodec.Srp, idx, dir)
     assert(spark.read.parquet(s"$dir/meta")
       .select(col("id_col")).collect()(0).getString(0) == "img_id")
     // schema evolution: a metadata column lands FIRST in the sketch —
@@ -902,7 +903,7 @@ class SimilaritySearchSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dir/tombstones")
       .schema("vec_id").dataType ==
       org.apache.spark.sql.types.StringType)
-    val loaded = SimilaritySearch.loadSrpIndex(spark, dir, persist = false)
+    val loaded = SimilaritySearch.loadAnnIndex(AnnCodec.Srp, spark, dir, persist = false)
     assert(loaded.idCol == "img_id" && loaded.n == total - 2,
       s"takedown no-opped: n=${loaded.n}, want ${total - 2}")
     SimilaritySearch.compactAnnIndex(spark, dir)
@@ -918,7 +919,7 @@ class SimilaritySearchSpec extends SparkSpec {
     fs.rename(new org.apache.hadoop.fs.Path(root, "meta-legacy"),
       new org.apache.hadoop.fs.Path(root, "meta"))
     val e = intercept[IllegalArgumentException] {
-      SimilaritySearch.loadSrpIndex(spark, dir, persist = false)
+      SimilaritySearch.loadAnnIndex(AnnCodec.Srp, spark, dir, persist = false)
     }
     assert(e.getMessage.contains("cannot infer the id column"))
     idx.unpersist()

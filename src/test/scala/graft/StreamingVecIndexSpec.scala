@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.SimilaritySearch
+import graft.operators.SimilaritySearch.AnnCodec
 import graft.streaming.StreamingVecIndex
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -58,7 +59,7 @@ class StreamingVecIndexSpec extends SparkSpec {
     // compactTo: the batch artifact layout, probe rows unchanged
     val folded = java.nio.file.Files
       .createTempDirectory("graft-svec-fold").toString
-    StreamingVecIndex.compactTo(spark, dir, folded)
+    StreamingVecIndex.compactTo(AnnCodec.Float, spark, dir, folded)
     val compactIdx = SimilaritySearch.loadIvfIndex(spark, folded,
       persist = false)
     assert(probe(compactIdx) == want)
@@ -140,7 +141,7 @@ class StreamingVecIndexSpec extends SparkSpec {
     }
     val folded = java.nio.file.Files
       .createTempDirectory("graft-svec-tombfold").toString
-    StreamingVecIndex.compactTo(spark, dir, folded)
+    StreamingVecIndex.compactTo(AnnCodec.Float, spark, dir, folded)
     assert(probe(SimilaritySearch.loadIvfIndex(spark, folded,
         persist = false)) == probe(sameCentersRebuild(survivors)),
       "compactTo did not fold the tombstones into the copy")
@@ -150,7 +151,7 @@ class StreamingVecIndexSpec extends SparkSpec {
     val (dir, _) = freshDirs("int8")
     StreamingVecIndex.freezeCenters(spark, dir, centers)
     (0 to 3).foreach { b =>
-      StreamingVecIndex.applyBatchInt8(
+      StreamingVecIndex.applyBatch(AnnCodec.Int8,
         emb.filter(pmod(col("vec_id"), lit(4L)) === b), b.toLong, dir)
       StreamingVecIndex.maybeMerge(spark, dir, threshold = 2, b.toLong)
     }
@@ -166,7 +167,7 @@ class StreamingVecIndexSpec extends SparkSpec {
           .join(SimilaritySearch.quantizeInt8(corpus)
             .select(col("vec_id").as("neighbor_id"), col("scale"),
               col("qnorm"), col("qv")), "neighbor_id"))
-    val streamed = StreamingVecIndex.loadInt8(spark, dir, persist = false)
+    val streamed = SimilaritySearch.loadAnnIndex(AnnCodec.Int8, spark, dir, persist = false)
     val want = probe8(int8Rebuild(emb))
     assert(probe8(streamed).nonEmpty && probe8(streamed) == want,
       "int8 streamed index diverged from same-centers quantized rebuild")
@@ -176,13 +177,13 @@ class StreamingVecIndexSpec extends SparkSpec {
     val dead = Seq(7L, 11L)
     SimilaritySearch.deleteFromAnnIndex(spark, dir, dead)
     val survivors = emb.filter(!col("vec_id").isin(dead: _*))
-    assert(probe8(StreamingVecIndex.loadInt8(spark, dir, persist = false)) ==
+    assert(probe8(SimilaritySearch.loadAnnIndex(AnnCodec.Int8, spark, dir, persist = false)) ==
       probe8(int8Rebuild(survivors)))
-    // compactToInt8 folds into the batch IVF-SQ8 artifact, probe-equal
+    // compactTo folds into the batch IVF-SQ8 artifact, probe-equal
     val folded = java.nio.file.Files
       .createTempDirectory("graft-svec-int8fold").toString
-    StreamingVecIndex.compactToInt8(spark, dir, folded)
-    assert(probe8(SimilaritySearch.loadIvfInt8Index(spark, folded,
+    StreamingVecIndex.compactTo(AnnCodec.Int8, spark, dir, folded)
+    assert(probe8(SimilaritySearch.loadAnnIndex(AnnCodec.Int8, spark, folded,
       persist = false)) == probe8(int8Rebuild(survivors)))
   }
 
@@ -190,14 +191,14 @@ class StreamingVecIndexSpec extends SparkSpec {
     val (dir, _) = freshDirs("pq")
     // no frozen codebook: the PQ tier refuses loudly, never trains
     intercept[IllegalArgumentException] {
-      StreamingVecIndex.applyBatchPq(emb.limit(5), 0L, dir)
+      StreamingVecIndex.applyBatch(AnnCodec.Pq, emb.limit(5), 0L, dir)
     }
     // BOTH quantizers frozen from one offline build (the bootstrap)
     val built = SimilaritySearch.buildIvfPqIndex(emb, nlist = 8, m = 8,
       ksub = 16, persist = false)
-    StreamingVecIndex.freezePq(spark, dir, built.centers, built.book)
+    StreamingVecIndex.freeze(AnnCodec.Pq, spark, dir, (built.centers, built.book))
     (0 to 3).foreach { b =>
-      StreamingVecIndex.applyBatchPq(
+      StreamingVecIndex.applyBatch(AnnCodec.Pq,
         emb.filter(pmod(col("vec_id"), lit(4L)) === b), b.toLong, dir)
       StreamingVecIndex.maybeMerge(spark, dir, threshold = 2, b.toLong)
     }
@@ -211,8 +212,8 @@ class StreamingVecIndexSpec extends SparkSpec {
       SimilaritySearch.IvfPqIndex(built.centers, built.book,
         SimilaritySearch.assignAndEncodePq(corpus, built.centers,
           built.book, "vec_id", "embedding"), n = corpus.count())
-    val streamed = StreamingVecIndex.loadPq(spark, dir, persist = false)
-    assert(streamed.n == emb.count(), "loadPq n must count the live rows")
+    val streamed = SimilaritySearch.loadAnnIndex(AnnCodec.Pq, spark, dir, persist = false)
+    assert(streamed.n == emb.count(), "the streamed PQ load must count n from the live rows")
     val want = probePq(pqRebuild(emb), emb)
     assert(want.nonEmpty && probePq(streamed, emb) == want,
       "PQ streamed index diverged from same-codebook rebuild")
@@ -220,24 +221,24 @@ class StreamingVecIndexSpec extends SparkSpec {
       "expected a committed merge fold")
     // replay idempotence holds on the encoded tier (frozen codebook ⇒
     // byte-identical codes on re-delivery)
-    StreamingVecIndex.applyBatchPq(
+    StreamingVecIndex.applyBatch(AnnCodec.Pq,
       emb.filter(pmod(col("vec_id"), lit(4L)) === 3), 3L, dir)
-    assert(StreamingVecIndex.loadPq(spark, dir, persist = false)
+    assert(SimilaritySearch.loadAnnIndex(AnnCodec.Pq, spark, dir, persist = false)
       .assigned.count() == emb.count())
     // takedown on the compressed streamed layout; n tracks survivors
     val dead = Seq(7L, 11L)
     SimilaritySearch.deleteFromAnnIndex(spark, dir, dead)
     val survivors = emb.filter(!col("vec_id").isin(dead: _*))
-    val tombstoned = StreamingVecIndex.loadPq(spark, dir, persist = false)
+    val tombstoned = SimilaritySearch.loadAnnIndex(AnnCodec.Pq, spark, dir, persist = false)
     assert(tombstoned.n == emb.count() - 2)
     assert(probePq(tombstoned, survivors) ==
       probePq(pqRebuild(survivors), survivors))
-    // compactToPq folds into the batch IVF-PQ artifact: probe-equal,
+    // compactTo folds into the batch IVF-PQ artifact: probe-equal,
     // survivor-counted n metadata travels
     val folded = java.nio.file.Files
       .createTempDirectory("graft-svec-pqfold").toString
-    StreamingVecIndex.compactToPq(spark, dir, folded)
-    val loadedFold = SimilaritySearch.loadIvfPqIndex(spark, folded,
+    StreamingVecIndex.compactTo(AnnCodec.Pq, spark, dir, folded)
+    val loadedFold = SimilaritySearch.loadAnnIndex(AnnCodec.Pq, spark, folded,
       persist = false)
     assert(loadedFold.n == emb.count() - 2)
     assert(probePq(loadedFold, survivors) ==
@@ -248,11 +249,12 @@ class StreamingVecIndexSpec extends SparkSpec {
     val (dir, _) = freshDirs("srp")
     // no frozen hyperplane family: the SRP tier refuses loudly
     intercept[IllegalArgumentException] {
-      StreamingVecIndex.applyBatchSrp(emb.limit(5), 0L, dir)
+      StreamingVecIndex.applyBatch(AnnCodec.Srp, emb.limit(5), 0L, dir)
     }
-    StreamingVecIndex.freezeSrp(spark, dir, bits = 128, seed = 7L)
+    StreamingVecIndex.freeze(AnnCodec.Srp, spark, dir,
+      SimilaritySearch.SrpPlanes(bits = 128, seed = 7L))
     (0 to 3).foreach { b =>
-      StreamingVecIndex.applyBatchSrp(
+      StreamingVecIndex.applyBatch(AnnCodec.Srp,
         emb.filter(pmod(col("vec_id"), lit(4L)) === b), b.toLong, dir)
       StreamingVecIndex.maybeMerge(spark, dir, threshold = 2, b.toLong)
     }
@@ -266,7 +268,7 @@ class StreamingVecIndexSpec extends SparkSpec {
     def srpRebuild(corpus: org.apache.spark.sql.DataFrame) =
       SimilaritySearch.buildSrpIndex(corpus, bits = 128, seed = 7L,
         persist = false)
-    val streamed = StreamingVecIndex.loadSrp(spark, dir, persist = false)
+    val streamed = SimilaritySearch.loadAnnIndex(AnnCodec.Srp, spark, dir, persist = false)
     assert(streamed.n == emb.count() && streamed.idCol == "vec_id")
     val want = probeS(srpRebuild(emb), emb)
     assert(want.nonEmpty && probeS(streamed, emb) == want,
@@ -274,9 +276,9 @@ class StreamingVecIndexSpec extends SparkSpec {
     assert(StreamingVecIndex.liveSegments(spark, dir).exists(_ < 0),
       "expected a committed merge fold on the sketch relation")
     // replay idempotence (frozen family ⇒ byte-identical signatures)
-    StreamingVecIndex.applyBatchSrp(
+    StreamingVecIndex.applyBatch(AnnCodec.Srp,
       emb.filter(pmod(col("vec_id"), lit(4L)) === 3), 3L, dir)
-    assert(StreamingVecIndex.loadSrp(spark, dir, persist = false)
+    assert(SimilaritySearch.loadAnnIndex(AnnCodec.Srp, spark, dir, persist = false)
       .sketched.count() == emb.count())
     // takedown on the streamed sketch; n tracks survivors; the batch
     // in-place compact refuses the streamed sketch layout
@@ -286,16 +288,16 @@ class StreamingVecIndexSpec extends SparkSpec {
       SimilaritySearch.compactAnnIndex(spark, dir)
     }
     val survivors = emb.filter(!col("vec_id").isin(dead: _*))
-    val tombstoned = StreamingVecIndex.loadSrp(spark, dir, persist = false)
+    val tombstoned = SimilaritySearch.loadAnnIndex(AnnCodec.Srp, spark, dir, persist = false)
     assert(tombstoned.n == emb.count() - 2)
     assert(probeS(tombstoned, survivors) ==
       probeS(srpRebuild(survivors), survivors))
-    // compactToSrp folds into the batch artifact: probe-equal, metadata
+    // compactTo folds into the batch SRP artifact: probe-equal, metadata
     // (survivor n, bits, seed, id_col) travels
     val folded = java.nio.file.Files
       .createTempDirectory("graft-svec-srpfold").toString
-    StreamingVecIndex.compactToSrp(spark, dir, folded)
-    val loadedFold = SimilaritySearch.loadSrpIndex(spark, folded,
+    StreamingVecIndex.compactTo(AnnCodec.Srp, spark, dir, folded)
+    val loadedFold = SimilaritySearch.loadAnnIndex(AnnCodec.Srp, spark, folded,
       persist = false)
     assert(loadedFold.n == emb.count() - 2 && loadedFold.idCol == "vec_id")
     assert(probeS(loadedFold, survivors) ==

@@ -141,6 +141,7 @@ object Bench {
     val json =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"n_failed":$nFailed,"queries":${qjson(headline)},"elided_faster_queries":${results.size - headline.size},"builds":$buildsJson,"full":"target/bench.json","sf":"$sfDir"}"""
     println(json)
+    SessionMemo.releaseAll(spark)
     spark.stop()
   }
 }

@@ -2307,6 +2307,7 @@ object ScaleBench {
     java.nio.file.Files.write(java.nio.file.Paths.get("target/scalebench.json"),
       json.getBytes("UTF-8"))
     scratchDirs.foreach(deleteRecursively)
+    SessionMemo.releaseAll(spark)
     spark.stop()
   }
 }

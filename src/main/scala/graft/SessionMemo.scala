@@ -51,6 +51,17 @@ object SessionMemo {
     winner.value.asInstanceOf[T]
   }
 
+  /** Release (session, key)'s entry now through its release hook, if
+    * built; the next read builds it again. */
+  def release(session: SparkSession, key: String): Unit =
+    entries.remove((session, key)).foreach(_.releaseIfBuilt())
+
+  /** Release every entry of `session` — what a harness calls before it
+    * stops the session, since eviction otherwise waits for a later
+    * access that may never come. */
+  def releaseAll(session: SparkSession): Unit =
+    entries.keys.foreach { case (s, key) => if (s eq session) release(s, key) }
+
   private def evictStopped(): Unit =
     entries.keys.foreach { case k @ (session, _) =>
       if (session.sparkContext.isStopped)

@@ -89,6 +89,7 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${jq(k)}: ${jq(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    SessionMemo.releaseAll(spark)
     spark.stop()
   }
 }

@@ -7,9 +7,10 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
 /** Cross-engine-exact LINEAR PROBE: ridge regression of a ±1 label on the
   * quantized embeddings, solved by a fixed number of conjugate-gradient
   * rounds on the exact normal equations — the standard "how separable are
-  * these representations" probe ([[MlOps.logregCvAccuracy]]'s production
-  * MLlib path stays rows-only; this is its replayable twin, the
-  * [[PowerIter]] recipe extended from eigen-solve to OPTIMIZATION).
+  * these representations" probe ([[MlOps.logregCvAccuracy]]'s float
+  * LBFGS fit, MLlib's objective and optimizer, stays rows-only; this is
+  * its replayable twin, the [[PowerIter]] recipe extended from
+  * eigen-solve to OPTIMIZATION).
   *
   * Why CG and not logistic GD: every CG operation is a matvec, a dot, a
   * divide, or an axpy — integer-exact gram entries, DECIMAL-boundary sums,
@@ -50,7 +51,7 @@ object LinearProbe {
     // explode is folded by the map-side partial agg (shuffle = partitions
     // × d² rows, never n·d²), but the per-task d²-group hash table and
     // O(n·d²) local work bound the exact path to narrow embeddings; the
-    // reference's d=2048 belongs on the float MLlib probe this twins.
+    // reference's d=2048 belongs on the float LBFGS probe this twins.
     require(dim <= 256,
       s"exact gram is bounded to dim <= 256 (got $dim); use MlOps.logregCvAccuracy for wide embeddings")
     val spark = lf.sparkSession

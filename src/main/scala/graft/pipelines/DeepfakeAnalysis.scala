@@ -57,7 +57,7 @@ object DeepfakeAnalysis {
     * other groups shape the projection), preserving intra-group structure.
     * The distinct group relation (small dimension) is the only collect; each
     * group then runs its own bounded Reduce2d, with the reference's
-    * post-sample n≥3 guard (:113-115).
+    * post-sample n≥3 guard (:113-115), the groups' fits overlapping.
     *
     * Output coords: (group, id, x, y).
     */
@@ -73,13 +73,15 @@ object DeepfakeAnalysis {
       .filter(least(col("__n"), lit(samplePerGroup.toLong)) >= 3)
       .orderBy(col("g"))
       .collect().map(_.getString(0))
-    val perGroup = groups.map { gname =>
+    // the per-group fits are independent, so they overlap (graft.Par);
+    // joined in group order, the union is the same relation
+    val perGroup = groups.map { gname => graft.Par.fork {
       val rows = emb.filter(col(groupCol).cast("string") === gname)
       Reduce2d(rows, vecCol, idCol, groupCol,
           method = method, maxPerGroup = samplePerGroup, seed = seed)
         .select(lit(gname).as("group"), col("id").cast("long").as("id"),
           col("x"), col("y"))
-    }
+    }}.map(graft.Par.join)
     val coords = perGroup.reduceOption(_.unionAll(_)).getOrElse {
       import org.apache.spark.sql.types._
       spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
@@ -99,7 +101,8 @@ object DeepfakeAnalysis {
     * an L6 deterministic hash-order sample of the combinations. The chosen
     * pair list (≤ numPairs rows) is the only thing collected; each pair's
     * reduction runs as its own bounded Reduce2d job, with the reference's
-    * n≥3 guard (analyze_embedding_with_tsne.py:269-271).
+    * n≥3 guard (analyze_embedding_with_tsne.py:269-271); the pairs' fits
+    * overlap.
     *
     * Output coords: (pair, id, label, x, y) — `pair` is "g1|g2".
     */
@@ -138,7 +141,9 @@ object DeepfakeAnalysis {
       case other => throw new IllegalArgumentException(s"unknown strategy: $other")
     }
 
-    val perPair = chosen.flatMap { case (g1, g2) =>
+    // per-pair guards and fits are independent: overlapped like
+    // separateMaps' per-group fits, joined in pair order
+    val perPair = chosen.map { case (g1, g2) => graft.Par.fork {
       val pairRows = emb.filter(col(groupCol).cast("string").isin(g1, g2))
       // reference guard: skip pairs with < 3 sampled points in total.
       // Σ_g min(count_g, cap) is exactly the post-cap sample size, computed
@@ -155,7 +160,7 @@ object DeepfakeAnalysis {
           col("id").cast("long").as("id"), col("label").cast("string").as("label"),
           col("x"), col("y")))
       }
-    }
+    }}.flatMap(graft.Par.join)
 
     val coords = perPair.reduceOption(_.unionAll(_)).getOrElse {
       import org.apache.spark.sql.types._
@@ -175,13 +180,15 @@ object DeepfakeAnalysis {
       separabilityB: Double)
 
   /** Both inputs: (groupCol, idCol, vecCol) with ids comparable across
-    * spaces (the reference joins on image stem, J2).
+    * spaces (the reference joins on image stem, J2). `alignedCounts` and
+    * `ckaPerGroup` come back as local relations (one row per group), so
+    * reading them starts no job.
     *
     * `lrMaxIter` bounds the LBFGS iterations of each separability fit; on
-    * weakly-separable data the solver otherwise runs to the cap, and each
-    * iteration is a Spark job — 100 iterations × folds × two spaces is
-    * ~9 s of pure job latency per CV at bench scale vs ~2 s at 30, for an
-    * identical chance-level score. The score is a bounded-sample statistic
+    * weakly-separable data the solver otherwise runs to the cap. Both
+    * spaces' cvFolds fits run together ([[MlOps.logregCvAccuracies]]):
+    * one Spark job per evaluation round for all of them, so the step costs
+    * about lrMaxIter + 4 jobs. The score is a bounded-sample statistic
     * either way (never corpus-scale).
     */
   def compareSpaces(
@@ -203,30 +210,27 @@ object DeepfakeAnalysis {
       .drop("__rn")
       .cache()
 
-    val counts = aligned.groupBy(col(groupCol)).agg(count(lit(1)).as("n"))
-      .orderBy(col(groupCol))
+    // collected while `aligned` is cached: a lazy result would re-run the
+    // join and the window on every read after the unpersist below
+    def local(df: DataFrame): DataFrame =
+      df.sparkSession.createDataFrame(
+        java.util.Arrays.asList(df.collect(): _*), df.schema)
+    try {
+      val counts = local(aligned.groupBy(col(groupCol)).agg(count(lit(1)).as("n"))
+        .orderBy(col(groupCol)))
 
-    // A5: cross-space CKA per group (how similarly do the two spaces
-    // arrange the same images?)
-    val cka = aligned.groupBy(col(groupCol))
-      .agg(VecAgg.cka(col("__va"), col("__vb")).as("cka"))
-      .orderBy(col(groupCol))
+      // A5: cross-space CKA per group (how similarly do the two spaces
+      // arrange the same images?)
+      val cka = local(aligned.groupBy(col(groupCol))
+        .agg(VecAgg.cka(col("__va"), col("__vb")).as("cka"))
+        .orderBy(col(groupCol)))
 
-    // M7+M8: group separability in each space. The two fits are
-    // independent iterative estimators over the same cached sample
-    // (already materialized by the StringIndexer fit above), and each is
-    // wall-clocked by per-iteration job latency, not compute — so they
-    // run CONCURRENTLY (guide §2.6, the cvAccuracy fold-overlap argument
-    // one level up). Scores are unchanged: each fit is deterministic
-    // over its own columns.
-    val indexed = MlOps.indexLabels(aligned, groupCol, "label_idx")
-    val fAccA = graft.Par.fork(
-      MlOps.logregCvAccuracy(indexed, "__va", "label_idx", idCol,
-        cvFolds, maxIter = lrMaxIter))
-    val accB = MlOps.logregCvAccuracy(indexed, "__vb", "label_idx", idCol,
-      cvFolds, maxIter = lrMaxIter)
-    val accA = graft.Par.join(fAccA)
-    aligned.unpersist()
-    SpaceComparison(counts, cka, accA, accB)
+      // M7+M8: group separability in each space; the fitter indexes the
+      // group names alphabetically (M7, [[MlOps.indexLabels]]' order)
+      val Seq(accA, accB) = MlOps.logregCvAccuracies(
+        aligned.withColumn("__g", col(groupCol).cast("string")),
+        Seq("__va", "__vb"), "__g", idCol, cvFolds, lrMaxIter)
+      SpaceComparison(counts, cka, accA, accB)
+    } finally aligned.unpersist()
   }
 }

@@ -13,23 +13,52 @@ import scala.collection.concurrent.TrieMap
   * consumer lists.
   */
 final class Artifact[T] private (val name: String,
-    val needs: Seq[Artifact[_]], build: (SparkSession, String) => T,
-    release: T => Unit) {
+    val needs: Seq[Artifact[_]], open: (SparkSession, String) => (T, () => Unit)) {
 
   /** The artifact over corpus dir `d`, built on the first read in `s`;
-    * `release` runs when the entry is evicted after `s` stops. */
+    * its release runs when the entry is evicted after `s` stops, or at
+    * [[release]]. */
   def apply(s: SparkSession, d: String): T = {
     Artifact.noteRead(this)
     graft.SessionMemo.getOrElseUpdate(s, s"$name:$d")(
-      Artifact.building(this)(build(s, d)))(release)
+      Artifact.building(this)(open(s, d)))(_._2())._1
   }
+
+  /** Release the artifact over `d` in `s` now, if built; a later read
+    * builds it again. */
+  private[graft] def release(s: SparkSession, d: String): Unit =
+    graft.SessionMemo.release(s, s"$name:$d")
 }
 
 object Artifact {
 
   def apply[T](name: String, needs: Seq[Artifact[_]] = Nil)(
       build: (SparkSession, String) => T)(release: T => Unit): Artifact[T] =
-    new Artifact(name, needs, build, release)
+    new Artifact[T](name, needs, { (s, d) =>
+      val v = build(s, d)
+      (v, () => release(v))
+    })
+
+  /** An artifact whose build writes a persisted layout into a fresh
+    * temp directory named `prefix…`, passed to `build` as its third
+    * argument. The artifact owns the directory: it is deleted after
+    * `release` runs, and when the build fails. */
+  def scratch[T](name: String, prefix: String, needs: Seq[Artifact[_]] = Nil)(
+      build: (SparkSession, String, String) => T)(release: T => Unit): Artifact[T] =
+    new Artifact[T](name, needs, { (s, d) =>
+      val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+      val v = try build(s, d, dir) catch { case e: Throwable => sweepScratch(s, dir); throw e }
+      (v, () => try release(v) finally sweepScratch(s, dir))
+    })
+
+  /** Best-effort recursive delete of a scratch directory: a failed
+    * delete must never fail the query or release that asked for it. */
+  private[queries] def sweepScratch(s: SparkSession, dir: String): Unit =
+    try {
+      val (fs, root) = graft.operators.InvertedIndex.fsFor(s, dir)
+      fs.delete(root, true)
+      ()
+    } catch { case scala.util.control.NonFatal(_) => () }
 
   // ---- the undeclared-read guard: a read is charged to its DIRECT
   //      reader — the innermost build running on this thread, else the

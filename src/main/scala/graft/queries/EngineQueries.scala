@@ -2155,9 +2155,7 @@ object EngineQueries extends QueryPack {
   //      verbatim) must hash-match the stream-built index — proving
   //      ingest, merge fold, AND load in one gate ----
   lazy val streamVecIndex: Artifact[SimilaritySearch.IvfIndex] =
-    Artifact("vec_index_stream") { (s, d) =>
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-svec-gate").toString
+    Artifact.scratch("vec_index_stream", "graft-svec-gate") { (s, d, dir) =>
       val embQ = quantizedEmb(s, d)
       val centers = embQ.filter(col("vec_id") < 8).orderBy(col("vec_id"))
         .collect()
@@ -2200,9 +2198,7 @@ object EngineQueries extends QueryPack {
   //      changing the refine dial, codes damaged in the merge fold)
   //      breaks the hash. ----
   lazy val streamPqIndex: Artifact[SimilaritySearch.IvfPqIndex] =
-    Artifact("pq_index_stream", Seq(ivfPqIndex)) { (s, d) =>
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-svec-pq-gate").toString
+    Artifact.scratch("pq_index_stream", "graft-svec-pq-gate", Seq(ivfPqIndex)) { (s, d, dir) =>
       val built = ivfPqIndex(s, d)
       graft.streaming.StreamingVecIndex.freeze(AnnCodec.Pq, s, dir,
         (built.centers, built.book))
@@ -2226,9 +2222,7 @@ object EngineQueries extends QueryPack {
   //      sketch — sketching is row-local and deterministic, so
   //      streamed ≡ built, stated as constants ----
   lazy val streamSrpIndex: Artifact[SimilaritySearch.SrpIndex] =
-    Artifact("srp_index_stream") { (s, d) =>
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-svec-srp-gate").toString
+    Artifact.scratch("srp_index_stream", "graft-svec-srp-gate") { (s, d, dir) =>
       graft.streaming.StreamingVecIndex.freeze(AnnCodec.Srp, s, dir,
         SimilaritySearch.SrpPlanes()) // 128 bits, seed 42
       val emb = Tables.embeddings(s, d)
@@ -2483,9 +2477,7 @@ object EngineQueries extends QueryPack {
     * (saveAnnIndex → loadAnnIndex, AnnCodec.Pq) — centers, codebook,
     * codes, and the n metadata the auto refine dial resolves from. */
   lazy val ivfPqIndexArtifact: Artifact[SimilaritySearch.IvfPqIndex] =
-    Artifact("ivf_pq_index_artifact", Seq(ivfPqIndex)) { (s, d) =>
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-ivfpqidx").toString
+    Artifact.scratch("ivf_pq_index_artifact", "graft-ivfpqidx", Seq(ivfPqIndex)) { (s, d, dir) =>
       SimilaritySearch.saveAnnIndex(AnnCodec.Pq, ivfPqIndex(s, d), dir)
       val idx = SimilaritySearch.loadAnnIndex(AnnCodec.Pq, s, dir)
       idx.assigned.count() // materialize once — probes time the join
@@ -2554,7 +2546,7 @@ object EngineQueries extends QueryPack {
         import s.implicits._
         Seq((mismatches(want, tombstoned), mismatches(want, compacted)))
           .toDF("n_mismatch_tombstoned", "n_mismatch_compacted")
-      } finally sweepScratch(s, dir)
+      } finally Artifact.sweepScratch(s, dir)
     },
     Some("""SELECT CAST(0 AS BIGINT) AS n_mismatch_tombstoned,
       CAST(0 AS BIGINT) AS n_mismatch_compacted"""),
@@ -2562,17 +2554,9 @@ object EngineQueries extends QueryPack {
 
   // The self-priced lifecycle gates build a FRESH artifact directory per
   // serve (memoizing a verb that mutates its artifact would be a
-  // mutation hazard) — this sweeps the directory once every comparison
-  // is collected, so the per-serve freshness doesn't leak /tmp space
-  // across repeated bench/verify runs (ADVICE r17). Best-effort: a
-  // failed delete must never fail the gate itself.
-  private def sweepScratch(s: org.apache.spark.sql.SparkSession,
-      dir: String): Unit =
-    try {
-      val (fs, root) = graft.operators.InvertedIndex.fsFor(s, dir)
-      fs.delete(root, true)
-      ()
-    } catch { case scala.util.control.NonFatal(_) => () }
+  // mutation hazard) and sweep it (Artifact.sweepScratch) once every
+  // comparison is collected, so the per-serve freshness doesn't leak
+  // /tmp space across repeated bench/verify runs (ADVICE r17).
 
   // Retrain-lifecycle parity (r17 — the drift repair, the last unowned
   // stage of the artifact lifecycle): build on a 75% slice, append the
@@ -2638,7 +2622,7 @@ object EngineQueries extends QueryPack {
       // result, or its own failure, is discarded on this path — then
       // sweep the fresh-per-serve directory
       scala.util.Try(graft.Par.join(fFresh))
-      sweepScratch(s, dir)
+      Artifact.sweepScratch(s, dir)
     }
   }
 
@@ -2713,7 +2697,7 @@ object EngineQueries extends QueryPack {
       val want = graft.Par.join(fWant)
       val bounded =
         r1.rowsRewritten < r1.totalRows && r2.rowsRewritten < r2.totalRows
-      sweepScratch(s, dir)
+      Artifact.sweepScratch(s, dir)
       import s.implicits._
       Seq((
         (got.size - got.intersect(want).size).toLong +
@@ -2793,8 +2777,8 @@ object EngineQueries extends QueryPack {
           b: Seq[(Long, Int, Long, Double)]): Long =
         (a.size - a.intersect(b).size).toLong +
           (b.size - a.intersect(b).size)
-      sweepScratch(s, src) // all probes collected; see annRetrainParity
-      sweepScratch(s, out)
+      Artifact.sweepScratch(s, src) // all probes collected; see annRetrainParity
+      Artifact.sweepScratch(s, out)
       import s.implicits._
       Seq((centerMismatch, mm(got, want), mm(after, ref)))
         .toDF("n_center_mismatch", "n_probe_mismatch", "n_resume_mismatch")
@@ -2851,9 +2835,7 @@ object EngineQueries extends QueryPack {
         Tables.embeddings(s, d).count(), bits = 128, seed = 42L))(
       _ => ()) // the underlying sketch is owned (and unpersisted) by srpSketch
   lazy val srpIndexArtifact: Artifact[SimilaritySearch.SrpIndex] =
-    Artifact("srp_index_artifact", Seq(srpIndexDirect)) { (s, d) =>
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-srpidx").toString
+    Artifact.scratch("srp_index_artifact", "graft-srpidx", Seq(srpIndexDirect)) { (s, d, dir) =>
       SimilaritySearch.saveAnnIndex(AnnCodec.Srp, srpIndexDirect(s, d), dir)
       val idx = SimilaritySearch.loadAnnIndex(AnnCodec.Srp, s, dir)
       idx.sketched.count() // materialize once — probes time the scan

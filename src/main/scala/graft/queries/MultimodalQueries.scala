@@ -466,9 +466,7 @@ object MultimodalQueries extends QueryPack {
   //      replays from the parquet twin. Proves the connector end-to-end:
   //      file planning, streaming parse, and the exact float round-trip ----
   lazy val embJsonDump: Artifact[String] =
-    Artifact("embjson_dump") { (s, d) =>
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-embjson-dump").toString
+    Artifact.scratch("embjson_dump", "graft-embjson-dump") { (s, d, dir) =>
       val rows = graft.Tables.embeddings(s, d)
         .select(col("label"), col("vec_id"), col("embedding"))
         .collect() // the bounded vector corpus (2k rows at sf0.1)

@@ -595,9 +595,7 @@ object TextQueries extends QueryPack {
   }
 
   lazy val lexIndex: Artifact[graft.operators.InvertedIndex.LexIndex] =
-    Artifact("lex_index") { (s, d) =>
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-lexidx").toString
+    Artifact.scratch("lex_index", "graft-lexidx") { (s, d, dir) =>
       graft.operators.InvertedIndex.save(
         graft.operators.InvertedIndex.build(Tables.documents(s, d)), dir)
       residentLex(graft.operators.InvertedIndex.load(s, dir))
@@ -882,9 +880,7 @@ object TextQueries extends QueryPack {
   //      t_bm25_topk's SQL VERBATIM: incremental arrival must not move
   //      a single score vs the from-scratch build ----
   lazy val streamLexIndex: Artifact[graft.operators.InvertedIndex.LexIndex] =
-    Artifact("lex_index_stream") { (s, d) =>
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-lexidx-stream").toString
+    Artifact.scratch("lex_index_stream", "graft-lexidx-stream") { (s, d, dir) =>
       val docs = Tables.documents(s, d)
       (0L to 2L).foreach { b =>
         graft.streaming.StreamingLexIndex.applyBatch(
@@ -915,9 +911,7 @@ object TextQueries extends QueryPack {
   //      segment). Oracle = the t_bm25_topk SQL over ONLY the survivors
   //      (doc_id % 101 <> 0): terms re-picked from the ADJUSTED dfs ----
   lazy val streamLexTombIndex: Artifact[graft.operators.InvertedIndex.LexIndex] =
-    Artifact("lex_index_stream_tomb") { (s, d) =>
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-lexidx-stream-tomb").toString
+    Artifact.scratch("lex_index_stream_tomb", "graft-lexidx-stream-tomb") { (s, d, dir) =>
       val docs = Tables.documents(s, d)
       // two segments, no in-gate merge: this gate's claim is "tombstones
       // apply at load over a MULTI-SEGMENT streamed layout" — merge
@@ -1205,9 +1199,7 @@ object TextQueries extends QueryPack {
   //      INDEPENDENT formulation (token adjacency self-join, not a slot
   //      replay); exact integer counts → FULL oracle ----
   lazy val phraseIndex: Artifact[graft.operators.InvertedIndex.LexIndex] =
-    Artifact("lex_index_pos") { (s, d) =>
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-lexidx-pos").toString
+    Artifact.scratch("lex_index_pos", "graft-lexidx-pos") { (s, d, dir) =>
       graft.operators.InvertedIndex.save(
         graft.operators.InvertedIndex.build(Tables.documents(s, d),
           withPositions = true), dir)
@@ -1643,9 +1635,7 @@ object TextQueries extends QueryPack {
   //      from scratch over the surviving documents: every df/n/avgdl/tf/dl
   //      the deletions touch must adjust EXACTLY for the hash to match ----
   lazy val tombLexIndex: Artifact[graft.operators.InvertedIndex.LexIndex] =
-    Artifact("lex_index_tomb") { (s, d) =>
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-lexidx-tomb").toString
+    Artifact.scratch("lex_index_tomb", "graft-lexidx-tomb") { (s, d, dir) =>
       val docs = Tables.documents(s, d)
       graft.operators.InvertedIndex.save(
         graft.operators.InvertedIndex.build(docs), dir)
@@ -3827,9 +3817,7 @@ object TextQueries extends QueryPack {
   /** Build-once PERSISTED chunk-granularity inverted index (save→load,
     * the artifact path — persisting must not change a score). */
   lazy val ragIndex: Artifact[graft.operators.InvertedIndex.LexIndex] =
-    Artifact("rag_index", Seq(ragChunks)) { (s, d) =>
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-ragidx").toString
+    Artifact.scratch("rag_index", "graft-ragidx", Seq(ragChunks)) { (s, d, dir) =>
       graft.operators.InvertedIndex.save(
         graft.operators.InvertedIndex.build(ragChunks(s, d),
           idCol = "cid", textCol = "chunk_text"), dir)
@@ -4140,13 +4128,11 @@ object TextQueries extends QueryPack {
     * match the ANN family's vector type.
     */
   lazy val ragIvf: Artifact[graft.operators.SimilaritySearch.IvfIndex] =
-    Artifact("rag_ivf_artifact", Seq(ragEmb)) { (s, d) =>
+    Artifact.scratch("rag_ivf_artifact", "graft-ragivf", Seq(ragEmb)) { (s, d, dir) =>
       val embF = ragEmb(s, d).select(col("cid"),
         col("embedding").cast("array<float>").as("embedding"))
       val centers = embF.orderBy(col("cid")).limit(8).collect()
         .map(_.getSeq[Float](1).map(_.toDouble).toArray)
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-ragivf").toString
       graft.operators.SimilaritySearch.saveIvfIndex(
         graft.operators.SimilaritySearch.IvfIndex(centers,
           graft.operators.SimilaritySearch.assignToCells(
@@ -4786,9 +4772,8 @@ object TextQueries extends QueryPack {
   //      and the violation accounting. Oracle replays from the parquet
   //      sample + the planted constants ----
   lazy val jsonlDump: Artifact[String] =
-    Artifact("jsonl_dump") { (s, d) =>
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-jsonl").toString + "/docs"
+    Artifact.scratch("jsonl_dump", "graft-jsonl") { (s, d, root) =>
+      val dir = root + "/docs"
       Tables.documents(s, d).filter(col("doc_id") % 13 === 0)
         .select(col("doc_id"), col("source"), col("text"))
         .write.mode("overwrite").json(dir)

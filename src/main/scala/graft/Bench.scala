@@ -5,13 +5,8 @@ object Bench {
 
   /** The artifacts `queries` declare in `needs`, closed over the
     * artifacts' own `needs`: each once, every one after all it reads. */
-  def builds(queries: Seq[OracleQuery]): Seq[Artifact[_]] = {
-    val order = scala.collection.mutable.LinkedHashSet.empty[Artifact[_]]
-    def visit(a: Artifact[_]): Unit =
-      if (!order.contains(a)) { a.needs.foreach(visit); order += a }
-    queries.foreach(_.needs.foreach(visit))
-    order.toSeq
-  }
+  def builds(queries: Seq[OracleQuery]): Seq[Artifact[_]] =
+    Artifact.closure(queries.flatMap(_.needs))
 
   private def fmt(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))

@@ -23,11 +23,17 @@ final class JobCounter(sc: SparkContext) extends SparkListener {
     else { started.incrementAndGet(); () }
 
   /** Jobs started so far, sentinels excluded, read once every job started
-    * before this call has been delivered. */
+    * before this call has been delivered. The caller's job description
+    * survives the call; a sentinel that never arrives (the counter was
+    * removed, or the listener bus is stuck) fails loudly instead of
+    * returning a short count. */
   def settle(): Long = {
+    val caller = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(Sentinel)
-    try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-    sentinels.tryAcquire(60, java.util.concurrent.TimeUnit.SECONDS)
+    try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(caller)
+    if (!sentinels.tryAcquire(60, java.util.concurrent.TimeUnit.SECONDS))
+      throw new IllegalStateException(
+        "job counter saw no sentinel job within 60 s: the count would be short")
     started.get
   }
 }

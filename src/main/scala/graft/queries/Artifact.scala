@@ -32,6 +32,16 @@ final class Artifact[T] private (val name: String,
 
 object Artifact {
 
+  /** `roots` closed over the artifacts' own `needs`: each once, every one
+    * after all it reads — the build order both harnesses derive. */
+  def closure(roots: Seq[Artifact[_]]): Seq[Artifact[_]] = {
+    val order = scala.collection.mutable.LinkedHashSet.empty[Artifact[_]]
+    def visit(a: Artifact[_]): Unit =
+      if (!order.contains(a)) { a.needs.foreach(visit); order += a }
+    roots.foreach(visit)
+    order.toSeq
+  }
+
   def apply[T](name: String, needs: Seq[Artifact[_]] = Nil)(
       build: (SparkSession, String) => T)(release: T => Unit): Artifact[T] =
     new Artifact[T](name, needs, { (s, d) =>
@@ -53,7 +63,7 @@ object Artifact {
 
   /** Best-effort recursive delete of a scratch directory: a failed
     * delete must never fail the query or release that asked for it. */
-  private[queries] def sweepScratch(s: SparkSession, dir: String): Unit =
+  private[graft] def sweepScratch(s: SparkSession, dir: String): Unit =
     try {
       val (fs, root) = graft.operators.InvertedIndex.fsFor(s, dir)
       fs.delete(root, true)

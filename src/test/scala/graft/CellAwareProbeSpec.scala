@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.SimilaritySearch
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** The cell-aware filtered probe (r18, verdict item 4): the volume
@@ -40,35 +39,6 @@ class CellAwareProbeSpec extends SparkSpec {
 
   private def rows(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
-
-  // Spark jobs started while `f` runs. Listener events arrive in order,
-  // so a sentinel job before and after `f` brackets exactly its jobs.
-  private def jobsDuring(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val sentinel = "graft-spec-job-sentinel"
-    val started = new java.util.concurrent.atomic.AtomicInteger()
-    val sentinels = new java.util.concurrent.Semaphore(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties)
-            .exists(_.getProperty("spark.job.description") == sentinel))
-          sentinels.release()
-        else started.incrementAndGet()
-    }
-    def flush(): Unit = {
-      sc.setJobDescription(sentinel)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      assert(sentinels.tryAcquire(60, java.util.concurrent.TimeUnit.SECONDS),
-        "listener never saw the sentinel job")
-    }
-    sc.addSparkListener(listener)
-    try {
-      flush(); started.set(0)
-      f
-      flush()
-      started.get()
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("clustered tenant: the volume dial under-returns where the cell-aware probe is exact") {
     val allowed = tenant.select(col("vec_id"))

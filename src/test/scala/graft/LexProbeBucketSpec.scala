@@ -14,12 +14,6 @@ class LexProbeBucketSpec extends SparkSpec {
 
   private lazy val idx = TextQueries.lexIndex(spark, sf01)
 
-  private def jobsDuring(f: => Unit): Long = {
-    val jobs = new JobCounter(spark.sparkContext)
-    try { val before = jobs.settle(); f; jobs.settle() - before }
-    finally spark.sparkContext.removeSparkListener(jobs)
-  }
-
   test("the driver bucket equals the Column bucket for every vocabulary term and hostile terms") {
     val vocab = idx.termDf.select(col("term")).as[String].collect().toSeq
     assert(vocab.nonEmpty)

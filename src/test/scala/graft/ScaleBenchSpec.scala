@@ -66,6 +66,30 @@ class ScaleBenchSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dir/documents.parquet").count() == 4 * base)
   }
 
+  test("generate is deterministic: two sf0.001 x2 generations hash equal, table by table") {
+    // exponents and recall from different runs compare only if the
+    // corpus they ran on is the same: sorted rows, not file layout
+    def gen(): String = {
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft-scalegen-det").toString
+      ScaleBench.generate(spark, sf001, dir, factor = 2)
+      dir
+    }
+    val dirs = Seq(gen(), gen())
+    try {
+      Seq("documents", "embeddings", "customer", "lineitem", "events").foreach { t =>
+        val Seq(a, b) = dirs.map { dir =>
+          val rows = spark.read.parquet(s"$dir/$t.parquet").collect()
+            .map(_.toString).sorted
+          val digest = java.security.MessageDigest.getInstance("SHA-256")
+            .digest(rows.mkString("\n").getBytes("UTF-8"))
+          (rows.length, digest.map(x => f"$x%02x").mkString)
+        }
+        assert(a._1 > 0 && a == b, s"$t differs between two generations: $a vs $b")
+      }
+    } finally dirs.foreach(graft.queries.Artifact.sweepScratch(spark, _))
+  }
+
   test("documents: 4x rows, zero cross-replica exact duplicates, marginals preserved") {
     val base = spark.read.parquet(s"$sf001/documents.parquet")
     val gen = spark.read.parquet(s"$out/documents.parquet")

@@ -12,6 +12,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   val sf001 = "/root/testdata/sf0.001"
   val sf01 = "/root/testdata/sf0.01"
   val sf1 = "/root/testdata/sf0.1"
+
+  /** The Spark jobs started while `f` runs, counted by [[JobCounter]]. */
+  protected def jobsDuring(f: => Unit): Long = {
+    val jobs = new JobCounter(spark.sparkContext)
+    try { val before = jobs.settle(); f; jobs.settle() - before }
+    finally spark.sparkContext.removeSparkListener(jobs)
+  }
 }
 
 object SparkSpec {
@@ -27,6 +34,12 @@ object SparkSpec {
       .withExtensions(new graft.expressions.GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // release the memoized artifacts, and with them every Artifact.scratch
+    // directory, when the test JVM exits. Hadoop runs higher priorities
+    // first: at 50 this runs before Spark's own hook (40) stops the
+    // context, where a plain JVM hook would race it
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+      () => SessionMemo.releaseAll(s), 50)
     s
   }
 }

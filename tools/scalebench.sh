@@ -15,5 +15,5 @@ done
 exec java $ADD_OPENS \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx${SPARK_DRIVER_MEM:-32g} \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "target/scala-2.13/classes:src/main/resources:/opt/spark/jars/*" \
   graft.ScaleBench "$@"
